@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * `minValues`/`maxValues`/`nullCount`) back to logical.
   *
   * Division of labor here:
-  *  - the CLIENT remaps `partitionValues` keys and stats JSON keys to
-  *    logical right after parsing a `/query` response
+  *  - the CLIENT remaps `partitionValues` keys and parsed stats keys
+  *    to logical right after parsing a `/query` response
   *    ([[remapFiles]]), so the whole scan/pruning/stats stack stays
   *    logical-only;
   *  - the SCAN renames the schemas it hands Spark's parquet reader to
@@ -79,19 +79,22 @@ object ColumnMapping {
     table.fields.map(f => physicalName(f) -> f.name).toMap
 
   /** Remap a `/query` response's physical-keyed side channels
-    * (partitionValues keys, stats JSON minValues/maxValues/nullCount
+    * (partitionValues keys, parsed stats minValues/maxValues/nullCount
     * keys) to logical names. No-op when column mapping is off. */
   def remapFiles(meta: TableMetadata, files: Seq[FileAction]): Seq[FileAction] =
     if (mode(meta).isEmpty) files
     else {
       val table = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
       val p2l = physicalToLogical(table)
+      def logical[V](m: Map[String, V]): Map[String, V] =
+        m.map { case (k, v) => p2l.getOrElse(k, k) -> v }
       files.map { f =>
         f.copy(
-          partitionValues = f.partitionValues.map { case (k, v) =>
-            p2l.getOrElse(k, k) -> v
-          },
-          stats = f.stats.map(remapStats(_, p2l)))
+          partitionValues = logical(f.partitionValues),
+          stats = f.stats.map(st => st.copy(
+            minValues = logical(st.minValues),
+            maxValues = logical(st.maxValues),
+            nullCount = logical(st.nullCount))))
       }
     }
 
@@ -107,27 +110,4 @@ object ColumnMapping {
         val p2l = physicalToLogical(table)
         meta.partitionColumns.map(c => p2l.getOrElse(c, c))
     }
-
-  private def remapStats(stats: String, p2l: Map[String, String]): String =
-    try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = mapper.readTree(stats)
-      node match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode =>
-          Seq("minValues", "maxValues", "nullCount").foreach { section =>
-            if (o.hasNonNull(section) && o.get(section).isObject) {
-              val src = o.get(section)
-                .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-              val dst = mapper.createObjectNode()
-              src.properties().forEach { e =>
-                dst.set[com.fasterxml.jackson.databind.JsonNode](
-                  p2l.getOrElse(e.getKey, e.getKey), e.getValue)
-              }
-              o.set[com.fasterxml.jackson.databind.JsonNode](section, dst)
-            }
-          }
-          mapper.writeValueAsString(o)
-        case _ => stats
-      }
-    } catch { case _: Exception => stats }
 }

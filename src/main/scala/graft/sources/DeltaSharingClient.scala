@@ -288,18 +288,9 @@ class DeltaSharingClient(
         if (f.hasNonNull("deltaSingleAction"))
           f.get("deltaSingleAction").get("add")
         else f
-      FileAction(
-        url = (if (src.hasNonNull("path")) src.get("path")
-               else src.get("url")).asText(),
-        id = optText(f, "id").getOrElse(""),
-        partitionValues =
-          if (src.hasNonNull("partitionValues"))
-            src.get("partitionValues").properties().asScala
-              .map(e => e.getKey ->
-                (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-          else Map.empty,
-        size = if (src.hasNonNull("size")) src.get("size").asLong() else 0L,
-        stats = optText(src, "stats"),
+      val (url, id, partitionValues, size) = fileFields(f, src)
+      FileAction(url, id, partitionValues, size,
+        stats = optText(src, "stats").flatMap(FileStats.parse),
         version =
           if (f.hasNonNull("version")) Some(f.get("version").asLong())
           else None,
@@ -331,6 +322,22 @@ class DeltaSharingClient(
     // entire pruning/stats/scan stack above stays logical-only
     TableFiles(meta, ColumnMapping.remapFiles(meta, files))
   }
+
+  /** The fields every file-bearing action shares, `/query` and
+    * `/changes` alike: (url, id, partitionValues, size). `outer` is the
+    * envelope carrying the id; `src` the action itself (the same node
+    * in the parquet responseformat), whose URL is `path` in the delta
+    * responseformat and `url` in the parquet one. */
+  private def fileFields(outer: JsonNode, src: JsonNode)
+    : (String, String, Map[String, String], Long) = (
+    (if (src.hasNonNull("path")) src.get("path") else src.get("url")).asText(),
+    optText(outer, "id").getOrElse(""),
+    if (src.hasNonNull("partitionValues"))
+      src.get("partitionValues").properties().asScala
+        .map(e => e.getKey ->
+          (if (e.getValue.isNull) null else e.getValue.asText())).toMap
+    else Map.empty,
+    if (src.hasNonNull("size")) src.get("size").asLong() else 0L)
 
   /** Parse a `deletionVector` descriptor off an add/file node. */
   private def parseDv(src: JsonNode): Option[DeletionVectors.Descriptor] =
@@ -430,18 +437,8 @@ class DeltaSharingClient(
     guardDeletionVectors(meta, shaped.map(_._3),
       s"changes of $share.$schema.$table")
     val actions = shaped.map { case (changeType, outer, src) =>
-      ChangeAction(
-        changeType = changeType,
-        url = (if (src.hasNonNull("path")) src.get("path")
-               else src.get("url")).asText(),
-        id = optText(outer, "id").getOrElse(""),
-        partitionValues =
-          if (src.hasNonNull("partitionValues"))
-            src.get("partitionValues").properties().asScala
-              .map(e => e.getKey ->
-                (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-          else Map.empty,
-        size = if (src.hasNonNull("size")) src.get("size").asLong() else 0L,
+      val (url, id, partitionValues, size) = fileFields(outer, src)
+      ChangeAction(changeType, url, id, partitionValues, size,
         version =
           if (outer.hasNonNull("version")) outer.get("version").asLong()
           else throw new DeltaSharingException(0,
@@ -449,7 +446,6 @@ class DeltaSharingClient(
         timestamp =
           if (outer.hasNonNull("timestamp")) outer.get("timestamp").asLong()
           else 0L,
-        stats = optText(src, "stats"),
         expirationTimestamp = optText(outer, "expirationTimestamp"))
     }
     TableChanges(meta, actions)

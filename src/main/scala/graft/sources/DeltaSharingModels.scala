@@ -45,7 +45,9 @@ final case class FileAction(
     id: String,
     partitionValues: Map[String, String],
     size: Long,
-    stats: Option[String],
+    /** Per-file stats, parsed once by the client; None when the server
+      * sent none or sent an unparsable document. */
+    stats: Option[FileStats.Stats],
     version: Option[Long],
     timestamp: Option[Long],
     expirationTimestamp: Option[String],
@@ -74,7 +76,6 @@ final case class ChangeAction(
     size: Long,
     version: Long,
     timestamp: Long,
-    stats: Option[String],
     expirationTimestamp: Option[String])
 
 /** Result of GET `…/tables/{t}/changes`. */

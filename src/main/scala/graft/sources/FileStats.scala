@@ -4,10 +4,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** Per-file Delta statistics (`stats` on a FileAction:
-  * `{"numRecords":N,"minValues":{..},"maxValues":{..},"nullCount":{..}}`)
-  * and the conservative filter evaluator that skips files a pushed
-  * data filter provably cannot match.
+/** Per-file Delta statistics (the `stats` string of a file action:
+  * `{"numRecords":N,"minValues":{..},"maxValues":{..},"nullCount":{..}}`,
+  * parsed once by the client into `FileAction.stats`) and the
+  * conservative filter evaluator that skips files a pushed data filter
+  * provably cannot match.
   *
   * This is the client-side half of data skipping the reference never
   * attempts (it forwards predicates to the server as ADVISORY hints

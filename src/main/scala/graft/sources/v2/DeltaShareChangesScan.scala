@@ -99,17 +99,8 @@ class DeltaShareChangesScan(
       (CommitVersionCol -> a.version.toString) +
       (CommitTimestampCol ->
         java.time.Instant.ofEpochMilli(a.timestamp).toString)
-    val presigned =
-      a.url.startsWith("http://") || a.url.startsWith("https://")
-    val fid = PresignedUrlCache.fileId(a.id, a.url)
-    DeltaShareInputPartition(
-      path =
-        if (presigned) PresignedUrlFileSystem.encode(fid, a.size) else a.url,
-      size = a.size,
-      partitionValues = constants,
-      fileId = if (presigned) fid else "",
-      url = if (presigned) a.url else "",
-      isCdf = isCdf)
+    DeltaShareInputPartition.forFile(a.url, a.id, a.size, constants)
+      .copy(isCdf = isCdf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

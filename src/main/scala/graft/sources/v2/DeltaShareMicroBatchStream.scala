@@ -109,16 +109,8 @@ class DeltaShareMicroBatchStream(
       .actions
     actions.flatMap {
       case a if a.changeType == "add" =>
-        val presigned =
-          a.url.startsWith("http://") || a.url.startsWith("https://")
-        val fid = PresignedUrlCache.fileId(a.id, a.url)
-        Some(DeltaShareInputPartition(
-          path = if (presigned) PresignedUrlFileSystem.encode(fid, a.size)
-                 else a.url,
-          size = a.size,
-          partitionValues = a.partitionValues,
-          fileId = if (presigned) fid else "",
-          url = if (presigned) a.url else ""))
+        Some(DeltaShareInputPartition.forFile(a.url, a.id, a.size,
+          a.partitionValues))
       case a if a.changeType == "remove" && ignoreDeletes => None
       case a =>
         throw new DeltaSharingException(0,

@@ -66,21 +66,64 @@ class DeltaShareScanBuilder(
   private var partitionFilters: Array[Filter] = Array.empty
   private var dataFilters: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
-  /** Outer None = aggregate pushdown not yet probed; Some(None) = a
-    * probe ran and REFUSED (cached — the probe issues a plan-time
-    * `/query` POST, and Spark re-probes via pushAggregation after a
-    * supportCompletePushDown refusal, which must not pay a second
-    * round trip). [[aggProbedKey]] records WHICH aggregation the cache
-    * answers: Spark currently probes one aggregation per builder, but
-    * if a different one ever arrives the plan is recomputed instead of
-    * serving rows computed for the earlier shape. */
-  private var aggResult: Option[Option[(StructType, Seq[InternalRow])]] = None
-  private var aggProbedKey: String = ""
+  /** The stats-only answer of the last aggregation Spark pushed, when
+    * it could be answered; [[build]] serves it instead of a scan. */
+  private var aggResult: Option[(StructType, Seq[InternalRow])] = None
 
-  private def aggKey(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): String =
-    agg.groupByExpressions.map(_.describe()).mkString(",") + "|" +
-      agg.aggregateExpressions.map(_.describe()).mkString(",")
+  // ---- the file listing ---------------------------------------------
+  //
+  // One `/query` POST serves every consumer of the file list: the
+  // offset and aggregate pushdowns that need it at plan time and the
+  // scan [[build]] returns. Responses are memoized per request for
+  // the life of this builder only, so the next query lists afresh; a
+  // different `limitHint` is simply a different request. Failures are
+  // not memoized: a pushdown that refuses on a failed listing leaves
+  // the scan to list again and surface the error.
+  private val listings =
+    scala.collection.mutable.Map.empty[ListingRequest, Seq[FileAction]]
+
+  private def listing(req: ListingRequest): Seq[FileAction] =
+    listings.getOrElseUpdate(req, {
+      val resp = new DeltaSharingClient(addr.profile)
+        .queryTable(addr.share, addr.schema, addr.table,
+          jsonPredicateHints = req.jsonHints,
+          predicateHints = req.legacyHints,
+          limitHint = req.limitHint, version = addr.versionAsOf,
+          timestamp = addr.timestampAsOf)
+      // Time travel: the plan's schema came from head-version metadata;
+      // if the requested version's metaData line disagrees, reading its
+      // files (or answering from their stats) with the newer schema
+      // would silently mis-decode — fail loudly instead (schema
+      // evolution across shared versions is out of scope, as in the
+      // reference).
+      if ((addr.versionAsOf.isDefined || addr.timestampAsOf.isDefined) &&
+          resp.metadata.schemaString.nonEmpty &&
+          meta.schemaString.nonEmpty &&
+          resp.metadata.schemaString != meta.schemaString)
+        throw new DeltaSharingException(0,
+          s"table ${addr.share}.${addr.schema}.${addr.table} at " +
+            addr.versionAsOf.map(v => s"version $v")
+              .getOrElse(s"timestamp ${addr.timestampAsOf.get}") +
+            " has a different schema than the " +
+            "current version; reading across schema changes is not supported")
+      resp.files
+    })
+
+  /** The `/query` request for the pushdown state so far: JSON hints
+    * from every pushed filter, legacy SQL-string hints (older servers
+    * prune on these only) from the partition filters, and the
+    * protocol `limitHint` — with a pushed offset the server must keep
+    * enough rows for the skip AND the limit above it. */
+  private def request: ListingRequest = ListingRequest(
+    PredicateHints.buildHints((partitionFilters ++ dataFilters).toSeq,
+      StructType(dataSchema.fields ++ partitionSchema.fields))._1,
+    PredicateHints.legacyHints(partitionFilters.toSeq, partitionSchema),
+    limit.map(l => l.toLong + offset.getOrElse(0).toLong))
+
+  /** The listed files that survive the pushed partition filters. */
+  private def listedFiles: Seq[FileAction] =
+    DeltaShareScan.prunePartitions(listing(request), partitionFilters.toSeq,
+      partitionSchema)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (pf, df) = filters.partition(
@@ -127,53 +170,30 @@ class DeltaShareScanBuilder(
   //  - every surviving file carries stats.numRecords, so whole-file
   //    skip counts are exact (DV cardinalities subtract exactly; the
   //    boundary file's partial skip runs AFTER the reader's DV
-  //    anti-filter, so it drops surviving rows). Probed with one
-  //    plan-time /query POST — the aggregate path's precedent.
+  //    anti-filter, so it drops surviving rows). Checked on the
+  //    builder's listing, which the scan then reads as well.
   // A limit pushed AFTER the offset composes: the scan skips first,
   // Spark re-applies the limit above (limitHint covers offset+limit).
   private var offset: Option[Int] = None
-
-  /** The offset probe's raw `/query` response, kept so the scan can
-    * REUSE it instead of issuing a second POST: the probe runs with
-    * exactly the hints the scan itself would send (offset acceptance
-    * requires no data filters, and no limit is pushed at probe time,
-    * so no `limitHint` either) — one server round-trip per
-    * offset-bearing plan instead of two. A limit pushed after the
-    * offset invalidates the reuse (the scan then wants
-    * `limitHint = limit + offset`) and the scan re-queries. */
-  private var offsetProbe: Option[TableFiles] = None
 
   override def pushOffset(n: Int): Boolean = {
     if (n <= 0) return false
     if (dataFilters.nonEmpty || topN.isDefined || limit.isDefined ||
         !partitionFilters.forall(PartitionValues.isExact(_, partitionSchema)))
       return false
-    val hints = PredicateHints.buildHints(partitionFilters.toSeq,
-      StructType(dataSchema.fields ++ partitionSchema.fields))._1
-    val legacy = PredicateHints.legacyHints(partitionFilters.toSeq,
-      partitionSchema)
-    val resp =
-      try {
-        new DeltaSharingClient(addr.profile)
-          .queryTable(addr.share, addr.schema, addr.table,
-            jsonPredicateHints = hints, predicateHints = legacy,
-            version = addr.versionAsOf,
-            timestamp = addr.timestampAsOf)
-      } catch {
+    val files =
+      try listedFiles
+      catch {
         case e: Exception =>
           // refusing is CORRECT (Spark keeps the Offset operator) but
           // must be observable: a flaky server silently degrading
           // every offset plan is otherwise undiagnosable
           DeltaShareScanBuilder.log.warn(
             s"offset pushdown refused for ${addr.share}.${addr.schema}" +
-              s".${addr.table}: plan-time /query probe failed", e)
+              s".${addr.table}: plan-time /query listing failed", e)
           return false
       }
-    val files = resp.files
-      .filter(f => partitionFilters.forall(
-        PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
-    if (!files.forall(_.stats.flatMap(FileStats.parse)
-        .exists(_.numRecords.isDefined))) {
+    if (!files.forall(_.stats.exists(_.numRecords.isDefined))) {
       DeltaShareScanBuilder.log.info(
         s"offset pushdown refused for ${addr.share}.${addr.schema}" +
           s".${addr.table}: a surviving file carries no numRecords " +
@@ -181,7 +201,6 @@ class DeltaShareScanBuilder(
       return false
     }
     offset = Some(n)
-    offsetProbe = Some(resp)
     true
   }
 
@@ -249,12 +268,8 @@ class DeltaShareScanBuilder(
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    val key = aggKey(agg)
-    if (aggResult.isEmpty || aggProbedKey != key) {
-      aggProbedKey = key
-      aggResult = Some(planAggregation(agg))
-    }
-    aggResult.get.isDefined
+    aggResult = planAggregation(agg)
+    aggResult.isDefined
   }
 
   /** Partial aggregate pushdown is refused — this source answers
@@ -307,33 +322,18 @@ class DeltaShareScanBuilder(
         .getOrElse(return None)
       case _ => return None
     }
-    // one /query POST, exact client-side partition pruning — the same
-    // file set a row-reading scan of this query would read
-    val hints = PredicateHints.buildHints(partitionFilters.toSeq,
-      StructType(dataSchema.fields ++ partitionSchema.fields))._1
-    val legacy = PredicateHints.legacyHints(partitionFilters.toSeq,
-      partitionSchema)
-    val files =
-      try {
-        new DeltaSharingClient(addr.profile)
-          .queryTable(addr.share, addr.schema, addr.table,
-            jsonPredicateHints = hints, predicateHints = legacy,
-            version = addr.versionAsOf,
-            timestamp = addr.timestampAsOf).files
-          .filter(f => partitionFilters.forall(
-            PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
-      } catch { case _: Exception => return None }
+    // the same file set a row-reading scan of this query would read
+    // (a refusal hands the scan this very listing)
+    val files = try listedFiles catch { case _: Exception => return None }
     // a DV-bearing file's stats count DELETED rows too (numRecords,
     // and potentially extrema sitting on deleted rows) — stats-only
     // answers would be wrong, so refuse and fall back to reading rows
     // (where the reader applies the DV anti-filter)
     if (files.exists(_.deletionVector.isDefined)) return None
-    val withStats = files.map(f => f -> f.stats.flatMap(FileStats.parse))
-    if (!withStats.forall(_._2.exists(_.numRecords.isDefined))) return None
+    if (!files.forall(_.stats.exists(_.numRecords.isDefined))) return None
     // a zero-record file contributes no rows, hence no group
-    val live = withStats.collect {
-      case (f, Some(st)) if st.numRecords.get > 0 => (f, st)
-    }
+    val live =
+      files.flatMap(f => f.stats.filter(_.numRecords.get > 0).map(f -> _))
     val groupSchema = StructType(groupFields)
     def aggValues(stats: Seq[FileStats.Stats]): Option[Seq[Any]] =
       Some(specs.map {
@@ -428,14 +428,14 @@ class DeltaShareScanBuilder(
     }
   }
 
-  override def build(): Scan = aggResult.flatten match {
+  override def build(): Scan = aggResult match {
     case Some((schema, rows)) =>
       new DeltaShareAggScan(addr, schema, rows)
     case None => new DeltaShareScan(
       spark, addr, meta, dataSchema, partitionSchema, requiredSchema,
       partitionFilters, dataFilters, limit, hadoopConf,
       streamStartingVersion, streamIgnoreDeletes,
-      streamMaxVersionsPerTrigger, topN, offset, offsetProbe)
+      streamMaxVersionsPerTrigger, topN, offset, request, listing)
   }
 }
 
@@ -443,6 +443,13 @@ object DeltaShareScanBuilder {
   private[v2] val log =
     org.slf4j.LoggerFactory.getLogger(classOf[DeltaShareScanBuilder])
 }
+
+/** One `/query` request as the builder's listing keys it: the JSON
+  * and legacy predicate hints and the protocol `limitHint`. */
+final case class ListingRequest(
+    jsonHints: Option[String],
+    legacyHints: Seq[String],
+    limitHint: Option[Long])
 
 /** A pushed top-N: the first sort key's field, direction, null
   * placement, and the row count — everything the stats-based file
@@ -487,12 +494,11 @@ private[graft] object TopNFilePrune {
     case class Info(nr: Option[Long], nulls: Option[Long],
         mn: Option[Long], mx: Option[Long], dvc: Long)
     val infos = files.map { f =>
-      val st = f.stats.flatMap(FileStats.parse)
       Info(
-        nr = st.flatMap(_.numRecords),
-        nulls = st.flatMap(_.nullCount.get(spec.field.name)),
-        mn = st.flatMap(_.minValues.get(spec.field.name)).flatMap(longOf),
-        mx = st.flatMap(_.maxValues.get(spec.field.name)).flatMap(longOf),
+        nr = f.stats.flatMap(_.numRecords),
+        nulls = f.stats.flatMap(_.nullCount.get(spec.field.name)),
+        mn = f.stats.flatMap(_.minValues.get(spec.field.name)).flatMap(longOf),
+        mx = f.stats.flatMap(_.maxValues.get(spec.field.name)).flatMap(longOf),
         dvc = f.deletionVector.map(_.cardinality).getOrElse(0L))
     }
     // (worst value for the sort, surviving non-null rows) per file
@@ -553,9 +559,10 @@ final class DeltaShareAggScan(
 
 /** Batch scan: one `InputPartition` per shared file — Spark
   * parallelizes what the reference streams serially
-  * (`duck_delta_share_extension.cpp:569-575`). The `/query` POST
-  * happens once on the driver at planning time; executors then pull
-  * presigned URLs directly. */
+  * (`duck_delta_share_extension.cpp:569-575`). The file list is the
+  * builder's listing for `request` (one `/query` POST on the driver at
+  * planning time, shared with the builder's pushdowns); executors
+  * then pull presigned URLs directly. */
 class DeltaShareScan(
     spark: SparkSession,
     addr: TableAddress,
@@ -570,9 +577,10 @@ class DeltaShareScan(
     streamStartingVersion: Option[Long] = None,
     streamIgnoreDeletes: Boolean = false,
     streamMaxVersionsPerTrigger: Option[Long] = None,
-    topN: Option[TopNSpec] = None,
-    offset: Option[Int] = None,
-    probedQuery: Option[TableFiles] = None) extends Scan with Batch
+    topN: Option[TopNSpec],
+    offset: Option[Int],
+    request: ListingRequest,
+    listing: ListingRequest => Seq[FileAction]) extends Scan with Batch
   with SupportsReportStatistics with SupportsRuntimeFiltering {
 
   private val partitionColNames = partitionSchema.fieldNames.toSet
@@ -612,69 +620,18 @@ class DeltaShareScan(
         s"${if (t.asc) "ASC" else "DESC"} n=${t.n}").getOrElse("") +
       offset.map(o => s", pushedOffset=$o").getOrElse("") + "]"
 
-  private lazy val jsonHints: Option[String] = PredicateHints.buildHints(
-    (partitionFilters ++ dataFilters).toSeq,
-    StructType(dataSchema.fields ++ partitionSchema.fields))._1
-
-  /** Legacy SQL-string `predicateHints` — older servers prune on these
-    * only (the reference always sends the field,
-    * `delta_sharing_client.cpp:381-384`). */
-  private lazy val legacyHints: Seq[String] = PredicateHints.legacyHints(
-    partitionFilters.toSeq, partitionSchema)
-
-  /** The protocol `limitHint`: with a pushed offset the server must
-    * keep enough rows for the skip AND the limit above it. */
-  private def limitHint: Option[Long] =
-    limit.map(l => l.toLong + offset.getOrElse(0).toLong)
-
   /** Everything an executor needs to re-issue this scan's `/query`
     * when a presigned URL expires mid-task. */
   private def refreshSpec = PresignedUrlCache.RefreshSpec(
     addr.profile, addr.share, addr.schema, addr.table,
-    jsonHints, legacyHints, limitHint, addr.versionAsOf,
-    timestamp = addr.timestampAsOf)
+    request.jsonHints, request.legacyHints, request.limitHint,
+    addr.versionAsOf, timestamp = addr.timestampAsOf)
 
-  /** One `/query` POST per scan, memoized — statistics estimation and
-    * partition planning share it. An offset-bearing plan does not
-    * even pay that one: the pushOffset probe's response is handed
-    * through ([[DeltaShareScanBuilder.pushOffset]] sends identical
-    * hints) unless a limit was pushed after the offset, in which case
-    * the scan re-queries to get `limitHint = limit + offset` file
-    * trimming. */
-  private lazy val queriedFiles: Seq[graft.sources.FileAction] = {
-    val resp = probedQuery.filter(_ => limit.isEmpty).getOrElse {
-      val client = new DeltaSharingClient(addr.profile)
-      client.queryTable(addr.share, addr.schema, addr.table,
-        jsonPredicateHints = jsonHints, predicateHints = legacyHints,
-        limitHint = limitHint, version = addr.versionAsOf,
-        timestamp = addr.timestampAsOf)
-    }
-    // Time travel: the plan's schema came from head-version metadata;
-    // if the requested version's metaData line disagrees, reading its
-    // files with the newer schema would silently mis-decode — fail
-    // loudly instead (schema evolution across shared versions is out
-    // of scope, as in the reference).
-    if ((addr.versionAsOf.isDefined || addr.timestampAsOf.isDefined) &&
-        resp.metadata.schemaString.nonEmpty &&
-        meta.schemaString.nonEmpty &&
-        resp.metadata.schemaString != meta.schemaString)
-      throw new DeltaSharingException(0,
-        s"table ${addr.share}.${addr.schema}.${addr.table} at " +
-          addr.versionAsOf.map(v => s"version $v")
-            .getOrElse(s"timestamp ${addr.timestampAsOf.get}") +
-          " has a different schema than the " +
-          "current version; reading across schema changes is not supported")
-    resp.files
-  }
-
-  /** Exact client-side partition pruning (static + runtime filters) —
-    * hints are advisory per the Delta Sharing spec, so never trust the
-    * server's file list alone. */
-  private def prunedFiles: Seq[graft.sources.FileAction] =
-    queriedFiles.filter { f =>
-      (partitionFilters ++ runtimeFilters).forall(
-        PartitionValues.evalFilter(_, f.partitionValues, partitionSchema))
-    }
+  /** Client-side partition pruning of the listing by the static and
+    * runtime (DPP) partition filters. */
+  private def prunedFiles: Seq[FileAction] =
+    DeltaShareScan.prunePartitions(listing(request),
+      (partitionFilters ++ runtimeFilters).toSeq, partitionSchema)
 
   /** Data-skipping on per-file min/max/nullCount stats: drop files a
     * pushed data filter provably cannot match ([[FileStats.canSkip]]
@@ -686,7 +643,7 @@ class DeltaShareScan(
   private def statsPrunedFiles: Seq[graft.sources.FileAction] =
     if (dataFilters.isEmpty) prunedFiles
     else prunedFiles.filter { f =>
-      f.stats.flatMap(FileStats.parse) match {
+      f.stats match {
         case Some(st) =>
           !dataFilters.exists(FileStats.canSkip(_, st, dataSchema))
         case None => true
@@ -729,7 +686,7 @@ class DeltaShareScan(
       // stats.numRecords counts PHYSICAL rows incl. DV-deleted ones;
       // subtract the descriptor's cardinality so join-size planning
       // (broadcast decisions) sees the surviving row count
-      val counts = files.map(f => f.stats.flatMap(parseNumRecords)
+      val counts = files.map(f => f.stats.flatMap(_.numRecords)
         .map(n => math.max(0L,
           n - f.deletionVector.map(_.cardinality).getOrElse(0L))))
       if (counts.nonEmpty && counts.forall(_.isDefined))
@@ -738,46 +695,29 @@ class DeltaShareScan(
     }
   }
 
-  private def parseNumRecords(stats: String): Option[Long] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(stats)
-      if (node.hasNonNull("numRecords")) Some(node.get("numRecords").asLong())
-      else None
-    } catch { case _: Exception => None }
-
   override def planInputPartitions(): Array[InputPartition] = {
-    def mk(f: graft.sources.FileAction, rowSkip: Long): DeltaShareInputPartition = {
-      val presigned =
-        f.url.startsWith("http://") || f.url.startsWith("https://")
-      val path =
-        if (presigned)
-          PresignedUrlFileSystem.encode(PresignedUrlCache.fileId(f), f.size)
-        else f.url
-      DeltaShareInputPartition(path, f.size, f.partitionValues,
-        fileId = if (presigned) PresignedUrlCache.fileId(f) else "",
-        url = if (presigned) f.url else "",
-        dv = f.deletionVector,
-        rowSkip = rowSkip)
-    }
+    def mk(f: FileAction, rowSkip: Long): DeltaShareInputPartition =
+      DeltaShareInputPartition.forFile(f.url, f.id, f.size, f.partitionValues)
+        .copy(dv = f.deletionVector, rowSkip = rowSkip)
     offset match {
       case None => topNPrunedFiles.map(mk(_, 0L)).toArray
       case Some(off) =>
         // exact prefix skip in listed order: files wholly inside the
         // offset are never planned (never open); the boundary file's
         // reader drops its leading SURVIVING rows (after the DV
-        // anti-filter). pushOffset proved every file carries
-        // numRecords at plan time — if the server's answer changed in
-        // between, refuse loudly rather than skip inexactly.
+        // anti-filter). pushOffset proved every listed file carries
+        // numRecords; a limit pushed after the offset lists again
+        // (limitHint = limit + offset), and if that answer lacks them,
+        // refuse loudly rather than skip inexactly.
         var remaining = off.toLong
         topNPrunedFiles.flatMap { f =>
           if (remaining == 0L) Some(mk(f, 0L))
           else {
-            val nr = f.stats.flatMap(FileStats.parse)
-              .flatMap(_.numRecords).getOrElse(
-                throw new DeltaSharingException(0,
-                  s"offset pushdown was accepted but file ${f.url} no " +
-                    "longer carries numRecords stats — cannot skip " +
-                    "exactly, refusing to serve wrong rows"))
+            val nr = f.stats.flatMap(_.numRecords).getOrElse(
+              throw new DeltaSharingException(0,
+                s"offset pushdown was accepted but file ${f.url} no " +
+                  "longer carries numRecords stats — cannot skip " +
+                  "exactly, refusing to serve wrong rows"))
             val surv = math.max(0L,
               nr - f.deletionVector.map(_.cardinality).getOrElse(0L))
             if (surv <= remaining) { remaining -= surv; None }
@@ -830,6 +770,15 @@ class DeltaShareScan(
   }
 }
 
+object DeltaShareScan {
+  /** Exact client-side partition pruning — hints are advisory per the
+    * Delta Sharing spec, so never trust the server's file list alone. */
+  private[v2] def prunePartitions(files: Seq[FileAction],
+      filters: Seq[Filter], partitionSchema: StructType): Seq[FileAction] =
+    files.filter(f => filters.forall(
+      PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
+}
+
 final case class DeltaShareInputPartition(
     path: String,
     size: Long,
@@ -847,6 +796,22 @@ final case class DeltaShareInputPartition(
       * rows (applied after the DV anti-filter); 0 everywhere else. */
     rowSkip: Long = 0L)
   extends InputPartition
+
+object DeltaShareInputPartition {
+  /** The partition reading one shared file. A presigned HTTP(S) URL is
+    * read through a `graftds` path carrying only an opaque file id
+    * (presigned URLs must not leak into paths or the UI; the reader
+    * registers id → URL executor-side); any other URL is read as is. */
+  def forFile(url: String, id: String, size: Long,
+      partitionValues: Map[String, String]): DeltaShareInputPartition =
+    if (url.startsWith("http://") || url.startsWith("https://")) {
+      val fid = PresignedUrlCache.fileId(id, url)
+      DeltaShareInputPartition(PresignedUrlFileSystem.encode(fid, size),
+        size, partitionValues, fileId = fid, url = url)
+    } else
+      DeltaShareInputPartition(url, size, partitionValues, fileId = "",
+        url = "")
+}
 
 final case class DeltaSharePartitionReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],

@@ -70,12 +70,14 @@ class ColumnMappingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("p"), Map("delta.columnMapping.mode" -> "name"),
       3L, DeltaProtocol(2))
     val f = FileAction("u", "i", Map("col-ppp" -> "x"), 1L,
-      Some("""{"numRecords":5,"minValues":{"col-aaa":1},"maxValues":{"col-aaa":9},"nullCount":{"col-aaa":0}}"""),
+      FileStats.parse("""{"numRecords":5,"minValues":{"col-aaa":1},"maxValues":{"col-aaa":9},"nullCount":{"col-aaa":0}}"""),
       None, None, None, None)
     val out = ColumnMapping.remapFiles(meta, Seq(f)).head
     assert(out.partitionValues == Map("p" -> "x"))
-    val st = FileStats.parse(out.stats.get).get
+    val st = out.stats.get
     assert(st.minValues.contains("k") && st.maxValues.contains("k"))
+    assert(st.minValues("k").asLong == 1L && st.maxValues("k").asLong == 9L)
+    assert(st.nullCount == Map("k" -> 0L) && st.numRecords.contains(5L))
     assert(ColumnMapping.logicalPartitionColumns(meta) == Seq("p"))
     // a writer that stored physical names in partitionColumns maps too
     assert(ColumnMapping.logicalPartitionColumns(

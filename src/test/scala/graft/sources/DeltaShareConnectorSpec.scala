@@ -345,6 +345,11 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("endpoint", st.endpoint).option("bearerToken", "tok")
       .load(s"share1.schema1.$table")
 
+  /** `/query` POSTs the server has logged so far. */
+  private def queryPosts(st: StubSharingServer): Int =
+    st.requestLog.count { case (m, path, _) =>
+      m == "POST" && path.endsWith("/query") }
+
   test("min/max stats skip files a data filter cannot match") {
     val (st, total, mid, loCount) = statsFixture()
     try {
@@ -468,6 +473,15 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val both = df.offset(loCount.toInt).limit(5).select("o_orderkey")
       assert(both.count() == 5)
       assert(both.collect().map(_.getLong(0)).forall(_ >= mid))
+      // an accepted offset plan lists the table once: the pushdown's
+      // numRecords check and the scan read the same /query response
+      val posts0 = queryPosts(st)
+      val once = df.offset(3).select("o_orderkey")
+      assert(once.queryExecution.executedPlan.toString
+        .contains("pushedOffset=3"))
+      assert(once.collect().length == total - 3)
+      assert(queryPosts(st) - posts0 == 1,
+        "an offset plan must issue exactly one /query POST")
     } finally st.stop()
   }
 
@@ -553,15 +567,52 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the main fixture's lineitem files carry NO stats → COUNT must
     // read rows (BatchScan) and still be exact
     val df = read()
+    val posts0 = queryPosts(server)
     val agg = df.agg(count(lit(1)).as("n"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(!plan.contains("LocalTableScan"),
       "pushdown must refuse when any file lacks numRecords")
     assert(agg.collect()(0).getLong(0) == expectedCount)
+    // the refused pushdown and the row read share one listing
+    assert(queryPosts(server) - posts0 == 1,
+      "a refused COUNT and its row read must issue exactly one /query POST")
     // unsupported shapes (SUM, grouped) also fall back and stay exact
     val grouped = readFrom(server, "lineitem")
       .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
     assert(grouped.collect().map(_.getLong(1)).sum == expectedCount)
+  }
+
+  test("time travel: stats-only COUNT, offset and row read all refuse " +
+      "a version whose schema differs") {
+    val (st, total, _, _) = statsFixture()
+    try {
+      val df = spark.read.format("deltashare")
+        .option("endpoint", st.endpoint).option("bearerToken", "tok")
+        .option("versionAsOf", "1")
+        .load("share1.schema1.orders2")
+      // same schema: the COUNT is answered from stats
+      val ok = df.agg(count(lit(1)))
+      assert(ok.queryExecution.executedPlan.toString
+        .contains("LocalTableScan"))
+      assert(ok.collect()(0).getLong(0) == total)
+      // the requested version's metaData now disagrees with the schema
+      // the frame was planned with
+      val (schema, parts, files) = st.tables("orders2")
+      val older = StructType(DataType.fromJson(schema)
+        .asInstanceOf[StructType].fields.dropRight(1)).json
+      st.tables = Map("orders2" -> ((older, parts, files)))
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      def refuses(run: => Any, what: String): Unit = {
+        val e = intercept[Exception](run)
+        assert(messages(e).exists(_.contains("different schema")),
+          s"$what: ${messages(e)}")
+      }
+      refuses(df.agg(count(lit(1))).collect(), "stats-only COUNT")
+      refuses(df.offset(3).collect(), "offset")
+      refuses(df.collect(), "row read")
+    } finally st.stop()
   }
 
   test("presigned HTTP urls with Range requests read end-to-end") {

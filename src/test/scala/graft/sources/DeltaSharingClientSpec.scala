@@ -95,7 +95,8 @@ class DeltaSharingClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.files.head.partitionValues == Map("l_returnflag" -> "A"))
     assert(r.files(1).partitionValues("l_returnflag") == null)
     assert(r.files.head.size == 123L)
-    assert(r.files.head.stats.contains("{\"numRecords\":1}"))
+    assert(r.files.head.stats.contains(
+      FileStats.Stats(Some(1L), Map.empty, Map.empty, Map.empty)))
     assert(r.files.head.expirationTimestamp.contains("2099-01-01T00:00:00Z"))
   }
 

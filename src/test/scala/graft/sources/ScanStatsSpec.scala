@@ -68,7 +68,8 @@ class ScanStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("TopN pushdown prunes files outside the top-k boundary") {
     import graft.sources.v2.{TopNFilePrune, TopNSpec}
     def fa(url: String, stats: Option[String]) =
-      FileAction(url, url, Map.empty, 1L, stats, None, None, None)
+      FileAction(url, url, Map.empty, 1L, stats.flatMap(FileStats.parse),
+        None, None, None)
     def st(n: Long, mn: Long, mx: Long, nulls: Long = 0L) = Some(
       s"""{"numRecords":$n,"minValues":{"k":$mn},"maxValues":{"k":$mx},
           "nullCount":{"k":$nulls}}""")
@@ -164,8 +165,9 @@ class ScanStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
             if (dvc == 0) None
             else Some(graft.sources.DeletionVectors.Descriptor(
               "i", "", 0L, 0L, dvc.toLong))
-          FileAction(s"f$i", s"f$i", Map.empty, 1L, stats, None, None,
-            None, deletionVector = dv)
+          FileAction(s"f$i", s"f$i", Map.empty, 1L,
+            stats.flatMap(FileStats.parse), None, None, None,
+            deletionVector = dv)
         }
         val spec = TopNSpec(field, asc, nullsFirst, n)
         val kept = TopNFilePrune.prune(files, spec).map(_.url).toSet
