@@ -22,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   * RECOVERY is re-running the interrupted event, not a rebuild: the
   * vector maintenance events are idempotent in effect —
   * retrain/refresh re-derive everything from raw vectors (which
-  * survive any crash point), and the CDF folds' rewrites anti-join
-  * BOTH departure and arrival ids (upsert) so re-applying the same
-  * batch converges. The re-run must ACKNOWLEDGE the crash — pass
+  * survive any crash point), and the CDF folds are
+  * [[PartitionedLayout.upsertFold]]s, so re-applying the same batch
+  * converges. The re-run must ACKNOWLEDGE the crash — pass
   * `resumeCrashed = true` to the maintenance event, which enters via
   * [[beginRebuild]] (no consistency check) — because only re-running
   * the SAME event converges; a different fold over the half-mutated
@@ -32,6 +32,8 @@ import org.apache.spark.sql.SparkSession
   * A full index write ([[Similarity.knnIndexWrite]] /
   * [[Similarity.sq8IndexWrite]]) regenerates every artifact and is
   * always a valid recovery, so it always enters via [[beginRebuild]].
+  * Every bracketed event commits through [[PartitionedLayout]]: the
+  * folds via `upsertFold`, the full rewrites via `rewriteAll`.
   *
   * The BM25 layout keeps its own stamp (fold id inside `_meta`, heal
   * via `bm25LayoutFsck`) because its `_df` delta log makes blind

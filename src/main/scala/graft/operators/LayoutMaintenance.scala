@@ -14,28 +14,29 @@ import org.apache.spark.sql.functions._
   * and open-file cost grows with ingest batches, not data. Compaction
   * rewrites ONLY the fragmented partitions (file count above
   * `maxFiles` — the TRIGGER) down to `⌈bytes/targetBytes⌉` files each
-  * (the TARGET) — the partition-grain rewrite discipline of the CDF
-  * folds, applied to file geometry instead of membership. A partition
-  * never collapses to one unbounded file: a hot `bkt=` postings
-  * partition at 100 TB is ~corpus/buckets bytes, and a single-file
-  * target would hand one straggler task a multi-GB write and leave
-  * one unsplittable row-group-heavy file to serve from — the same
-  * `targetBytes` discipline as [[Layout.compact]]'s bin plan, here
-  * derived from on-disk partition bytes because an in-place layout
-  * rewrite has no per-row size column. Untouched partitions keep
-  * their files byte-for-byte; rows are unchanged, so serving through
-  * the compacted layout is bit-identical (both pinned in
-  * GuardrailsSpec).
+  * (the TARGET) — the partition-grain rewrite discipline of
+  * [[PartitionedLayout]], applied to file geometry instead of
+  * membership. A partition never collapses to one unbounded file: a
+  * hot `bkt=` postings partition at 100 TB is ~corpus/buckets bytes,
+  * and a single-file target would hand one straggler task a multi-GB
+  * write and leave one unsplittable row-group-heavy file to serve
+  * from — the same `targetBytes` discipline as [[Layout.compact]]'s
+  * bin plan, here derived from on-disk partition bytes because an
+  * in-place layout rewrite has no per-row size column. Untouched
+  * partitions keep their files byte-for-byte; rows are unchanged, so
+  * serving through the compacted layout is bit-identical (both pinned
+  * in GuardrailsSpec).
   *
   * Scale shape: the driver holds one (partition value, file count,
   * bytes) triple per partition directory (≤ numCentroids / buckets+1
-  * entries — broadcastable by the same argument as the CDF folds'
-  * touched sets); only the fragmented partitions' rows re-materialize
-  * (an eager checkpoint severs them from the files being replaced);
-  * a deterministic per-partition salt spreads each fragmented
-  * partition over `⌈bytes/target⌉` writer tasks (parallel, no
-  * single-partition straggler), with `maxRecordsPerFile` as the hard
-  * size backstop when salt groups collide in one task.
+  * entries — broadcastable by the same argument as
+  * [[PartitionedLayout]]'s touched sets); only the fragmented
+  * partitions' rows re-materialize (an eager checkpoint severs them
+  * from the files being replaced); a deterministic per-partition
+  * salt spreads each fragmented partition over `⌈bytes/target⌉`
+  * writer tasks (parallel, no single-partition straggler), with
+  * `maxRecordsPerFile` as the hard size backstop when salt groups
+  * collide in one task.
   *
   * Why this stays a SIBLING of [[Layout.compact]] rather than one
   * primitive (the considered-and-rejected unification): the two share
@@ -196,30 +197,18 @@ object LayoutMaintenance {
     * serve bit-identically across it (pinned in GuardrailsSpec),
     * while a probe's per-term read drops from fold-count rows to one.
     *
-    * Crash discipline: the rewrite is the CDF folds' partition-grain
-    * dynamic overwrite over an eagerly-checkpointed frame (severed
-    * from the files being replaced); buckets left with no surviving
-    * term drop explicitly. A crash before the job commit leaves the
-    * log untouched; the collapse changes no SUM, so it neither needs
-    * nor bumps the layout's fold-sequence stamp. */
+    * Crash discipline: the rewrite is [[PartitionedLayout
+    * .rewritePartitions]] of every bucket, with the collapse as its
+    * survivor step; buckets left with no surviving term drop. A crash
+    * before the job commit leaves the log untouched; the collapse
+    * changes no SUM, so it neither needs nor bumps the layout's
+    * fold-sequence stamp. */
   def collapseBm25Df(spark: SparkSession, layoutPath: String): Unit = {
     val dfPath = layoutPath + "_df"
-    val existing = fileCensus(spark, dfPath, "bkt").map(_._1)
-    if (existing.isEmpty) return
-    val collapsed = spark.read.parquet(dfPath)
-      .groupBy("bkt", "fp").agg(sum("ddf").as("ddf"))
-      .filter(col("ddf") =!= 0)
-      .select("fp", "ddf", "bkt")
-      .localCheckpoint(eager = true) // sever from the files replaced
-    collapsed.repartition(col("bkt"))
-      .write.option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bkt").mode("overwrite").parquet(dfPath)
-    val written = collapsed.select("bkt").distinct()
-      .collect().map(_.get(0).toString).toSet
-    val fs = new org.apache.hadoop.fs.Path(dfPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    existing.filterNot(written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(dfPath, s"bkt=$b"), true)
-    }
+    val existing = fileCensus(spark, dfPath, "bkt").map(_._1.toLong)
+    PartitionedLayout.rewritePartitions(spark, dfPath, "bkt",
+      existing.toSet, None)(
+      _.groupBy("bkt", "fp").agg(sum("ddf").as("ddf"))
+        .filter(col("ddf") =!= 0))
   }
 }

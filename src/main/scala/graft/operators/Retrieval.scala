@@ -206,24 +206,9 @@ object Retrieval {
     * time). Unknown change types fail loudly rather than corrupt the
     * index. */
   def bm25ApplyCdf(index: DataFrame, cdf: DataFrame): DataFrame = {
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    // row-level guard: an unrecognized change type throws at task
-    // time instead of silently dropping the row from both branches
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("bm25ApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select("doc_id")
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("doc_id", "text")
-    index.join(gone, Seq("doc_id"), "left_anti")
-      .unionByName(bm25Index(arrived))
+    val (gone, arrived) = PartitionedLayout.splitCdf(cdf, "bm25ApplyCdf")
+    index.join(gone.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(bm25Index(arrived.select("doc_id", "text")))
       .select("fp", "doc_id", "len", "tf") // keep the index layout stable
   }
 
@@ -693,12 +678,10 @@ object Retrieval {
   }
 
   /** Fold a CDF batch into a WRITTEN [[bm25IndexWrite]] layout — the
-    * [[bm25ApplyCdf]] fold executed as a PARTITION-GRAIN rewrite:
-    * only the buckets containing the changed documents' terms are
-    * rewritten (dynamic partition overwrite; a bucket emptied by the
-    * fold has its directory dropped explicitly), every untouched
-    * bucket keeps its files byte-for-byte, and the `_docs` census
-    * rewrites at its own doc-bucket grain. The maintained layout
+    * [[bm25ApplyCdf]] fold executed as [[PartitionedLayout
+    * .rewritePartitions]] of the buckets containing the changed
+    * documents' terms, with the `_fwd` rows and the `_docs` census
+    * rewritten at their own doc-bucket grain. The maintained layout
     * serves rows bit-identical to the in-memory [[bm25ApplyCdf]]
     * fold (pinned in GuardrailsSpec).
     *
@@ -712,31 +695,16 @@ object Retrieval {
     * are compared against its stored `_fwd` rows (a dbkt-pruned,
     * departure-sized read — the forward copy exists precisely for
     * doc-major access) and any mismatch — drifted text, or a
-    * departure for a doc the index never held — fails loudly. The
-    * driver holds only the touched bucket id sets (≤ buckets+1
-    * entries — sized like the centroid count); re-materialized rows
-    * are bounded by the touched buckets. */
+    * departure for a doc the index never held — fails loudly. */
   def bm25LayoutApplyCdf(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, cdf: DataFrame): Unit = {
     val meta = readBm25Meta(spark, layoutPath) // refuses a stale layout
     val buckets = meta.buckets
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("bm25LayoutApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select("doc_id", "text")
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("doc_id", "text")
-    val goneIdx = bm25Index(gone)
+    val (gone, arrived) =
+      PartitionedLayout.splitCdf(cdf, "bm25LayoutApplyCdf")
+    val goneIdx = bm25Index(gone.select("doc_id", "text"))
       .withColumn("bkt", bm25Bkt(col("fp"), buckets))
-    val arrivedIdx = bm25Index(arrived)
+    val arrivedIdx = bm25Index(arrived.select("doc_id", "text"))
       .withColumn("bkt", bm25Bkt(col("fp"), buckets))
       .localCheckpoint(eager = false) // touched census + rewrite
     val goneIds = gone.select("doc_id")
@@ -774,28 +742,15 @@ object Retrieval {
     // check — a REJECTED fold mutates nothing and must not flag the
     // layout) and before the first mutation below
     writeFoldIntent(spark, layoutPath, meta.foldSeq + 1)
-    val fs = new org.apache.hadoop.fs.Path(layoutPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (touched.nonEmpty) {
-      val touchedLit = touched.toSeq.sorted.map(lit)
-      val newRows = spark.read.parquet(layoutPath)
-        .filter(col("bkt").isin(touchedLit: _*))
-        .join(broadcast(goneIds), Seq("doc_id"), "left_anti")
-        .unionByName(arrivedIdx)
-        .select("fp", "doc_id", "len", "tf", "bkt")
-        .localCheckpoint(eager = true) // sever from the files below
-      newRows.repartition(col("bkt"))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bkt").mode("overwrite").parquet(layoutPath)
-      val written = newRows.select("bkt").distinct()
-        .collect().map(_.get(0).toString.toLong).toSet
-      (touched -- written).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          layoutPath, s"bkt=$b"), true)
-      }
-    }
-    // the doc-bucketed artifacts (_fwd rows, _docs census) fold at
-    // their own dbkt grain — both share the same touched set
+    // every artifact drops the departed docs and gains the arrivals:
+    // the postings at their bkt grain, the doc-bucketed _fwd rows and
+    // _docs census at their own dbkt grain (one shared touched set)
+    def rewrite(suffix: String, partCol: String, touched: Set[Long],
+        arrivals: DataFrame): Unit =
+      PartitionedLayout.rewritePartitions(spark, layoutPath + suffix,
+        partCol, touched, Some(arrivals))(
+        _.join(broadcast(goneIds), Seq("doc_id"), "left_anti"))
+    rewrite("", "bkt", touched, arrivedIdx)
     val arrivedFwd = arrivedIdx.select("fp", "doc_id", "len", "tf")
       .withColumn("dbkt", pmod(col("doc_id"), lit(buckets.toLong)))
     val arrivedDocs = arrivedIdx.select("doc_id", "len").distinct()
@@ -804,30 +759,8 @@ object Retrieval {
       .select(pmod(col("doc_id"), lit(buckets.toLong)).as("dbkt"))
       .union(arrivedDocs.select("dbkt"))
       .distinct().collect().map(_.get(0).toString.toLong).toSet
-    if (touchedD.nonEmpty) {
-      val touchedDLit = touchedD.toSeq.sorted.map(lit)
-      def rewriteD(suffix: String, arrived: DataFrame,
-          cols: Seq[String]): Unit = {
-        val fresh = spark.read.parquet(layoutPath + suffix)
-          .filter(col("dbkt").isin(touchedDLit: _*))
-          .join(broadcast(goneIds), Seq("doc_id"), "left_anti")
-          .unionByName(arrived)
-          .select((cols :+ "dbkt").map(col): _*)
-          .localCheckpoint(eager = true) // sever from the files below
-        fresh.repartition(col("dbkt"))
-          .write.option("partitionOverwriteMode", "dynamic")
-          .partitionBy("dbkt").mode("overwrite")
-          .parquet(layoutPath + suffix)
-        val written = fresh.select("dbkt").distinct()
-          .collect().map(_.get(0).toString.toLong).toSet
-        (touchedD -- written).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            layoutPath + suffix, s"dbkt=$b"), true)
-        }
-      }
-      rewriteD("_fwd", arrivedFwd, Seq("fp", "doc_id", "len", "tf"))
-      rewriteD("_docs", arrivedDocs, Seq("doc_id", "len"))
-    }
+    rewrite("_fwd", "dbkt", touchedD, arrivedFwd)
+    rewrite("_docs", "dbkt", touchedD, arrivedDocs)
     // df dictionary deltas: departures append −counts (exact by the
     // verified preimage), arrivals +counts — the signed log keeps
     // SUM(ddf) equal to the true per-term df with no rewrite

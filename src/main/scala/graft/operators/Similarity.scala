@@ -960,22 +960,11 @@ object Similarity {
     * CDF rows: `(vec_id, embedding, _change_type)`. */
   def knnApplyCdf(cents: DataFrame, home: DataFrame,
       cdf: DataFrame): DataFrame = {
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("knnApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select(col("vec_id").as("neighbor_id"))
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("vec_id", "embedding")
-    home.join(gone, Seq("neighbor_id"), "left_anti")
-      .unionByName(homeRowsAgainst(arrived, cents))
+    val (gone, arrived) = PartitionedLayout.splitCdf(cdf, "knnApplyCdf")
+    home.join(gone.select(col("vec_id").as("neighbor_id")),
+        Seq("neighbor_id"), "left_anti")
+      .unionByName(homeRowsAgainst(arrived.select("vec_id", "embedding"),
+        cents))
       .select("neighbor_id", "cid", "n_emb", "n_nrm") // stable layout
   }
 
@@ -1011,17 +1000,6 @@ object Similarity {
     * frame — serving ([[knnTopKFromLayout]]) and CDF maintenance
     * ([[knnLayoutApplyCdf]]) then run against the layout alone and
     * never touch the raw corpus. */
-  /** Read a layout's data artifact, treating a fully-DRAINED
-    * directory (every partition dropped by CDF folds, only commit
-    * markers left, so parquet schema inference fails) as the absent
-    * membership it is — the maintenance executors' own loud
-    * "no members" / membership-mismatch degrades then fire instead
-    * of a bare schema-inference error. */
-  private def readLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   def knnIndexWrite(corpus: DataFrame, outPath: String,
       numCentroids: Int = 16, maxList: Int = 1 << 16, iters: Int = 2,
       centsIn: Option[DataFrame] = None): Unit = {
@@ -1033,10 +1011,8 @@ object Similarity {
     // from-scratch write is itself the rebuild recovery, so it enters
     // without the consistency check
     val seq = FoldStamp.beginRebuild(spark, outPath)
-    home.repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite").parquet(outPath)
-    cents.write.mode("overwrite").parquet(outPath + "_cents")
-    FoldStamp.commit(spark, outPath, seq)
+    PartitionedLayout.rewriteAll(spark, outPath, seq, "cid", home,
+      "_cents" -> cents)
   }
 
   /** Serve kNN top-k THROUGH a written [[knnIndexWrite]] layout:
@@ -1057,89 +1033,19 @@ object Similarity {
   }
 
   /** CDF maintenance of a WRITTEN [[knnIndexWrite]] layout — the
-    * [[knnApplyCdf]] fold executed as a PARTITION-GRAIN rewrite:
-    * departures and arrivals touch only their home lists' `cid=`
-    * directories (dynamic partition overwrite), every untouched list
-    * keeps its files byte-for-byte. The maintained layout serves rows
-    * bit-identical to a from-scratch [[knnApplyCdf]] of the same CDF
-    * under the same frozen centroids (pinned in GuardrailsSpec).
-    *
-    * Scale shape: the CDF batch is batch-sized (broadcast onto the
-    * standing lists for the departure semi/anti probes; in-row
-    * frozen-centroid argmin for arrivals — zero exchanges on the
-    * arriving side); only the touched lists' rows are re-materialized
-    * (an eager checkpoint severs them from the files being
-    * overwritten) — cost is proportional to the touched lists, not
-    * the index. The driver holds only the touched cid SET (≤
-    * numCentroids entries — centroid counts are broadcastable by
-    * design); lists whose last row departs have their directory
-    * dropped explicitly (dynamic overwrite cannot delete a partition
-    * it writes no rows for). */
+    * [[knnApplyCdf]] fold executed as a [[PartitionedLayout
+    * .upsertFold]] over the `cid=` home lists. Arrivals assign under
+    * the FROZEN centroids by in-row argmin (zero exchanges on the
+    * arriving side). The maintained layout serves rows bit-identical
+    * to a from-scratch [[knnApplyCdf]] of the same CDF under the same
+    * frozen centroids (pinned in GuardrailsSpec). CDF rows:
+    * `(vec_id, embedding, _change_type)`. */
   def knnLayoutApplyCdf(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, cdf: DataFrame,
       resumeCrashed: Boolean = false): Unit = {
     val cents = spark.read.parquet(layoutPath + "_cents")
-    val home = spark.read.parquet(layoutPath)
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("knnLayoutApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select(col("vec_id").as("neighbor_id"))
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("vec_id", "embedding")
-    val arrivedRows = homeRowsAgainst(arrived, cents)
-      .localCheckpoint(eager = false) // touched-cid census + rewrite
-    // UPSERT anti-set: departures AND arrival ids leave before the
-    // arrivals' rows land — re-applying the same batch (the crash
-    // recovery) converges instead of duplicating arrivals, and an
-    // insert of an existing id replaces it wherever it lived
-    val departing = gone
-      .unionByName(arrived.select(col("vec_id").as("neighbor_id")))
-      .distinct()
-      .localCheckpoint(eager = false) // touched census + anti-join
-    // the touched lists: where departures/replaced ids live now +
-    // where arrivals go
-    val touched = home.join(broadcast(departing), Seq("neighbor_id"),
-        "left_semi").select("cid")
-      .union(arrivedRows.select("cid"))
-      .distinct().collect().map(_.get(0).toString.toLong).toSet
-    // fold-stamp bracket AFTER every validation action above (the
-    // change-type guard raises during the census collects) and before
-    // the first mutation; resumeCrashed acknowledges a re-run of a
-    // crashed fold (the upsert anti-set makes re-application converge)
-    val seq = FoldStamp.enter(spark, layoutPath, "knn", resumeCrashed)
-    if (touched.nonEmpty) {
-      val touchedLit = touched.toSeq.sorted.map(lit)
-      // maintained rows of the touched lists ONLY, severed from the
-      // files the overwrite is about to replace
-      val newRows = home.filter(col("cid").isin(touchedLit: _*))
-        .join(broadcast(departing), Seq("neighbor_id"), "left_anti")
-        .unionByName(arrivedRows.filter(
-          col("cid").isin(touchedLit: _*)))
-        .select("neighbor_id", "n_emb", "n_nrm", "cid")
-        .localCheckpoint(eager = true)
-      newRows.repartition(col("cid"))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid").mode("overwrite").parquet(layoutPath)
-      // lists emptied by the fold write no rows, so dynamic overwrite
-      // left their old files — drop those directories explicitly
-      val written = newRows.select("cid").distinct()
-        .collect().map(_.get(0).toString.toLong).toSet
-      val fs = new org.apache.hadoop.fs.Path(layoutPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (touched -- written).foreach { cid =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          layoutPath, s"cid=$cid"), true)
-      }
-    }
-    FoldStamp.commit(spark, layoutPath, seq)
+    PartitionedLayout.upsertFold(spark, layoutPath, cdf, "knn",
+      "neighbor_id", "cid", resumeCrashed)(homeRowsAgainst(_, cents))
   }
 
   /** Per-list census of a WRITTEN [[knnIndexWrite]] layout — the
@@ -1196,7 +1102,7 @@ object Similarity {
       maxList: Int = 1 << 16, resumeCrashed: Boolean = false): Unit = {
     // the CURRENT membership's raw vectors, read from the layout and
     // severed (eagerly) from the files the rewrite replaces
-    val membershipOpt = readLayout(spark, layoutPath)
+    val membershipOpt = PartitionedLayout.readLayout(spark, layoutPath)
       .map(_.select(col("neighbor_id").as("vec_id"),
           col("n_emb").as("embedding"))
         .localCheckpoint(eager = true))
@@ -1219,10 +1125,8 @@ object Similarity {
     // membership's raw vectors, which survive any crash point) is the
     // recovery
     val seq = FoldStamp.enter(spark, layoutPath, "knn", resumeCrashed)
-    rows.repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite").parquet(layoutPath)
-    cents.write.mode("overwrite").parquet(layoutPath + "_cents")
-    FoldStamp.commit(spark, layoutPath, seq)
+    PartitionedLayout.rewriteAll(spark, layoutPath, seq, "cid", rows,
+      "_cents" -> cents)
   }
 
   /** Incremental kNN-graph maintenance (ss16), batch tail: the
@@ -1471,93 +1375,42 @@ object Similarity {
     // recovery, so it enters without the consistency check
     val spark = corpus.sparkSession
     val seq = FoldStamp.beginRebuild(spark, outPath)
-    enc.repartition(col("lcid"))
-      .write.partitionBy("lcid").mode("overwrite").parquet(outPath)
-    coarse.write.mode("overwrite").parquet(outPath + "_coarse")
+    PartitionedLayout.rewriteAll(spark, outPath, seq, "lcid", enc,
+      "_coarse" -> coarse, "_books" -> pqBooksSidecar(books))
+  }
+
+  /** The `_books` sidecar format: the m per-subspace codebooks as one
+    * frame, each row tagged with its subspace id `sid`. */
+  private def pqBooksSidecar(books: Seq[DataFrame]): DataFrame =
     books.zipWithIndex
       .map { case (b, sid) => b.select(lit(sid).as("sid"), col("cid"),
         col("cemb"), col("cc")) }
       .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(outPath + "_books")
-    FoldStamp.commit(spark, outPath, seq)
+
+  /** The m per-subspace codebooks back from a layout's `_books`. */
+  private def readPqBooks(spark: org.apache.spark.sql.SparkSession,
+      layoutPath: String, m: Int): Seq[DataFrame] = {
+    val booksAll = spark.read.parquet(layoutPath + "_books")
+    (0 until m).map(sid =>
+      booksAll.filter(col("sid") === sid).select("cid", "cemb", "cc"))
   }
 
-  /** CDF maintenance of a WRITTEN [[pqIndexWrite]] layout — the
-    * [[sq8LayoutApplyCdf]] discipline for the residual-coded family:
-    * departures leave their `lcid=` directory via one id-keyed
-    * anti-join; arrivals assign to their coarse list and RESIDUAL-
-    * ENCODE UNDER THE FROZEN CODEBOOKS (re-training either quantizer
-    * inline would silently shift every stored code — both refresh as
-    * scheduled offline events); only the touched lists' directories
-    * rewrite (dynamic partition overwrite, emptied directories
-    * dropped). Maintained rows are bit-identical to a from-scratch
-    * encode of the modified membership under the same frozen coarse
-    * quantizer + codebooks (the ss25 oracle replays exactly that).
-    * CDF rows: `(vec_id, embedding, _change_type)`. */
+  /** CDF maintenance of a WRITTEN [[pqIndexWrite]] layout — a
+    * [[PartitionedLayout.upsertFold]] over the `lcid=` lists whose
+    * arrivals assign to their coarse list and RESIDUAL-ENCODE UNDER
+    * THE FROZEN CODEBOOKS (re-training either quantizer inline would
+    * silently shift every stored code — both refresh as scheduled
+    * offline events). Maintained rows are bit-identical to a
+    * from-scratch encode of the modified membership under the same
+    * frozen coarse quantizer + codebooks (the ss25 oracle replays
+    * exactly that). CDF rows: `(vec_id, embedding, _change_type)`. */
   def pqLayoutApplyCdf(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, cdf: DataFrame, m: Int = 4,
       resumeCrashed: Boolean = false): Unit = {
     val coarse = spark.read.parquet(layoutPath + "_coarse")
-    val booksAll = spark.read.parquet(layoutPath + "_books")
-    val books = (0 until m).map(sid =>
-      booksAll.filter(col("sid") === sid).select("cid", "cemb", "cc"))
-    val enc = spark.read.parquet(layoutPath)
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("pqLayoutApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select("vec_id")
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("vec_id", "embedding")
-    val arrivedRows = pqRowsAgainst(arrived, coarse, books)
-      .localCheckpoint(eager = false) // touched-lcid census + rewrite
-    // UPSERT anti-set (see knnLayoutApplyCdf): departures AND arrival
-    // ids leave before the arrivals' rows land, so re-applying the
-    // same batch (the crash recovery) converges instead of
-    // duplicating arrivals
-    val departing = gone
-      .unionByName(arrived.select("vec_id"))
-      .distinct()
-      .localCheckpoint(eager = false) // touched census + anti-join
-    val touched = enc.join(broadcast(departing), Seq("vec_id"),
-        "left_semi")
-      .select("lcid")
-      .union(arrivedRows.select("lcid"))
-      .distinct().collect().map(_.get(0).toString.toLong).toSet
-    // fold-stamp bracket AFTER the change-type validation collects,
-    // before the first mutation; resumeCrashed acknowledges a re-run
-    // of a crashed fold
-    val seq = FoldStamp.enter(spark, layoutPath, "pq", resumeCrashed)
-    if (touched.nonEmpty) {
-      val touchedLit = touched.toSeq.sorted.map(lit)
-      val cols = Seq("vec_id") ++ (0 until m).map(s => s"code_$s") ++
-        Seq("lcid")
-      val newRows = enc.filter(col("lcid").isin(touchedLit: _*))
-        .join(broadcast(departing), Seq("vec_id"), "left_anti")
-        .unionByName(arrivedRows.filter(
-          col("lcid").isin(touchedLit: _*)))
-        .select(cols.map(col): _*)
-        .localCheckpoint(eager = true) // sever from the files below
-      newRows.repartition(col("lcid"))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lcid").mode("overwrite").parquet(layoutPath)
-      val written = newRows.select("lcid").distinct()
-        .collect().map(_.get(0).toString.toLong).toSet
-      val fs = new org.apache.hadoop.fs.Path(layoutPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (touched -- written).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          layoutPath, s"lcid=$c"), true)
-      }
-    }
-    FoldStamp.commit(spark, layoutPath, seq)
+    val books = readPqBooks(spark, layoutPath, m)
+    PartitionedLayout.upsertFold(spark, layoutPath, cdf, "pq",
+      "vec_id", "lcid", resumeCrashed)(pqRowsAgainst(_, coarse, books))
   }
 
   /** Per-list size census of a WRITTEN quantized layout (ss34 sq8 /
@@ -1705,7 +1558,7 @@ object Similarity {
       resumeCrashed: Boolean = false): Unit = {
     val ids = corpus.select(col("vec_id"))
       .localCheckpoint(eager = false) // two anti-joins
-    val home = readLayout(spark, layoutPath)
+    val home = PartitionedLayout.readLayout(spark, layoutPath)
       .map(_.select("vec_id")).getOrElse(ids.limit(0))
     val missing = ids.join(home, Seq("vec_id"), "left_anti").count()
     val extra = home.join(ids, Seq("vec_id"), "left_anti").count()
@@ -1726,14 +1579,8 @@ object Similarity {
         Some(coarse))
     val encC = enc.localCheckpoint(eager = true) // sever from the files
     val seq = FoldStamp.enter(spark, layoutPath, "pq", resumeCrashed)
-    encC.repartition(col("lcid"))
-      .write.partitionBy("lcid").mode("overwrite").parquet(layoutPath)
-    books.zipWithIndex
-      .map { case (b, sid) => b.select(lit(sid).as("sid"), col("cid"),
-        col("cemb"), col("cc")) }
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(layoutPath + "_books")
-    FoldStamp.commit(spark, layoutPath, seq)
+    PartitionedLayout.rewriteAll(spark, layoutPath, seq, "lcid", encC,
+      "_books" -> pqBooksSidecar(books))
   }
 
   /** Serve IVF-PQ top-k THROUGH a written [[pqIndexWrite]] layout —
@@ -1745,12 +1592,9 @@ object Similarity {
       layoutPath: String, queries: DataFrame, k: Int,
       nprobe: Int = 2, m: Int = 4): DataFrame = {
     FoldStamp.check(spark, layoutPath, "pq") // refuse a mid-fold layout
-    val booksAll = spark.read.parquet(layoutPath + "_books")
-    val books = (0 until m).map(sid =>
-      booksAll.filter(col("sid") === sid).select("cid", "cemb", "cc"))
     ivfPqServe(spark.read.parquet(layoutPath),
-      spark.read.parquet(layoutPath + "_coarse"), books, queries,
-      k, nprobe, m)
+      spark.read.parquet(layoutPath + "_coarse"),
+      readPqBooks(spark, layoutPath, m), queries, k, nprobe, m)
   }
 
   /** The IVF-PQ TRAINING alone — `(coarse, residualBooks)` — exposed
@@ -2438,86 +2282,29 @@ object Similarity {
     // without the consistency check
     val spark = corpus.sparkSession
     val seq = FoldStamp.beginRebuild(spark, outPath)
-    c.repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite").parquet(outPath)
-    packed.write.mode("overwrite").parquet(outPath + "_stats")
-    cents.write.mode("overwrite").parquet(outPath + "_cents")
-    FoldStamp.commit(spark, outPath, seq)
+    PartitionedLayout.rewriteAll(spark, outPath, seq, "cid", c,
+      "_stats" -> packed, "_cents" -> cents)
   }
 
-  /** CDF maintenance of a WRITTEN [[sq8IndexWrite]] layout — the
-    * [[knnLayoutApplyCdf]] partition-grain rewrite applied to the
-    * quantized family: departures leave their home `cid=` directory
-    * via one id-keyed anti-join, arrivals ENCODE UNDER THE FROZEN
-    * STATS (mns/spans never re-estimate inline — re-quantizing on
-    * every batch would silently shift every stored code; stats
-    * refresh is a scheduled offline event, the ss20 centroid
-    * discipline applied to the quantizer grid) and assign under the
-    * frozen centroids, and only the touched lists' directories
-    * rewrite (dynamic partition overwrite; emptied lists' directories
-    * drop explicitly). The maintained layout serves rows
-    * bit-identical to a from-scratch encode of the modified
-    * membership under the same frozen stats + centroids (pinned in
-    * GuardrailsSpec). CDF rows: `(vec_id, embedding, _change_type)`. */
+  /** CDF maintenance of a WRITTEN [[sq8IndexWrite]] layout — a
+    * [[PartitionedLayout.upsertFold]] over the `cid=` home lists whose
+    * arrivals ENCODE UNDER THE FROZEN STATS (mns/spans never
+    * re-estimate inline — re-quantizing on every batch would silently
+    * shift every stored code; stats refresh is a scheduled offline
+    * event, the ss20 centroid discipline applied to the quantizer
+    * grid) and assign under the frozen centroids. The maintained
+    * layout serves rows bit-identical to a from-scratch encode of the
+    * modified membership under the same frozen stats + centroids
+    * (pinned in GuardrailsSpec). CDF rows: `(vec_id, embedding,
+    * _change_type)`. */
   def sq8LayoutApplyCdf(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, cdf: DataFrame,
       resumeCrashed: Boolean = false): Unit = {
     val cents = spark.read.parquet(layoutPath + "_cents")
     val packed = spark.read.parquet(layoutPath + "_stats")
-    val home = spark.read.parquet(layoutPath)
-    val known = Seq("insert", "delete", "update_preimage",
-      "update_postimage")
-    val validated = cdf.withColumn("_change_type",
-      when(col("_change_type").isin(known: _*), col("_change_type"))
-        .otherwise(raise_error(concat(
-          lit("sq8LayoutApplyCdf: unknown CDF change type '"),
-          col("_change_type"), lit("'"))).cast("string")))
-      .localCheckpoint(eager = false) // feeds the leave + arrive legs
-    val gone = validated
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select(col("vec_id").as("neighbor_id"))
-    val arrived = validated
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select("vec_id", "embedding")
-    val arrivedRows = sq8RowsAgainst(arrived, cents, packed)
-      .localCheckpoint(eager = false) // touched-cid census + rewrite
-    // UPSERT anti-set (see knnLayoutApplyCdf): departures AND arrival
-    // ids leave before the arrivals' rows land, so re-applying the
-    // same batch (the crash recovery) converges instead of
-    // duplicating arrivals
-    val departing = gone
-      .unionByName(arrived.select(col("vec_id").as("neighbor_id")))
-      .distinct()
-      .localCheckpoint(eager = false) // touched census + anti-join
-    val touched = home.join(broadcast(departing), Seq("neighbor_id"),
-        "left_semi").select("cid")
-      .union(arrivedRows.select("cid"))
-      .distinct().collect().map(_.get(0).toString.toLong).toSet
-    // fold-stamp bracket AFTER the change-type validation collects,
-    // before the first mutation; resumeCrashed acknowledges a re-run
-    // of a crashed fold (the upsert anti-set makes it converge)
-    val seq = FoldStamp.enter(spark, layoutPath, "sq8", resumeCrashed)
-    if (touched.nonEmpty) {
-      val touchedLit = touched.toSeq.sorted.map(lit)
-      val newRows = home.filter(col("cid").isin(touchedLit: _*))
-        .join(broadcast(departing), Seq("neighbor_id"), "left_anti")
-        .unionByName(arrivedRows.filter(
-          col("cid").isin(touchedLit: _*)))
-        .select("neighbor_id", "codes", "cid")
-        .localCheckpoint(eager = true) // sever from the files below
-      newRows.repartition(col("cid"))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid").mode("overwrite").parquet(layoutPath)
-      val written = newRows.select("cid").distinct()
-        .collect().map(_.get(0).toString.toLong).toSet
-      val fs = new org.apache.hadoop.fs.Path(layoutPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (touched -- written).foreach { cid =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          layoutPath, s"cid=$cid"), true)
-      }
-    }
-    FoldStamp.commit(spark, layoutPath, seq)
+    PartitionedLayout.upsertFold(spark, layoutPath, cdf, "sq8",
+      "neighbor_id", "cid", resumeCrashed)(
+      sq8RowsAgainst(_, cents, packed))
   }
 
   /** The scheduled OFFLINE stats refresh (ss27) every frozen-artifact
@@ -2559,7 +2346,7 @@ object Similarity {
       resumeCrashed: Boolean = false): Unit = {
     val ids = corpus.select(col("vec_id").as("neighbor_id"))
       .localCheckpoint(eager = false) // two anti-joins
-    val home = readLayout(spark, layoutPath)
+    val home = PartitionedLayout.readLayout(spark, layoutPath)
       .map(_.select("neighbor_id")).getOrElse(ids.limit(0))
     val missing = ids.join(home, Seq("neighbor_id"), "left_anti")
       .count()
@@ -2585,10 +2372,8 @@ object Similarity {
     // resumeCrashed = true (derived from the raw vectors, which
     // survive any crash point) recovers
     val seq = FoldStamp.enter(spark, layoutPath, "sq8", resumeCrashed)
-    rows.repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite").parquet(layoutPath)
-    packed.write.mode("overwrite").parquet(layoutPath + "_stats")
-    FoldStamp.commit(spark, layoutPath, seq)
+    PartitionedLayout.rewriteAll(spark, layoutPath, seq, "cid", rows,
+      "_stats" -> packed)
   }
 
   /** Serve IVF-SQ8 top-k THROUGH a written [[sq8IndexWrite]] layout:

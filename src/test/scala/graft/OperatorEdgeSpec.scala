@@ -707,4 +707,96 @@ class OperatorEdgeSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("membership"), e2.getMessage)
   }
+
+  /** One written layout family under the shared CDF fold: its source
+    * rows (`srcId` + the payload its CDF carries), the id column the
+    * layout stores, and its write / fold / serve surface. */
+  private case class LayoutFamily(name: String,
+      src: org.apache.spark.sql.DataFrame, srcId: String, layoutId: String,
+      write: (org.apache.spark.sql.DataFrame, String) => Unit,
+      fold: (String, org.apache.spark.sql.DataFrame) => Unit,
+      servedIds: String => Set[Long])
+
+  private lazy val layoutFamilies: Seq[LayoutFamily] = {
+    import spark.implicits._
+    import graft.operators.{Retrieval, Similarity}
+    val embs = spark.range(40).select(col("id").as("vec_id"),
+      array((1 to 8).map(j => sin((col("id") + 1) * j).cast("float")): _*)
+        .as("embedding"))
+    val docs = (0 until 40).map(i =>
+      (i.toLong, s"w${i % 7} w${i % 5} w${i % 3} w$i w$i"))
+      .toDF("doc_id", "text")
+    def neighbors(served: org.apache.spark.sql.DataFrame): Set[Long] =
+      served.select("neighbor_id").collect().map(_.getLong(0)).toSet
+    val vecQueries = embs.filter(col("vec_id") < 3)
+    Seq(
+      LayoutFamily("knn", embs, "vec_id", "neighbor_id",
+        (s, out) => Similarity.knnIndexWrite(s, out, numCentroids = 4),
+        (out, cdf) => Similarity.knnLayoutApplyCdf(spark, out, cdf),
+        out => neighbors(Similarity.knnTopKFromLayout(spark, out,
+          vecQueries, k = 2))),
+      LayoutFamily("sq8", embs, "vec_id", "neighbor_id",
+        (s, out) => Similarity.sq8IndexWrite(s, out, numCentroids = 4),
+        (out, cdf) => Similarity.sq8LayoutApplyCdf(spark, out, cdf),
+        out => neighbors(Similarity.ivfSq8TopKFromLayout(spark, out,
+          vecQueries, k = 2))),
+      LayoutFamily("pq", embs, "vec_id", "vec_id",
+        (s, out) => Similarity.pqIndexWrite(s, out, numCentroids = 4),
+        (out, cdf) => Similarity.pqLayoutApplyCdf(spark, out, cdf),
+        out => neighbors(Similarity.ivfPqTopKFromLayout(spark, out,
+          vecQueries, k = 2))),
+      LayoutFamily("bm25", docs, "doc_id", "doc_id",
+        (s, out) => Retrieval.bm25IndexWrite(s, out, buckets = 8),
+        (out, cdf) => Retrieval.bm25LayoutApplyCdf(spark, out, cdf),
+        out => Retrieval.bm25TopKFromLayout(spark, out,
+          docs.filter(col("doc_id") < 3)
+            .select(col("doc_id").as("query_id"), col("text")), k = 2)
+          .select("doc_id").collect().map(_.getLong(0)).toSet))
+  }
+
+  private def layoutIds(f: LayoutFamily, out: String): Set[Long] =
+    spark.read.parquet(out).select(f.layoutId).distinct()
+      .collect().map(_.getLong(0)).toSet
+
+  private def cdfOf(rows: org.apache.spark.sql.DataFrame,
+      changeType: String): org.apache.spark.sql.DataFrame =
+    rows.withColumn("_change_type", lit(changeType))
+
+  test("layout CDF folds insert into a layout an earlier fold drained") {
+    layoutFamilies.foreach { f =>
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_drained_${f.name}_${spark.sparkContext.applicationId}")
+        .getPath
+      f.write(f.src, out)
+      f.fold(out, cdfOf(f.src, "delete"))
+      assert(new java.io.File(out).listFiles()
+        .forall(!_.getName.contains("=")), s"${f.name}: not drained")
+      val back = f.src.filter(col(f.srcId).isin(5L, 7L))
+      f.fold(out, cdfOf(back, "insert"))
+      assert(layoutIds(f, out) == Set(5L, 7L), f.name)
+      assert(f.servedIds(out).subsetOf(Set(5L, 7L)), f.name)
+    }
+  }
+
+  test("layout CDF folds reject an unknown change type before mutating") {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    layoutFamilies.foreach { f =>
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_merge_${f.name}_${spark.sparkContext.applicationId}")
+        .getPath
+      f.write(f.src, out)
+      def intent: Seq[Long] = spark.read.parquet(out + "_fold_intent")
+        .collect().map(_.getLong(0)).toSeq
+      val (intentBefore, idsBefore) = (intent, layoutIds(f, out))
+      val cdf = cdfOf(f.src.filter(col(f.srcId) === 3L), "merge")
+        .unionByName(cdfOf(f.src.filter(col(f.srcId) === 4L), "delete"))
+      val e = intercept[Exception](f.fold(out, cdf))
+      val expected =
+        s"${f.name}LayoutApplyCdf: unknown CDF change type 'merge'"
+      assert(msgs(e).exists(_.contains(expected)), e.getMessage)
+      assert(intent == intentBefore, s"${f.name}: _fold_intent changed")
+      assert(layoutIds(f, out) == idsBefore, s"${f.name}: layout changed")
+    }
+  }
 }
