@@ -55,10 +55,7 @@ object Bench {
     // builds otherwise land on whichever query touches an artifact
     // first, making its number an order-dependent accident — with the
     // prewarm, every per-query time is steady serving by construction
-    try graft.queries.PipelineQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.ExtendedQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
+    Artifacts.prewarm(spark, sfDir)
     // INTER-QUERY STATE HYGIENE (r18 verdict finding #4): iterative
     // operators localCheckpoint per round, and standing-model frames
     // checkpoint per invocation — those persisted blocks outlive their
@@ -88,18 +85,23 @@ object Bench {
     }
     val gcByQuery = scala.collection.mutable.Map
       .empty[String, List[Long]].withDefaultValue(Nil)
+    // a query that throws in either pass is FAILED: listed by name,
+    // never timed (its elapsed time up to the throw is not a result)
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     // two timed passes, min per query: first-touch JIT/codegen noise
     // lands on whichever query a hash-map ordering puts early; the min
     // is the reproducible steady-state number
-    def pass(): Map[String, Double] = SparkEntry.queries.map {
+    def pass(): Map[String, Double] = SparkEntry.queries.flatMap {
       case (name, fn) =>
         val g0 = gcNowMs()
         val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => () }
+        val ok =
+          try { run(fn(spark, sfDir)); true }
+          catch { case _: Throwable => failed += name; false }
         val sec = (System.nanoTime() - t0) / 1e9
         gcByQuery(name) = gcByQuery(name) :+ (gcNowMs() - g0)
         scrub()
-        name -> sec
+        if (ok) Some(name -> sec) else None
     }
     // 1-minute system load BEFORE the timed passes: round-over-round
     // comparisons need to know whether the bench window was contended
@@ -133,7 +135,10 @@ object Bench {
     val loadMid = loadavg // per-PASS load: which pass a spike hit matters
     val p2 = pass()
     val loadAfter = loadavg
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    val results = p1.collect {
+      case (k, v) if !failed(k) => k -> math.min(v, p2(k)) }
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // the driver captures stdout through a bounded ~2 KB tail window,
     // so EVERYTHING that must survive (per-query map + summary +
@@ -174,8 +179,8 @@ object Bench {
     // the scalar summary line stays LAST (always parseable from the
     // tail) and any consumer of the full stdout gets the flat map.
     val qsFlat = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFlat,"sf":"$sfDir"}""")
+      .map { case (k, v) => s""""$k":${f3(v)}""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFlat,"sf":"$sfDir"}""")
     // BENCH_FULL carries BOTH raw passes next to the min: a
     // cross-round comparison can then tell machine noise (passes
     // disagree, min stable) from a real regression (both passes
@@ -183,19 +188,24 @@ object Bench {
     val qsFull = results.toSeq.sortBy(_._1)
       .map { case (k, v) =>
         val gc = gcByQuery(k).map(_.toString).mkString("[", ",", "]")
-        f""""$k":{"min":$v%.3f,"runs":[${p1(k)}%.3f,${p2(k)}%.3f],"gc_ms":$gc}"""
+        s""""$k":{"min":${f3(v)},"runs":[${f3(p1(k))},${f3(p2(k))}],"gc_ms":$gc}"""
       }
       .mkString("{", ",", "}")
+    // per-artifact build cost: wall ms of each standing artifact built
+    // for this sf-dir (by the prewarm, or by a query if it missed one)
+    val artifactsJson = Artifacts.builds.filter(_.dir == sfDir)
+      .groupMapReduce(_.name)(_.ms)(_ + _).toSeq.sorted
+      .map { case (n, ms) => s""""$n":$ms""" }.mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")),
-      (s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFull,"sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"failed":$failedJson,"queries":$qsFull,"artifacts":$artifactsJson,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     catch { case _: Exception => () }
     // short standalone summary LAST: always survives tail truncation.
     // Distinct metric name so a consumer aggregating by metric never
     // double-counts the total.
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"sf":"$sfDir"}""")
     spark.stop()
   }
 }

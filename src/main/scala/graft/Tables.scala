@@ -23,17 +23,47 @@ object Tables {
     * removes that driver-side planning cost at EVERY scale — this is
     * exactly what a catalog table does with its metadata. Not result
     * caching: every action over the memoized frame still scans the
-    * parquet files. Contract (matches the layoutDir memo): a base
-    * table path is written AT MOST ONCE per session, BEFORE its first
-    * load — true for the static test dirs and every fixture temp dir;
-    * layout paths that fold in place keep their fresh per-call reads
-    * in the operators. */
-  private val loadCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * parquet files. The relations live in [[Artifacts]]' session-scoped
+    * store. Contract: a base table path is written AT MOST ONCE per
+    * session, BEFORE its first load — true for the static test dirs
+    * and every fixture temp dir; layout paths that fold in place keep
+    * their fresh per-call reads in the operators. The contract is
+    * checked: a reuse whose [[fingerprint]] differs from the first
+    * load's throws instead of serving the stale file listing. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    loadCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    loadCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    val now = fingerprint(spark, path)
+    val (df, first) = Artifacts.scoped(spark, s"table:$path")(
+      (spark.read.parquet(path), now))
+    if (now != first)
+      throw new IllegalStateException(s"Tables.load: $path was " +
+        "rewritten after its first load in this session; a loaded " +
+        "base table must not change (write it to a fresh path)")
+    df
+  }
+
+  /** A cheap driver-side identity of what a load reads, no Spark job:
+    * length and mtime of a file; name, length and mtime of every data
+    * file under a directory (Spark's hidden `_`/`.` entries skipped,
+    * partition directories `k=v` kept). Empty for a missing path, so
+    * the read itself raises its usual error. */
+  private def fingerprint(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val prefix = fs.getFileStatus(root).getPath.toString.length
+      val files = fs.listFiles(root, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        val rel = f.getPath.toString.drop(prefix)
+        val hidden = rel.split('/').exists(c =>
+          (c.startsWith("_") || c.startsWith(".")) && !c.contains("="))
+        if (!hidden) out += ((rel, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    } catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

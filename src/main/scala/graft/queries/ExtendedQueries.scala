@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import graft.Artifacts
 import graft.Tables._
 import graft.operators.{AsOfJoin, SkewJoin}
 
@@ -14,46 +15,23 @@ import graft.operators.{AsOfJoin, SkewJoin}
 object ExtendedQueries {
 
   /** The part co-purchase edge list (two parts adjacent iff they
-    * share an order), NORMALIZED (src < dst, distinct) and memoized
-    * per (session, sf-dir) — the kgCents/layoutDir standing-artifact
-    * discipline applied to the graph family: q60/q62/q70/q71 all
-    * consume this same frame, and at 100 TB the fact-table self-join
-    * that derives a graph is exactly the artifact you materialize
-    * once, not per analytics query. Eagerly checkpointed so every
-    * consumer starts from executor storage; stopped sessions evict
-    * on access. */
-  private val copurchaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  /** Force-build this pack's memoized standing artifact (the
-    * co-purchase edge list all graph queries share) — the bench's
-    * warmup hook, twin of [[PipelineQueries.prewarm]]. The eager
-    * checkpoint inside [[copurchaseEdges]] materializes on first
-    * call, so calling it IS the build. */
-  def prewarm(s: SparkSession, d: String): Unit = {
-    copurchaseEdges(s, d)
-    frozenLpaQ71(s, d)
-    frozenLpaQ72(s, d)
-    ()
-  }
-
-  private def copurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    copurchaseCache.keysIterator
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(copurchaseCache.remove)
-    copurchaseCache.getOrElseUpdate((s, d), {
+    * share an order), NORMALIZED (src < dst, distinct) — a standing
+    * checkpointed frame in [[graft.Artifacts]] applied to the graph
+    * family: q60/q62/q70/q71 all consume this same frame, and at
+    * 100 TB the fact-table self-join that derives a graph is exactly
+    * the artifact you materialize once, not per analytics query. */
+  private val copurchaseEdges =
+    Artifacts.checkpointed("copurchaseEdges") { (s, d) =>
       val li = lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("x").join(li.as("y"), "ok")
         .where(col("x.pk") < col("y.pk"))
         .select(col("x.pk").as("src"), col("y.pk").as("dst"))
         .distinct()
-        .localCheckpoint()
-    })
-  }
+    }
 
-  /** The FROZEN LPA label tables q71/q72 probe, memoized per
-    * (session, sf-dir) — the standing-model discipline ([[kgCents]]/
-    * `layoutDir` in PipelineQueries) applied to the graph family's
+  /** The FROZEN LPA label tables q71/q72 probe — standing
+    * checkpointed frames in [[graft.Artifacts]] for the graph family's
     * incremental members: q71's declared operator is "arrivals adopt
     * the frozen-majority label AT BATCH COST — no multi-round re-run"
     * and q72's is "census the drift the frozen table cannot absorb";
@@ -64,30 +42,16 @@ object ExtendedQueries {
     * mis-attribution the r17 verdict flagged for t37's layout build).
     * Training is deterministic — memoized labels are bit-identical to
     * in-place construction, so declared results are unchanged (oracle
-    * re-verified). Eagerly checkpointed: prewarm materializes it, and
-    * the bench's post-prewarm persistent-RDD snapshot protects it from
-    * the inter-query scrub. */
-  private val frozenLpaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def frozenLpaMemo(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    frozenLpaCache.keysIterator
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(frozenLpaCache.remove)
-    frozenLpaCache.getOrElseUpdate((s, key), build.localCheckpoint())
-  }
-  private def frozenLpaQ71(s: SparkSession, d: String): DataFrame =
-    frozenLpaMemo(s, s"q71@$d") {
-      val edges = copurchaseEdges(s, d)
-      graft.operators.Graph.labelPropagation(
-        edges.where(col("src") % 5 =!= 0 && col("dst") % 5 =!= 0),
-        rounds = 4)
+    * re-verified). */
+  private val frozenLpaQ71 =
+    Artifacts.checkpointed("frozenLpaQ71") { (s, d) =>
+      graft.operators.Graph.labelPropagation(copurchaseEdges(s, d)
+        .where(col("src") % 5 =!= 0 && col("dst") % 5 =!= 0), rounds = 4)
     }
-  private def frozenLpaQ72(s: SparkSession, d: String): DataFrame =
-    frozenLpaMemo(s, s"q72@$d") {
-      val edges = copurchaseEdges(s, d)
+  private val frozenLpaQ72 =
+    Artifacts.checkpointed("frozenLpaQ72") { (s, d) =>
       graft.operators.Graph.labelPropagation(
-        edges.where(q72FreezeCut), rounds = 4)
+        copurchaseEdges(s, d).where(q72FreezeCut), rounds = 4)
     }
   /** q72's freeze slice (shared by the frozen build and the arriving
     * complement): within-residue-class edges only, %5 nodes and the

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables._
 import graft.operators.{CorpusStats, Decontaminate, Dedup, Layout, Mixture, Multimodal, Packing, Profile, Retrieval, Similarity, TextAnalysis, VectorStats}
 import graft.streaming.EventStreams
@@ -914,13 +915,7 @@ object PipelineQueries {
       val e = embeddings(s, d)
       val (cents, home) = Similarity.knnIndex(e, numCentroids = 16,
         centsIn = Some(kgCents(s, d)))
-      val cdf = e.filter(col("vec_id") % 97 === 5)
-        .select(col("vec_id"), col("embedding"),
-          lit("delete").as("_change_type"))
-        .unionByName(e.filter(col("vec_id") % 31 === 7)
-          .select((col("vec_id") + 100000).as("vec_id"),
-            col("embedding"), lit("insert").as("_change_type")))
-      val maintained = Similarity.knnApplyCdf(cents, home, cdf)
+      val maintained = Similarity.knnApplyCdf(cents, home, ss20Cdf(e))
         .localCheckpoint(eager = false) // the standing frame
       Similarity.knnTopKAgainst(e.filter(col("vec_id") < 3),
         cents, maintained, k = 3, nprobe = 2)
@@ -934,17 +929,7 @@ object PipelineQueries {
     // must equal ss20's in-memory fold bit-for-bit (verbatim oracle)
     "ss23_knn_layout" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "knn_layout") { p =>
-        Similarity.knnIndexWrite(e, p, numCentroids = 16,
-          centsIn = Some(kgCents(s, d)))
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.knnLayoutApplyCdf(s, p, cdf)
-      }
+      val out = knnLayout(s, d)
       Similarity.knnTopKFromLayout(s, out, e.filter(col("vec_id") < 3),
         k = 3, nprobe = 2).orderBy("vec_id", "rank")
     },
@@ -972,7 +957,7 @@ object PipelineQueries {
         m = 4, ksub = 8, iters = 2, pqCoarse = 8, pqNprobe = 2,
         mipsBits = 6, mipsTables = 3, rerankShortlist = 20,
         knnCents = Some(kgCents(s, d)),
-        pqBooksIn = Some(pqBooks(s, d)),
+        pqBooksIn = Some(pqBooks.frames(s, d)),
         ivfCoarseIn = Some(coarse),
         ivfPqBooksIn = Some(books))
     },
@@ -1302,9 +1287,7 @@ object PipelineQueries {
     // serving straight off the source (same oracle as ss18)
     "ss21_sq8_layout" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "sq8_layout") { p =>
-        Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
-      }
+      val out = sq8Layout(s, d)
       Similarity.ivfSq8TopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2)
         .orderBy("query_id", "rank")
@@ -1318,16 +1301,7 @@ object PipelineQueries {
     // membership under them
     "ss24_sq8_layout_cdf" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "sq8cdf_layout") { p =>
-        Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.sq8LayoutApplyCdf(s, p, cdf)
-      }
+      val out = sq8CdfLayout(s, d)
       Similarity.ivfSq8TopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2)
         .orderBy("query_id", "rank")
@@ -1342,25 +1316,7 @@ object PipelineQueries {
     // the ORIGINAL corpus
     "ss27_sq8_stats_refresh" -> { (s, d) =>
       val e = embeddings(s, d)
-      val drifted = e.filter(col("vec_id") % 31 === 7)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"),
-            x => x.cast("double") * lit(1.25) + lit(0.1)).as("embedding"))
-      val out = layoutDir(s, d, "sq8refresh_layout") { p =>
-        Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"),
-            transform(col("embedding"), _.cast("double")).as("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(drifted.select(col("vec_id"), col("embedding"),
-            lit("insert").as("_change_type")))
-        Similarity.sq8LayoutApplyCdf(s, p, cdf)
-        val membership = e.filter(col("vec_id") % 97 =!= 5)
-          .select(col("vec_id"),
-            transform(col("embedding"), _.cast("double")).as("embedding"))
-          .unionByName(drifted)
-        Similarity.sq8StatsRefresh(s, p, membership)
-      }
+      val out = sq8RefreshLayout(s, d)
       Similarity.ivfSq8TopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2)
         .orderBy("query_id", "rank")
@@ -1375,19 +1331,7 @@ object PipelineQueries {
     // never matters: retrain derives everything from membership)
     "ss28_knn_centroid_retrain" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "knnretrain_layout") { p =>
-        Similarity.knnIndexWrite(e, p, numCentroids = 16,
-          centsIn = Some(kgCents(s, d)))
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.knnLayoutApplyCdf(s, p, cdf)
-        Similarity.knnCentroidRetrain(s, p, numCentroids = 16,
-          iters = 2)
-      }
+      val out = knnRetrainLayout(s, d)
       Similarity.knnTopKFromLayout(s, out, e.filter(col("vec_id") < 3),
         k = 3, nprobe = 2).orderBy("vec_id", "rank")
     },
@@ -1405,8 +1349,8 @@ object PipelineQueries {
         e.filter(col("label") === 2).select("vec_id", "embedding"),
         k = 4, numCentroids = 8, nprobe = 2,
         marginPpmMin = 1000000L,
-        centsAIn = Some(bitextCents(s, d, 1)),
-        centsBIn = Some(bitextCents(s, d, 2)))
+        centsAIn = Some(bitextCents(1)(s, d)),
+        centsBIn = Some(bitextCents(2)(s, d)))
         .orderBy("src_id", "rank")
     },
     // small-file compaction of the streamed-into kNN layout: three
@@ -1416,19 +1360,7 @@ object PipelineQueries {
     // quantizer
     "ss30_knn_compact" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "knncompact_layout") { p =>
-        Similarity.knnIndexWrite(e.filter(col("vec_id") % 10 =!= 0), p,
-          numCentroids = 16, centsIn = Some(kgCents(s, d)))
-        val cents = s.read.parquet(p + "_cents")
-        (0L until 3L).foreach { i =>
-          Similarity.homeRowsAgainst(
-            e.filter(col("vec_id") % 10 === 0 &&
-              pmod(col("vec_id") / 10, lit(3)) === i)
-              .select("vec_id", "embedding"), cents)
-            .write.mode("append").partitionBy("cid").parquet(p)
-        }
-        graft.operators.LayoutMaintenance.compact(s, p, "cid")
-      }
+      val out = knnCompactLayout(s, d)
       Similarity.knnTopKFromLayout(s, out, e.filter(col("vec_id") < 3),
         k = 3, nprobe = 2).orderBy("vec_id", "rank")
     },
@@ -1437,20 +1369,7 @@ object PipelineQueries {
     // written layout alone (no retraining, no raw corpus) — shares
     // ss28's memoized layout build
     "ss29_knn_layout_census" -> { (s, d) =>
-      val e = embeddings(s, d)
-      val out = layoutDir(s, d, "knnretrain_layout") { p =>
-        Similarity.knnIndexWrite(e, p, numCentroids = 16,
-          centsIn = Some(kgCents(s, d)))
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.knnLayoutApplyCdf(s, p, cdf)
-        Similarity.knnCentroidRetrain(s, p, numCentroids = 16,
-          iters = 2)
-      }
+      val out = knnRetrainLayout(s, d)
       Similarity.knnLayoutCensus(s, out, maxList = 32).orderBy("cid")
     },
     // CDF maintenance of the WRITTEN residual-coded index: the ss20
@@ -1459,17 +1378,7 @@ object PipelineQueries {
     // codebooks — then the maintained layout serves
     "ss25_pq_layout_cdf" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "pqcdf_layout") { p =>
-        Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4,
-          ksub = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.pqLayoutApplyCdf(s, p, cdf, m = 4)
-      }
+      val out = pqCdfLayout(s, d)
       Similarity.ivfPqTopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2, m = 4)
         .orderBy("query_id", "rank")
@@ -1480,35 +1389,14 @@ object PipelineQueries {
     // corpus fraction; the scheduled event it points at is the
     // fresh-coarse rebuild (new centroids re-home every member)
     "ss34_sq8_list_census" -> { (s, d) =>
-      val e = embeddings(s, d)
-      val out = layoutDir(s, d, "sq8cdf_layout") { p =>
-        Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.sq8LayoutApplyCdf(s, p, cdf)
-      }
+      val out = sq8CdfLayout(s, d)
       Similarity.vecListCensus(s, out, "cid").orderBy("list_id")
     },
     // the same monitor over the WRITTEN pq layout (lcid lists); for
     // the residual-coded family a coarse refresh re-encodes every
     // residual, so here too the scheduled event is the rebuild
     "ss35_pq_list_census" -> { (s, d) =>
-      val e = embeddings(s, d)
-      val out = layoutDir(s, d, "pqcdf_layout") { p =>
-        Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4,
-          ksub = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.pqLayoutApplyCdf(s, p, cdf, m = 4)
-      }
+      val out = pqCdfLayout(s, d)
       Similarity.vecListCensus(s, out, "lcid").orderBy("list_id")
     },
     // residual-distortion DRIFT census for the frozen IVF-PQ index
@@ -1520,10 +1408,7 @@ object PipelineQueries {
     // WRITTEN ss22 artifacts alone (no raw-corpus read, no retraining)
     "ss32_pq_drift_census" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "pq_layout") { p =>
-        Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4,
-          ksub = 8, iters = 2)
-      }
+      val out = pqLayout(s, d)
       val booksAll = s.read.parquet(out + "_books")
       val batch = graft.Tables.widen(e).select(col("vec_id"),
         transform(col("embedding"),
@@ -1544,24 +1429,7 @@ object PipelineQueries {
     // codebook training + codes on the MODIFIED membership
     "ss33_pq_codebook_retrain" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "pqretrain_layout") { p =>
-        Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4,
-          ksub = 8, iters = 2)
-        val cdf = e.filter(col("vec_id") % 97 === 5)
-          .select(col("vec_id"), col("embedding"),
-            lit("delete").as("_change_type"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding"), lit("insert").as("_change_type")))
-        Similarity.pqLayoutApplyCdf(s, p, cdf, m = 4)
-        val membership = e.filter(col("vec_id") % 97 =!= 5)
-          .select(col("vec_id"), col("embedding"))
-          .unionByName(e.filter(col("vec_id") % 31 === 7)
-            .select((col("vec_id") + 100000).as("vec_id"),
-              col("embedding")))
-        Similarity.pqCodebookRetrain(s, p, membership, m = 4,
-          ksub = 8, iters = 2)
-      }
+      val out = pqRetrainLayout(s, d)
       Similarity.ivfPqTopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2, m = 4)
         .orderBy("query_id", "rank")
@@ -1584,10 +1452,7 @@ object PipelineQueries {
     // through the pruned directories — same oracle as ss9
     "ss22_pq_layout" -> { (s, d) =>
       val e = embeddings(s, d)
-      val out = layoutDir(s, d, "pq_layout") { p =>
-        Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4,
-          ksub = 8, iters = 2)
-      }
+      val out = pqLayout(s, d)
       Similarity.ivfPqTopKFromLayout(s, out,
         e.filter(col("vec_id") < 3), k = 5, nprobe = 2, m = 4)
         .orderBy("query_id", "rank")
@@ -1609,7 +1474,7 @@ object PipelineQueries {
     "ss8_pq_topk" -> { (s, d) =>
       val e = embeddings(s, d)
       Similarity.pqTopK(e, e.filter(col("vec_id") < 3), k = 5,
-        m = 4, ksub = 8, iters = 2, booksIn = Some(pqBooks(s, d)))
+        m = 4, ksub = 8, iters = 2, booksIn = Some(pqBooks.frames(s, d)))
         .orderBy("query_id", "rank")
     },
     // IVF-PQ: coarse lists + residual PQ codes, probed ADC ranking —
@@ -1630,7 +1495,7 @@ object PipelineQueries {
       val e = embeddings(s, d)
       Similarity.pqRerankTopK(e, e.filter(col("vec_id") < 3), k = 5,
         shortlist = 20, m = 4, ksub = 8, iters = 2,
-        booksIn = Some(pqBooks(s, d)))
+        booksIn = Some(pqBooks.frames(s, d)))
         .orderBy("query_id", "rank")
     },
     "ss3_ivf_topk" -> { (s, d) =>
@@ -1764,17 +1629,7 @@ object PipelineQueries {
     // compacted layout equals the plain full-corpus BM25 — the t39
     // oracle IS t22's verbatim
     "t39_bm25_compact" -> { (s, d) =>
-      val all = documents(s, d).select("doc_id", "text")
-      val out = layoutDir(s, d, "bm25compact_layout") { p =>
-        Retrieval.bm25IndexWrite(all.filter(col("doc_id") % 10 =!= 0),
-          p, buckets = 64)
-        (0L until 3L).foreach { i =>
-          Retrieval.bm25LayoutAppend(s, p,
-            all.filter(col("doc_id") % 10 === 0 &&
-              pmod(col("doc_id") / 10, lit(3)) === i))
-        }
-        graft.operators.LayoutMaintenance.compactBm25(s, p)
-      }
+      val out = bm25CompactLayout(s, d)
       Retrieval.bm25TopKFromLayout(s, out,
         documents(s, d).filter(col("doc_id") < 3)
           .select(col("doc_id").as("query_id"), col("text")), k = 10)
@@ -1809,9 +1664,7 @@ object PipelineQueries {
     // chain bit-for-bit (verbatim oracle)
     "t35_rm3_layout" -> { (s, d) =>
       val all = documents(s, d)
-      val out = layoutDir(s, d, "bm25p_layout") { p =>
-        Retrieval.bm25IndexWrite(all, p, buckets = 64)
-      }
+      val out = bm25pLayout(s, d)
       Retrieval.rm3TopKFromLayout(s, out,
         all.filter(col("doc_id") < 3)
           .select(col("doc_id").as("query_id"), col("text")),
@@ -1869,9 +1722,7 @@ object PipelineQueries {
     // every scale factor
     "t40_bm25_layout_dfcap" -> { (s, d) =>
       val all = documents(s, d)
-      val out = layoutDir(s, d, "bm25p_layout") { p =>
-        Retrieval.bm25IndexWrite(all, p, buckets = 64)
-      }
+      val out = bm25pLayout(s, d)
       Retrieval.bm25TopKFromLayout(s, out,
         all.filter(col("doc_id") < 3)
           .select(col("doc_id").as("query_id"), col("text")),
@@ -1880,16 +1731,7 @@ object PipelineQueries {
     },
     "t32_bm25_layout" -> { (s, d) =>
       val all = documents(s, d)
-      val out = layoutDir(s, d, "bm25_layout") { p =>
-        Retrieval.bm25IndexWrite(all, p, buckets = 64)
-        val cdf = all.filter(col("doc_id") % 97 === 5)
-          .select(col("doc_id"), col("text"),
-            lit("delete").as("_change_type"))
-          .unionByName(all.filter(col("doc_id") % 31 === 7)
-            .select((col("doc_id") + 100000).as("doc_id"), col("text"),
-              lit("insert").as("_change_type")))
-        Retrieval.bm25LayoutApplyCdf(s, p, cdf)
-      }
+      val out = bm25Layout(s, d)
       Retrieval.bm25TopKFromLayout(s, out,
         all.filter(col("doc_id") < 3)
           .select(col("doc_id").as("query_id"), col("text")), k = 10)
@@ -1903,13 +1745,8 @@ object PipelineQueries {
     "t37_hybrid_layout" -> { (s, d) =>
       val all = documents(s, d)
       val e = embeddings(s, d)
-      val bmOut = layoutDir(s, d, "bm25p_layout") { p =>
-        Retrieval.bm25IndexWrite(all, p, buckets = 64)
-      }
-      val knnOut = layoutDir(s, d, "knnp_layout") { p =>
-        Similarity.knnIndexWrite(e, p, numCentroids = 16,
-          centsIn = Some(kgCents(s, d)))
-      }
+      val bmOut = bm25pLayout(s, d)
+      val knnOut = knnpLayout(s, d)
       val queries = all.filter(col("doc_id") < 3)
         .select(col("doc_id").as("query_id"), col("text"))
       val bm = Retrieval.bm25TopKFromLayout(s, bmOut, queries, k = 10)
@@ -2104,77 +1941,130 @@ object PipelineQueries {
       FROM a${Mx10Rounds} a JOIN src s USING (source)
       ORDER BY s.source"""
 
-  /** t23's merge model, memoized per sf-dir: the encode query's input
-    * is the TRAINED rule list (t18 gates the training itself), so
-    * repeated invocations — bench passes, verify re-runs — reuse the
-    * 8-row artifact instead of re-running the 8 training jobs. */
+  /** The ss20 CDF batch over the embeddings corpus: every
+    * vec_id ≡ 5 (mod 97) deletes, and every vec_id ≡ 7 (mod 31)
+    * re-arrives under a fresh id (+100000) — the one batch the kNN,
+    * SQ8 and PQ maintenance queries and their layouts all fold. */
+  private def ss20Cdf(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 97 === 5)
+      .select(col("vec_id"), col("embedding"),
+        lit("delete").as("_change_type"))
+      .unionByName(e.filter(col("vec_id") % 31 === 7)
+        .select((col("vec_id") + 100000).as("vec_id"),
+          col("embedding"), lit("insert").as("_change_type")))
+
+  // ---- standing artifacts: each declared once in [[Artifacts]],
+  // which memoizes, times and prewarms it ----
+
   /** The ss14-family trained coarse quantizer (16 centroids, 2 Lloyd
-    * rounds over the full embeddings corpus), memoized per sf-dir —
-    * the offline artifact ss14/ss15/dd20 all probe (the [[bpeRules]]
-    * discipline): repeated invocations — bench passes, verify
-    * re-runs — reuse the 16-row frame instead of re-running the
+    * rounds over the full embeddings corpus) — the offline artifact
+    * ss14/ss15/dd20 all probe: repeated invocations — bench passes,
+    * verify re-runs — reuse the 16-row frame instead of re-running the
     * training jobs. Training is deterministic, so the shared frame is
     * bit-identical to per-query training (each oracle still replays
     * the full Lloyd chain independently). */
-  // the TRAINED DATA (16 rows + schema) memoizes per sf-dir — plain
-  // Scala values, session-free like bpeRulesCache; the FRAME memoizes
-  // per (session, dir), because a localCheckpoint's blocks die with
-  // the session that made them and a frame reused across sessions
-  // (bench/test harness restarts in one JVM) would read dead blocks
-  private val kgCentsData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val kgCentsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  /** Drops cache entries keyed by already-stopped sessions — the
-    * multi-session-per-JVM harness would otherwise leak one entry per
-    * restarted session. Called on each cache access (entry counts are
-    * tiny: one per (session, sf-dir)). */
-  private def evictStopped[V](
-      m: scala.collection.concurrent.TrieMap[(SparkSession, String), V])
-      : Unit =
-    m.keysIterator.filter(_._1.sparkContext.isStopped).foreach(m.remove)
-  private def kgCents(s: SparkSession, d: String): DataFrame = {
-    evictStopped(kgCentsCache)
-    kgCentsCache.getOrElseUpdate((s, d), {
-      val (schema, rows) = kgCentsData.getOrElseUpdate(d, {
-        val trained = graft.operators.VectorStats
-          .kmeansCentroids(embeddings(s, d), 16, 2)
-        (trained.schema, java.util.Arrays.asList(trained.collect(): _*))
-      })
-      s.createDataFrame(rows, schema)
-    })
+  private val kgCents = Artifacts.collected("kgCents") { (s, d) =>
+    Seq(VectorStats.kmeansCentroids(embeddings(s, d), 16, 2))
   }
+
+  /** ss16's standing-index quantizer: kgCents' training chain over
+    * the REFERENCE 9/10 split (the corpus the standing index froze
+    * on, without the arriving batch). */
+  private val kgCentsRef = Artifacts.collected("kgCentsRef") { (s, d) =>
+    Seq(VectorStats.kmeansCentroids(
+      embeddings(s, d).filter(col("vec_id") % 10 =!= 0), 16, 2))
+  }
+
+  /** ss31's per-side coarse quantizers (trained on each label split
+    * alone — the bitext miner's offline artifacts), by label. */
+  private val bitextCents = Seq(1, 2).map { label =>
+    label -> Artifacts.collected(s"bitextCents$label") { (s, d) =>
+      Seq(VectorStats.kmeansCentroids(
+        embeddings(s, d).filter(col("label") === label)
+          .select("vec_id", "embedding"), 8, 2))
+    }
+  }.toMap
+
+  /** The trained unigram vocabulary at the t33 params — the standing
+    * model frame t34's encode and t36's coverage census PROBE (t33
+    * itself remains the training query and keeps the training in its
+    * timed window, exactly as t18 trains while t23 probes the
+    * memoized [[bpeRules]]). Deterministic EM ⇒ identical rows. */
+  private val unigramVocab = Artifacts.collected("unigramVocab") {
+    (s, d) => Seq(graft.operators.Tokenizer.unigramTrain(documents(s, d),
+      rounds = 2, maxPiece = 4, minCount = 2, maxWordLen = 12))
+  }
+
+  /** t43's twin over the multilingual script fixture (script tier). */
+  private val unigramVocabScript = Artifacts.collected("unigramVocabScript") {
+    (s, d) => Seq(graft.operators.Tokenizer.unigramTrain(
+      scriptFixture(documents(s, d)), rounds = 2, maxPiece = 4,
+      minCount = 2, maxWordLen = 12, scriptTier = true))
+  }
+
+  /** The trained pocket-perceptron model at the t30 params — the
+    * standing artifact t31's CALIBRATION probes (t30 remains the
+    * training query). Deterministic full-batch rounds ⇒ identical
+    * 1-row model. */
+  private val classifierModel = Artifacts.collected("classifierModel") {
+    (s, d) =>
+      val stop = Seq("the", "a", "of", "and", "to", "in", "is")
+      Seq(TextAnalysis.classifierTrain(
+        documents(s, d).withColumn("y",
+          when(size(filter(TextAnalysis.tokens(col("text")),
+            t => t.isin(stop: _*))) >= 4, 1L).otherwise(-1L)),
+        dim = 64, rounds = 8))
+  }
+
+  /** Trained PQ codebooks over the full embeddings corpus (m=4,
+    * ksub=8, iters=2) — the PQ family's offline artifact: ss8, ss12
+    * and ss13 all rank under the SAME deterministic training, so each
+    * pass was re-running 4× per-subspace Lloyd chains per query for
+    * bit-identical 8-row books. Results are unchanged by kmeans
+    * determinism — the oracle replays training independently. */
+  private val pqBooks = Artifacts.collected("pqBooks") { (s, d) =>
+    Similarity.pqCodebooks(embeddings(s, d), m = 4, ksub = 8, iters = 2)
+  }
+
+  /** The trained IVF-PQ offline state at the ss9 params (coarse=8,
+    * m=4, ksub=8, iters=2): the coarse quantizer (with self-dots) and
+    * the m RESIDUAL codebooks — shared by ss9 and ss12's ivfpq row,
+    * and the coarse frame alone by ss12's ivfsq8 row and ss18 (whose
+    * quantizer is the same kmeansCentroids(corpus, 8, 2) chain).
+    * Deterministic training ⇒ identical results. */
+  private val ivfPqTrained = Artifacts.collected("ivfPqArts") { (s, d) =>
+    val (coarse, books) = Similarity.ivfPqTrain(embeddings(s, d),
+      numCentroids = 8, m = 4, ksub = 8, iters = 2)
+    coarse +: books
+  }
+  private def ivfPqArts(s: SparkSession, d: String)
+    : (DataFrame, Seq[DataFrame]) = {
+    val frames = ivfPqTrained.frames(s, d)
+    (frames.head, frames.tail)
+  }
+
+  /** t23's merge model: the encode query's input is the TRAINED rule
+    * list (t18 gates the training itself), so repeated invocations —
+    * bench passes, verify re-runs — reuse the 8-row artifact instead
+    * of re-running the 8 training jobs. */
+  private val bpeRuleRows = Artifacts.collected("bpeRules") { (s, d) =>
+    Seq(graft.operators.Tokenizer.bpeTrain(documents(s, d), merges = 8)
+      .orderBy("rnd"))
+  }
+  private def bpeRules(s: SparkSession, d: String): Seq[(String, String)] =
+    bpeRuleRows(s, d).collect().map(r => (r.getString(1), r.getString(2)))
+      .toSeq
 
   /** The k=3 kNN GRAPH over the embeddings corpus — the standing
     * structure ss14 documents as "what semantic clustering,
     * SemDeDup-style pruning and graph community detection all start
-    * from", memoized per (session, sf-dir) like the copurchase edge
-    * list (corpus-sized derived frame, eagerly checkpointed,
-    * prewarmed). dd20 and ss19 consume it; ss14 itself stays the
-    * LIVE-BUILD query (the family's construction member, like q70 for
-    * LPA), so the build cost remains a measured number. */
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def knnGraphFrame(s: SparkSession, d: String): DataFrame = {
-    evictStopped(knnGraphCache)
-    knnGraphCache.getOrElseUpdate((s, d),
-      Similarity.knnGraph(embeddings(s, d), k = 3, numCentroids = 16,
-        nprobe = 2, cents = Some(kgCents(s, d)))
-        .localCheckpoint())
-  }
-
-  /** Frame-valued standing artifacts, memoized per (session, key) and
-    * eagerly checkpointed (the copurchase-edge-list discipline for
-    * corpus-sized derived frames): prewarm materializes them, the
-    * bench's post-prewarm RDD snapshot protects them from the
-    * inter-query scrub, and every consumer probes steady state. */
-  private val frameCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def frameMemo(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    evictStopped(frameCache)
-    frameCache.getOrElseUpdate((s, key), build.localCheckpoint())
+    * from", a corpus-sized derived frame like the copurchase edge
+    * list. dd20 and ss19 consume it; ss14 itself stays the LIVE-BUILD
+    * query (the family's construction member, like q70 for LPA), so
+    * the build cost remains a measured number. */
+  private val knnGraphFrame = Artifacts.checkpointed("knnGraph") { (s, d) =>
+    Similarity.knnGraph(embeddings(s, d), k = 3, numCentroids = 16,
+      nprobe = 2, cents = Some(kgCents(s, d)))
   }
 
   /** The STANDING in-memory BM25 index over the full corpus — t25's
@@ -2187,31 +2077,9 @@ object PipelineQueries {
     * while the memoization itself, not the parallelism, carried the
     * win; at cluster scale the index inherits the corpus's real
     * multi-split partitioning anyway). */
-  private def bm25IndexFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"bm25idx@$d")(Retrieval.bm25Index(documents(s, d)))
-
-  /** The frozen standing index's collection statistics — the
-    * vocabulary-sized df table and the 1-row corpus census — memoized
-    * BESIDE the index (they are pure functions of the frozen frame,
-    * so probe results are bit-identical): every t24/t27/t29/dc6 probe
-    * was re-aggregating the full postings for the same two artifacts.
-    * t25 keeps deriving both from its CDF-folded rows — a MAINTAINED
-    * index's stats must track its current membership. */
-  private def bm25IdxStats(s: SparkSession,
-      d: String): (DataFrame, DataFrame) =
-    (frameMemo(s, s"bm25df@$d")(bm25IndexFrame(s, d)
-        .groupBy("fp").agg(count(lit(1)).as("df"))),
-      frameMemo(s, s"bm25tot@$d")(bm25IndexFrame(s, d)
-        .select("doc_id", "len").distinct()
-        .agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))))
-
-  private def dc6IdxStats(s: SparkSession,
-      d: String): (DataFrame, DataFrame) =
-    (frameMemo(s, s"bm25df_dc6@$d")(dc6IndexFrame(s, d)
-        .groupBy("fp").agg(count(lit(1)).as("df"))),
-      frameMemo(s, s"bm25tot_dc6@$d")(dc6IndexFrame(s, d)
-        .select("doc_id", "len").distinct()
-        .agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))))
+  private val bm25IndexFrame = Artifacts.checkpointed("bm25Index") {
+    (s, d) => Retrieval.bm25Index(documents(s, d))
+  }
 
   /** dc6's standing index over the TRAIN split (eval docs held out).
     * WIDENED, unlike [[bm25IndexFrame]]: dc6 is a single-chain
@@ -2221,237 +2089,192 @@ object PipelineQueries {
     * 2.6 s total with the widened one vs 4.1 s baseline; the
     * many-cheap-reader t25/t27/t29 frame stays natural (see
     * bm25IndexFrame's doc for that measurement). */
-  private def dc6IndexFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"bm25idx_dc6@$d")(Retrieval.bm25Index(graft.Tables
-      .widen(documents(s, d).filter(col("doc_id") % 500 =!= 3))))
+  private val dc6IndexFrame = Artifacts.checkpointed("bm25IndexDc6") {
+    (s, d) => Retrieval.bm25Index(graft.Tables
+      .widen(documents(s, d).filter(col("doc_id") % 500 =!= 3)))
+  }
+
+  /** A frozen standing index's collection statistics — the
+    * vocabulary-sized df table and the 1-row corpus census — memoized
+    * BESIDE the index (they are pure functions of the frozen frame,
+    * so probe results are bit-identical): every t24/t27/t29/dc6 probe
+    * was re-aggregating the full postings for the same two artifacts.
+    * t25 keeps deriving both from its CDF-folded rows — a MAINTAINED
+    * index's stats must track its current membership. */
+  private def frozenIdxStats(name: String,
+      idx: (SparkSession, String) => DataFrame)
+    : (SparkSession, String) => (DataFrame, DataFrame) = {
+    val df = Artifacts.checkpointed(s"$name.df") { (s, d) =>
+      idx(s, d).groupBy("fp").agg(count(lit(1)).as("df"))
+    }
+    val totals = Artifacts.checkpointed(s"$name.totals") { (s, d) =>
+      idx(s, d).select("doc_id", "len").distinct()
+        .agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))
+    }
+    (s, d) => (df(s, d), totals(s, d))
+  }
+  private val bm25IdxStats = frozenIdxStats("bm25Index", bm25IndexFrame)
+  private val dc6IdxStats = frozenIdxStats("bm25IndexDc6", dc6IndexFrame)
 
   /** t28's standing TF-IDF df model (frozen on the 9/10 split). */
-  private def tfidfModelFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"tfidf@$d")(Retrieval.tfidfModel(
-      documents(s, d).filter(col("doc_id") % 10 =!= 0)))
+  private val tfidfModelFrame = Artifacts.checkpointed("tfidfModel") {
+    (s, d) => Retrieval.tfidfModel(
+      documents(s, d).filter(col("doc_id") % 10 =!= 0))
+  }
 
   /** ds2's standing DSIR rate model (frozen on the 9/10 raw split vs
     * the src0 target exemplars). */
-  private def dsirModelFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"dsir@$d") {
+  private val dsirModelFrame = Artifacts.checkpointed("dsirModel") {
+    (s, d) =>
       val all = documents(s, d)
       Mixture.dsirModel(
         all.filter(col("source") =!= "src0")
           .filter(col("doc_id") % 10 =!= 0),
         all.filter(col("source") === "src0"), buckets = 1024)
-    }
-
-  /** The trained unigram vocabulary at the t33 params — the standing
-    * model frame t34's encode and t36's coverage census PROBE (t33
-    * itself remains the training query and keeps the training in its
-    * timed window, exactly as t18 trains while t23 probes the
-    * memoized [[bpeRules]]). Deterministic EM ⇒ identical rows. */
-  private val uniVocabData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val uniVocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def collectedMemo(s: SparkSession, d: String,
-      data: scala.collection.concurrent.TrieMap[String,
-        (org.apache.spark.sql.types.StructType,
-          java.util.List[org.apache.spark.sql.Row])],
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String),
-        DataFrame])(build: => DataFrame): DataFrame = {
-    evictStopped(cache)
-    cache.getOrElseUpdate((s, d), {
-      val (sch, rows) = data.getOrElseUpdate(d, {
-        val f = build
-        (f.schema, java.util.Arrays.asList(f.collect(): _*))
-      })
-      s.createDataFrame(rows, sch)
-    })
-  }
-  /** ss16's standing-index quantizer: kgCents' training chain over
-    * the REFERENCE 9/10 split (the corpus the standing index froze
-    * on, without the arriving batch). */
-  private val kgCentsRefData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val kgCentsRefCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def kgCentsRef(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, kgCentsRefData, kgCentsRefCache)(
-      graft.operators.VectorStats.kmeansCentroids(
-        embeddings(s, d).filter(col("vec_id") % 10 =!= 0), 16, 2))
-
-  /** ss31's per-side coarse quantizers (trained on each label split
-    * alone — the bitext miner's offline artifacts). */
-  private val bitextCentsData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val bitextCentsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def bitextCents(s: SparkSession, d: String,
-      label: Int): DataFrame =
-    collectedMemo(s, s"$d#lab$label", bitextCentsData, bitextCentsCache)(
-      graft.operators.VectorStats.kmeansCentroids(
-        embeddings(s, d).filter(col("label") === label)
-          .select("vec_id", "embedding"), 8, 2))
-
-  private def unigramVocab(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, uniVocabData, uniVocabCache)(
-      graft.operators.Tokenizer.unigramTrain(documents(s, d),
-        rounds = 2, maxPiece = 4, minCount = 2, maxWordLen = 12))
-
-  /** t43's twin over the multilingual script fixture (script tier). */
-  private val uniVocabScriptData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val uniVocabScriptCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def unigramVocabScript(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, uniVocabScriptData, uniVocabScriptCache)(
-      graft.operators.Tokenizer.unigramTrain(
-        scriptFixture(documents(s, d)), rounds = 2, maxPiece = 4,
-        minCount = 2, maxWordLen = 12, scriptTier = true))
-
-  /** The trained pocket-perceptron model at the t30 params — the
-    * standing artifact t31's CALIBRATION probes (t30 remains the
-    * training query). Deterministic full-batch rounds ⇒ identical
-    * 1-row model. */
-  private val clfModelData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val clfModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def classifierModel(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, clfModelData, clfModelCache)({
-      val all = documents(s, d)
-      val stop = Seq("the", "a", "of", "and", "to", "in", "is")
-      TextAnalysis.classifierTrain(
-        all.withColumn("y",
-          when(size(filter(TextAnalysis.tokens(col("text")),
-            t => t.isin(stop: _*))) >= 4, 1L).otherwise(-1L)),
-        dim = 64, rounds = 8)
-    })
-
-  /** Trained PQ codebooks over the full embeddings corpus (m=4,
-    * ksub=8, iters=2) — the [[kgCents]] discipline for the PQ
-    * family's offline artifact: ss8, ss12 and ss13 all rank under the
-    * SAME deterministic training, so each pass was re-running 4×
-    * per-subspace Lloyd chains per query for bit-identical 8-row
-    * books. Trained once per sf-dir (plain collected rows,
-    * session-free), re-framed per session. Results are unchanged by
-    * kmeans determinism — the oracle replays training independently. */
-  private val pqBooksData = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]]
-  private val pqBooksCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[DataFrame]]
-  private def pqBooks(s: SparkSession, d: String): Seq[DataFrame] = {
-    evictStopped(pqBooksCache)
-    pqBooksCache.getOrElseUpdate((s, d), {
-      val data = pqBooksData.getOrElseUpdate(d,
-        Similarity.pqCodebooks(embeddings(s, d), m = 4, ksub = 8,
-          iters = 2)
-          .map(b => (b.schema, java.util.Arrays.asList(b.collect(): _*))))
-      data.map { case (sch, rows) => s.createDataFrame(rows, sch) }
-    })
   }
 
-  /** The trained IVF-PQ offline state at the ss9 params (coarse=8,
-    * m=4, ksub=8, iters=2): the coarse quantizer (with self-dots) and
-    * the m RESIDUAL codebooks — shared by ss9 and ss12's ivfpq row,
-    * and the coarse frame alone by ss12's ivfsq8 row and ss18 (whose
-    * quantizer is the same kmeansCentroids(corpus, 8, 2) chain).
-    * Collected-row memo like [[kgCents]]; deterministic training ⇒
-    * identical results. */
-  private val ivfPqArtsData = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]]
-  private val ivfPqArtsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[DataFrame])]
-  private def ivfPqArts(s: SparkSession, d: String)
-    : (DataFrame, Seq[DataFrame]) = {
-    evictStopped(ivfPqArtsCache)
-    ivfPqArtsCache.getOrElseUpdate((s, d), {
-      val data = ivfPqArtsData.getOrElseUpdate(d, {
-        val (coarse, books) = Similarity.ivfPqTrain(embeddings(s, d),
-          numCentroids = 8, m = 4, ksub = 8, iters = 2)
-        (coarse +: books)
-          .map(f => (f.schema, java.util.Arrays.asList(f.collect(): _*)))
-      })
-      val frames = data.map { case (sch, rows) =>
-        s.createDataFrame(rows, sch) }
-      (frames.head, frames.tail)
-    })
+  // ---- written layouts: one write closure per kind; the queries
+  // named above each kind serve through its one written path ----
+
+  // ss23
+  private val knnLayout = Artifacts.layout("knn_layout") { (s, d, p) =>
+    val e = embeddings(s, d)
+    Similarity.knnIndexWrite(e, p, numCentroids = 16,
+      centsIn = Some(kgCents(s, d)))
+    Similarity.knnLayoutApplyCdf(s, p, ss20Cdf(e))
   }
 
-  // written-layout paths memoize per (session, kind@dir) so a repeat
-  // invocation (bench pass after verify, concurrent suites on one
-  // session) reuses the already-written index instead of rewriting
-  // part files out from under a previously returned DataFrame's file
-  // listing; the nonce keeps distinct (session, dir) layouts from
-  // ever colliding on disk. Stopped sessions evict on access.
-  private val layoutSeq = new java.util.concurrent.atomic.AtomicLong
-  private val layoutCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def layoutDir(s: SparkSession, d: String, kind: String)(
-      write: String => Unit): String = {
-    evictStopped(layoutCache)
-    layoutCache.getOrElseUpdate((s, s"$kind@$d"), {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_${kind}_${s.sparkContext.applicationId}_" +
-          s"${layoutSeq.incrementAndGet()}").getPath
-      write(p)
-      p
-    })
+  // ss28, ss29
+  private val knnRetrainLayout = Artifacts.layout("knnretrain_layout") {
+    (s, d, p) =>
+      val e = embeddings(s, d)
+      Similarity.knnIndexWrite(e, p, numCentroids = 16,
+        centsIn = Some(kgCents(s, d)))
+      Similarity.knnLayoutApplyCdf(s, p, ss20Cdf(e))
+      Similarity.knnCentroidRetrain(s, p, numCentroids = 16, iters = 2)
   }
 
-  /** Force-build every memoized standing artifact this pack keys on
-    * (session, sf-dir): the trained kg centroids, the BPE merge rules,
-    * and every written layout ([[layoutDir]] kind). The bench calls
-    * this in WARMUP so each timed pass measures steady SERVING —
-    * without it, whichever query first touches a memoized layout pays
-    * its build, and per-query numbers become order/state-dependent
-    * accidents of one JVM's hash-map ordering (two consecutive rounds
-    * mis-graded t37 by ~10× exactly this way). Layout builds are side
-    * effects of query CONSTRUCTION (layoutDir writes before
-    * returning), so invoking each builder query's function once — no
-    * action needed on the returned frame — is sufficient. The name
-    * list is every query whose closure calls layoutDir; a new layout
-    * kind must be added here (the bench's steadiness, not
-    * correctness, is what drifts if it is forgotten). */
-  def prewarm(s: SparkSession, d: String): Unit = {
-    kgCents(s, d)
-    kgCentsRef(s, d)
-    pqBooks(s, d)
-    ivfPqArts(s, d)
-    knnGraphFrame(s, d)
-    bm25IndexFrame(s, d)
-    bm25IdxStats(s, d)
-    dc6IndexFrame(s, d)
-    dc6IdxStats(s, d)
-    tfidfModelFrame(s, d)
-    dsirModelFrame(s, d)
-    bitextCents(s, d, 1)
-    bitextCents(s, d, 2)
-    unigramVocab(s, d)
-    unigramVocabScript(s, d)
-    classifierModel(s, d)
-    bpeRules(s, d)
-    Seq("ss21_sq8_layout", "ss22_pq_layout", "ss23_knn_layout",
-      "ss24_sq8_layout_cdf", "ss25_pq_layout_cdf",
-      "ss27_sq8_stats_refresh", "ss28_knn_centroid_retrain",
-      "ss29_knn_layout_census", "ss30_knn_compact",
-      "ss33_pq_codebook_retrain",
-      "t32_bm25_layout", "t35_rm3_layout", "t37_hybrid_layout",
-      "t39_bm25_compact", "t40_bm25_layout_dfcap")
-      .foreach(n => queries(n)(s, d))
+  // ss30
+  private val knnCompactLayout = Artifacts.layout("knncompact_layout") {
+    (s, d, p) =>
+      val e = embeddings(s, d)
+      Similarity.knnIndexWrite(e.filter(col("vec_id") % 10 =!= 0), p,
+        numCentroids = 16, centsIn = Some(kgCents(s, d)))
+      val cents = s.read.parquet(p + "_cents")
+      (0L until 3L).foreach { i =>
+        Similarity.homeRowsAgainst(
+          e.filter(col("vec_id") % 10 === 0 &&
+            pmod(col("vec_id") / 10, lit(3)) === i)
+            .select("vec_id", "embedding"), cents)
+          .write.mode("append").partitionBy("cid").parquet(p)
+      }
+      graft.operators.LayoutMaintenance.compact(s, p, "cid")
   }
 
-  private val bpeRulesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-  private def bpeRules(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeRulesCache.getOrElseUpdate(d,
-      graft.operators.Tokenizer.bpeTrain(documents(s, d), merges = 8)
-        .orderBy("rnd").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq)
+  // t37
+  private val knnpLayout = Artifacts.layout("knnp_layout") { (s, d, p) =>
+    Similarity.knnIndexWrite(embeddings(s, d), p, numCentroids = 16,
+      centsIn = Some(kgCents(s, d)))
+  }
+
+  // ss21
+  private val sq8Layout = Artifacts.layout("sq8_layout") { (s, d, p) =>
+    Similarity.sq8IndexWrite(embeddings(s, d), p, numCentroids = 8,
+      iters = 2)
+  }
+
+  // ss24, ss34
+  private val sq8CdfLayout = Artifacts.layout("sq8cdf_layout") {
+    (s, d, p) =>
+      val e = embeddings(s, d)
+      Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
+      Similarity.sq8LayoutApplyCdf(s, p, ss20Cdf(e))
+  }
+
+  // ss27
+  private val sq8RefreshLayout = Artifacts.layout("sq8refresh_layout") {
+    (s, d, p) =>
+      val e = embeddings(s, d)
+      val drifted = e.filter(col("vec_id") % 31 === 7)
+        .select((col("vec_id") + 100000).as("vec_id"),
+          transform(col("embedding"),
+            x => x.cast("double") * lit(1.25) + lit(0.1)).as("embedding"))
+      Similarity.sq8IndexWrite(e, p, numCentroids = 8, iters = 2)
+      val cdf = e.filter(col("vec_id") % 97 === 5)
+        .select(col("vec_id"),
+          transform(col("embedding"), _.cast("double")).as("embedding"),
+          lit("delete").as("_change_type"))
+        .unionByName(drifted.select(col("vec_id"), col("embedding"),
+          lit("insert").as("_change_type")))
+      Similarity.sq8LayoutApplyCdf(s, p, cdf)
+      val membership = e.filter(col("vec_id") % 97 =!= 5)
+        .select(col("vec_id"),
+          transform(col("embedding"), _.cast("double")).as("embedding"))
+        .unionByName(drifted)
+      Similarity.sq8StatsRefresh(s, p, membership)
+  }
+
+  // ss22, ss32
+  private val pqLayout = Artifacts.layout("pq_layout") { (s, d, p) =>
+    Similarity.pqIndexWrite(embeddings(s, d), p, numCentroids = 8, m = 4,
+      ksub = 8, iters = 2)
+  }
+
+  // ss25, ss35
+  private val pqCdfLayout = Artifacts.layout("pqcdf_layout") { (s, d, p) =>
+    val e = embeddings(s, d)
+    Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4, ksub = 8,
+      iters = 2)
+    Similarity.pqLayoutApplyCdf(s, p, ss20Cdf(e), m = 4)
+  }
+
+  // ss33
+  private val pqRetrainLayout = Artifacts.layout("pqretrain_layout") {
+    (s, d, p) =>
+      val e = embeddings(s, d)
+      Similarity.pqIndexWrite(e, p, numCentroids = 8, m = 4, ksub = 8,
+        iters = 2)
+      Similarity.pqLayoutApplyCdf(s, p, ss20Cdf(e), m = 4)
+      val membership = e.filter(col("vec_id") % 97 =!= 5)
+        .select(col("vec_id"), col("embedding"))
+        .unionByName(e.filter(col("vec_id") % 31 === 7)
+          .select((col("vec_id") + 100000).as("vec_id"),
+            col("embedding")))
+      Similarity.pqCodebookRetrain(s, p, membership, m = 4, ksub = 8,
+        iters = 2)
+  }
+
+  // t35, t37, t40
+  private val bm25pLayout = Artifacts.layout("bm25p_layout") { (s, d, p) =>
+    Retrieval.bm25IndexWrite(documents(s, d), p, buckets = 64)
+  }
+
+  // t32
+  private val bm25Layout = Artifacts.layout("bm25_layout") { (s, d, p) =>
+    val all = documents(s, d)
+    Retrieval.bm25IndexWrite(all, p, buckets = 64)
+    val cdf = all.filter(col("doc_id") % 97 === 5)
+      .select(col("doc_id"), col("text"),
+        lit("delete").as("_change_type"))
+      .unionByName(all.filter(col("doc_id") % 31 === 7)
+        .select((col("doc_id") + 100000).as("doc_id"), col("text"),
+          lit("insert").as("_change_type")))
+    Retrieval.bm25LayoutApplyCdf(s, p, cdf)
+  }
+
+  // t39
+  private val bm25CompactLayout = Artifacts.layout("bm25compact_layout") {
+    (s, d, p) =>
+      val all = documents(s, d).select("doc_id", "text")
+      Retrieval.bm25IndexWrite(all.filter(col("doc_id") % 10 =!= 0),
+        p, buckets = 64)
+      (0L until 3L).foreach { i =>
+        Retrieval.bm25LayoutAppend(s, p,
+          all.filter(col("doc_id") % 10 === 0 &&
+            pmod(col("doc_id") / 10, lit(3)) === i))
+      }
+      graft.operators.LayoutMaintenance.compactBm25(s, p)
+  }
 
   private val toks = sqlToks("text")
 

@@ -32,11 +32,30 @@ class CoreQueriesSpec extends AnyFunSuite {
   }
 
   test("all queries execute at sf0.001") {
+    // the prewarm set is complete: after it, no query builds a
+    // standing artifact of its own
+    Artifacts.prewarm(spark, sf)
+    val prewarmed = Artifacts.builds.size
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       val n = df.count()
       assert(n >= 0, s"$name failed")
     }
+    val late = Artifacts.builds.drop(prewarmed).map(_.name)
+    assert(late.isEmpty, s"standing artifacts built after prewarm: $late")
+  }
+
+  test("Tables.load fails on a path rewritten after its first load") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_load").toString
+    val path = s"$dir/t.parquet"
+    spark.range(10).write.parquet(path)
+    val first = Tables.load(spark, dir, "t")
+    assert(first.count() == 10)
+    // an unchanged path reuses the memoized relation itself
+    assert(Tables.load(spark, dir, "t") eq first)
+    spark.range(25).write.mode("overwrite").parquet(path)
+    val e = intercept[IllegalStateException](Tables.load(spark, dir, "t"))
+    assert(e.getMessage.contains(path))
   }
 
   test("entry returns rows") {

@@ -3,11 +3,13 @@
 // driver planning — from real compute, and measure how much of pass-2
 // compile time the default 100-entry codegen cache throws away across
 // a 253-query surface. Usage:
-//   CODEGEN_CACHE=100  sbt "Test/runMain FloorProf"   (default cache)
-//   CODEGEN_CACHE=8192 sbt "Test/runMain FloorProf"   (bench-sized)
+//   CODEGEN_CACHE=100  sbt "Test/runMain graft.FloorProf"   (default cache)
+//   CODEGEN_CACHE=8192 sbt "Test/runMain graft.FloorProf"   (bench-sized)
 // Prints per-pass wall time + cumulative codegen compile ms +
 // generated-class count, so the cache's effect is a direct number,
 // not a bench-noise inference.
+package graft
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 
@@ -50,10 +52,7 @@ object FloorProf {
         catch { case _: Throwable => failed += 1 }
       }
     }
-    try graft.queries.PipelineQueries.prewarm(spark, dir)
-    catch { case _: Throwable => () }
-    try graft.queries.ExtendedQueries.prewarm(spark, dir)
-    catch { case _: Throwable => () }
+    Artifacts.prewarm(spark, dir)
     println(s"cache=$cache  after-prewarm: nComp=$nComp compMsEst=$compMsEst")
     if (!sys.env.contains("SKIP_EXEC")) (1 to 2).foreach { p =>
       val (c0, n0, t0) = (compMsEst, nComp, System.nanoTime())
