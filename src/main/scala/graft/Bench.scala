@@ -1,30 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // whole-stage-codegen class cache sized to the query surface
-      // (static conf, default 100): the 253-query surface generates
-      // ~7,000 distinct codegen units, so at the default size every
-      // pass re-Janino-compiles all of them (measured: 6,969
-      // recompiles / ~60-90 s of compile per pass, FloorProf). Sized
-      // to hold the surface, pass 2 recompiles ~none (234) and per-
-      // query minima measure execution, not the compiler. Scale- and
-      // core-count-independent (driver-side cache of compiled plan
-      // code, keyed by generated source; results still computed from
-      // parquet every invocation).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = LocalSpark.sfDir
+    val spark = LocalSpark.session("graft-bench")
     // absorb session/codegen/JIT startup so per-query numbers reflect
     // steady state (the first query otherwise pays ~5s of one-time
     // shuffle + whole-stage-codegen + HOF compilation)
@@ -38,16 +16,10 @@ object Bench {
         try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
         catch { case _: Throwable => () }
       }
-    // evaluation-forcing action: the noop sink consumes every output
-    // row WITH all its columns, so projection-only queries can't be
-    // pruned to a row count the way `df.count()` allows (a count lets
-    // Catalyst drop the very expressions being benchmarked)
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // two cheap real queries warm the parquet-scan and custom-
     // expression codegen paths the synthetic warmups miss
     Seq("q06_forecast_revenue", "t04_fingerprint").foreach { q =>
-      try SparkEntry.queries.get(q).foreach(f => run(f(spark, sfDir)))
+      try SparkEntry.queries.get(q).foreach(f => LocalSpark.sink(f(spark, sfDir)))
       catch { case _: Throwable => () }
     }
     // force-build every memoized standing artifact (trained centroids,
@@ -96,7 +68,7 @@ object Bench {
         val g0 = gcNowMs()
         val t0 = System.nanoTime()
         val ok =
-          try { run(fn(spark, sfDir)); true }
+          try { LocalSpark.sink(fn(spark, sfDir)); true }
           catch { case _: Throwable => failed += name; false }
         val sec = (System.nanoTime() - t0) / 1e9
         gcByQuery(name) = gcByQuery(name) :+ (gcNowMs() - g0)
@@ -119,14 +91,13 @@ object Bench {
     // separate machine drift from real regressions. Two runs, min.
     def calib(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 8L * 1000 * 1000, 1L, 32)
+      LocalSpark.sink(spark.range(0L, 8L * 1000 * 1000, 1L, 32)
         .selectExpr("id % 97 AS k",
           "id * 2654435761 % 1000000007 AS v")
         .groupBy("k")
         .agg(org.apache.spark.sql.functions.sum("v"),
           org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)))
-        .write.format("noop").mode("overwrite").save()
+            org.apache.spark.sql.functions.lit(1))))
       (System.nanoTime() - t0) / 1e9
     }
     val calibS = math.min(calib(), calib())

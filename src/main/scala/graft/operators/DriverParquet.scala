@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-side reader for the 1-row parquet MARKER artifacts (`_meta`,
   * `_fold_intent`, `_fold_done`). These are metadata, not data: every
@@ -21,8 +22,9 @@ private[graft] object DriverParquet {
     * Scans the part files in name order and returns the first row
     * found (the artifacts are written as exactly one row; empty part
     * files from over-partitioned writes are skipped). Throws on a
-    * missing directory, zero rows, or unreadable/ill-typed files —
-    * callers map those to their own absent/corrupt semantics. */
+    * missing directory or zero rows, and an unreadable/ill-typed part
+    * file throws `IllegalStateException("marker <dir> is corrupt: …")`
+    * — callers map those to their own absent/corrupt semantics. */
   def headLongs(spark: SparkSession, dir: String,
       fields: Seq[String]): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -34,17 +36,21 @@ private[graft] object DriverParquet {
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       })
       .sortBy(_.getPath.getName)
-    parts.foreach { st =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          st.getPath)
-        .withConf(conf).build()
+    val rows = parts.iterator.flatMap { st =>
       try {
-        val g = reader.read()
-        if (g != null) return fields.map(f => g.getLong(f, 0))
-      } finally reader.close()
+        val reader = org.apache.parquet.hadoop.ParquetReader
+          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+            st.getPath)
+          .withConf(conf).build()
+        try Option(reader.read()).map(g => fields.map(f => g.getLong(f, 0)))
+        finally reader.close()
+      } catch { case NonFatal(e) =>
+        throw new IllegalStateException(
+          s"marker $dir is corrupt: ${st.getPath.getName}: ${e.getMessage}", e)
+      }
     }
-    throw new IllegalStateException(
+    if (rows.hasNext) rows.next()
+    else throw new IllegalStateException(
       s"marker $dir holds no rows (expected exactly one)")
   }
 

@@ -718,10 +718,12 @@ object Retrieval {
       .select(pmod(col("doc_id"), lit(buckets.toLong)).as("dbkt"))
       .distinct().collect().map(_.get(0).toString.toLong)
     if (goneDbkts.nonEmpty) {
-      val stored = spark.read.parquet(layoutPath + "_fwd")
-        .filter(col("dbkt").isin(goneDbkts.sorted.map(lit): _*))
-        .join(broadcast(goneIds), Seq("doc_id"), "left_semi")
-        .select("doc_id", "fp", "len", "tf")
+      // a fully drained layout has no `_fwd` rows: nothing is stored
+      val stored = PartitionedLayout.readLayout(spark, layoutPath + "_fwd")
+        .map(_.filter(col("dbkt").isin(goneDbkts.sorted.map(lit): _*))
+          .join(broadcast(goneIds), Seq("doc_id"), "left_semi")
+          .select("doc_id", "fp", "len", "tf"))
+        .getOrElse(goneIdx.select("doc_id", "fp", "len", "tf").limit(0))
       val drifted = stored.withColumn("sgn", lit(1L))
         .unionByName(goneIdx.select("doc_id", "fp", "len", "tf")
           .withColumn("sgn", lit(-1L)))

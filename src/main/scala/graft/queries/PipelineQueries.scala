@@ -1053,7 +1053,8 @@ object PipelineQueries {
     // LSH-routed (wide buckets: 4 bits × 4 tables for recall), exact
     // cosine verify — the brute all-pairs cross join
     // (Similarity.cosinePairs) is test-only: a corpus×corpus cartesian
-    // must never be a declared, benched operator (see PlanShapeSpec).
+    // must never be a declared, benched operator (see GuardrailsSpec,
+    // "no declared query plans a CartesianProduct").
     "dd5_dedup_embedding" -> { (s, d) =>
       Similarity.lshCosinePairs(graft.Tables.widen(embeddings(s, d)),
         threshold = 0.4, nBits = 4, tables = 4).orderBy("a_id", "b_id")

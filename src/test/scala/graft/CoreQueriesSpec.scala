@@ -4,19 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark.session("graft-test", cpus = 4)
 }
 
 class CoreQueriesSpec extends AnyFunSuite {
@@ -56,6 +44,23 @@ class CoreQueriesSpec extends AnyFunSuite {
     spark.range(25).write.mode("overwrite").parquet(path)
     val e = intercept[IllegalStateException](Tables.load(spark, dir, "t"))
     assert(e.getMessage.contains(path))
+  }
+
+  test("Verify.dump with names writes only their results and oracle SQL") {
+    val out = java.nio.file.Files.createTempDirectory("graft_verify").toFile
+    val names = Seq("q01_pricing_summary", "q16_topk")
+    Verify.dump(spark, sf, out.getPath, names)
+    assert(out.listFiles().filter(_.isDirectory).map(_.getName).toSet ==
+      names.toSet)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, "oracle_sql.json"))
+    import scala.jdk.CollectionConverters._
+    val keys = json.fieldNames().asScala.toSet
+    assert(keys.nonEmpty &&
+      keys == names.filter(SparkEntry.oracleSql.contains).toSet)
+    intercept[IllegalArgumentException] {
+      Verify.dump(spark, sf, out.getPath, Seq("no_such_query"))
+    }
   }
 
   test("entry returns rows") {

@@ -7,7 +7,6 @@
 // document text gets a per-copy suffix token so near-dup structure
 // scales ~linearly instead of exploding into cross-copy exact-dup
 // cliques.
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object GenScale {
@@ -16,11 +15,7 @@ object GenScale {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
     val off = 10L * 1000 * 1000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", false).appName("genscale").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("genscale")
     def scaled(table: String)(
         shift: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

@@ -1,24 +1,16 @@
 // per-job profiler: run named queries and print every Spark job's
 // wall time + stage/task counts — pinpoints whether a slow query is
 // many small jobs (driver/scheduling overhead) or few big ones
-// (real compute), which TimeQ's single number cannot distinguish.
+// (real compute). Each round's `total=` is the query's construct +
+// sink wall time, the number Bench records. Usage:
+//   SPARK_GRAFT_SF_DIR=... sbt "Test/runMain JobProf q1 q2 ..."
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 object JobProf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench: steady rounds measure execution, not Janino
-      // recompiles of cache-evicted codegen units
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", false)
-      .appName("jobprof").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.LocalSpark.session("jobprof")
+    val dir = graft.LocalSpark.sfDir
 
     case class J(id: Int, var start: Long = 0L, var end: Long = 0L,
       var stages: Int = 0, var tasks: Int = 0, var desc: String = "")
@@ -46,8 +38,7 @@ object JobProf {
       (1 to 2).foreach { round =>
         jobs.synchronized { jobs.clear() }
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(n)(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
+        graft.LocalSpark.sink(graft.SparkEntry.queries(n)(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(400) // let the listener bus drain
         val snap = jobs.synchronized { jobs.values.toSeq }

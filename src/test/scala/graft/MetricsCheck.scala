@@ -3,15 +3,17 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Shuffle-volume audit (`sbt "Test/runMain graft.MetricsCheck"`):
-  * executes representative queries at sf0.1 and reports, from the
-  * executed plan's metrics, how many exchanges ran and how much data
-  * they moved — the measured backing for the shuffle-minimization
-  * claims in docs/SCALING.md. */
+/** Shuffle-volume audit
+  * (`sbt "Test/runMain graft.MetricsCheck [q1 q2 ...]"`): executes the
+  * named queries (default: every declared query) at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and reports, from the executed
+  * plan's metrics, how many exchanges ran and how much data they
+  * moved — the measured backing for the shuffle-minimization claims
+  * in docs/SCALING.md. */
 object MetricsCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkTestSession.spark
-    val sf = "/root/testdata/sf0.1"
+    val spark = LocalSpark.session("metricscheck")
+    val sf = LocalSpark.sfDir
 
     def finalPlan(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -27,32 +29,12 @@ object MetricsCheck {
         case n => Seq(n)
       }
 
-    val interesting = Seq(
-      "q01_pricing_summary", "q05_region_revenue", "q16_topk",
-      "dd1_dedup_exact", "dd2_dedup_jaccard", "dd3_dedup_minhash",
-      "dd4_dedup_simhash", "ss1_cosine_topk", "dd7_curation_pipeline",
-      "dd8_dedup_clusters", "q49_quota_sample", "t08_repetition",
-      "t09_pmi_pairs", "dc1_decontaminate", "mx1_mixture_rebalance",
-      "ve1_label_centroids", "dd9_dedup_incremental", "q52_zorder_stats",
-      "dc2_decontaminate_bloom", "dd10_dedup_clusters_stars",
-      "q54_key_skew", "ve3_kmeans", "t10_winnow", "dd12_containment",
-      "t12_hashed_bow", "tp2_chunk_manifest", "ss4_ann_recall",
-      "dd13_dedup_editdist", "tp4_token_budget", "ss5_topk_quantized",
-      "t13_pii_scrub", "t14_lm_score", "dd14_dedup_keep_best",
-      "tp5_shard_audit", "q57_compaction_bins", "mx5_mixture_sqrt",
-      "ss6_ivf_trained", "dc3_eval_overlap", "ss7_recall_int8",
-      "dd15_dedup_semantic", "t15_classifier_score",
-      "dd16_dup_spans", "t16_repeat_spans", "tp6_global_shuffle",
-      "ve5_gram_matrix", "ve6_pca_project", "ss8_pq_topk",
-      "dd17_strip_spans", "ss9_ivfpq_topk", "ve7_pca_whiten",
-      "q58_pagerank", "ve8_drift", "q59_cms_freq", "st9_cms_sketch",
-      "q60_triangles", "q62_kcore",
-      "t18_bpe_merges", "m7_scene_cuts", "dd18_soft_dedup",
-      "tp7_interleave", "q65_transitions", "ss10_mips_topk",
-      "mx6_exact_split", "q66_retention", "m8_keyframes", "t19_corpus_health", "dc4_fuzzy_contamination", "ss11_filtered_topk", "ss12_recall_families", "m9_audio_trim", "ve9_whiten_outliers", "tp8_pack_execute", "q67_label_layout", "ve10_jl_project", "mx7_epoch_plan", "dd19_simhash_incremental", "ss13_pq_rerank", "m10_image_neardup", "dc5_semantic_contamination", "t20_source_overlap", "tp9_curriculum", "tp10_pack_masks", "q68_zorder_layout", "q69_exact_quantiles", "tp11_length_batches", "mx8_effective_mixture", "ve11_cov_drift", "m11_image_incremental", "t22_bm25_topk", "t23_bpe_encode", "ve12_mrl_recall", "m12_audio_neardup", "ss14_knn_graph", "ss15_knn_census", "t24_hybrid_rrf", "dd20_semdedup_graph", "t25_bm25_standing", "ss16_knn_incremental", "dc6_bm25_contamination", "t26_tfidf_keywords", "cr1_source_caps", "ds1_dsir_select", "t27_rm3_expansion", "ds2_dsir_incremental", "mx9_topic_mixture", "tp12_span_corruption", "ss17_sq8_topk", "cr2_quality_floor", "ss18_ivfsq8_topk", "t28_tfidf_standing", "ss19_hard_negatives", "dc7_strip_eval_spans", "tp13_fim_split", "t29_retrieval_quality", "ss20_knn_cdf", "t30_classifier_train", "ds3_dsir_census", "ss21_sq8_layout", "t31_classifier_calibration", "ss22_pq_layout", "ss23_knn_layout", "t32_bm25_layout", "m13_pair_curation", "t33_unigram_train", "t34_unigram_encode", "t35_rm3_layout", "ss24_sq8_layout_cdf", "ss25_pq_layout_cdf", "ss26_sq8_drift_census", "t36_tokenizer_coverage", "ss27_sq8_stats_refresh", "t37_hybrid_layout", "ss28_knn_centroid_retrain", "ss29_knn_layout_census", "ss30_knn_compact", "ss31_bitext_margin", "t38_unigram_soft", "t39_bm25_compact", "t40_bm25_layout_dfcap", "mx10_doremi_reweight", "mx11_doremi_plan", "q70_label_propagation", "q71_lpa_incremental", "m14_image_codec_neardup", "share_topn", "q72_lpa_drift", "t41_mixed_script_tokens", "m15_audio_codec_neardup", "share_offset", "ss32_pq_drift_census", "ss33_pq_codebook_retrain", "ss34_sq8_list_census", "ss35_pq_list_census")
+    val names =
+      if (args.nonEmpty) args.toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
 
     println(f"${"query"}%-24s ${"exchanges"}%9s ${"shuffle MB"}%10s ${"out rows"}%10s")
-    interesting.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       // execute THIS plan (count() would build a separate execution
       // whose metrics we can't see)

@@ -799,4 +799,47 @@ class OperatorEdgeSpec extends AnyFunSuite {
       assert(layoutIds(f, out) == idsBefore, s"${f.name}: layout changed")
     }
   }
+
+  test("a delete fold on a drained BM25 layout fails the preimage check " +
+      "before mutating") {
+    val f = layoutFamilies.find(_.name == "bm25").get
+    val out = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_drained_delete_bm25_${spark.sparkContext.applicationId}")
+      .getPath
+    f.write(f.src, out)
+    f.fold(out, cdfOf(f.src, "delete"))
+    def intent: Seq[Long] = spark.read.parquet(out + "_fold_intent")
+      .collect().map(_.getLong(0)).toSeq
+    val intentBefore = intent
+    val e = intercept[IllegalArgumentException] {
+      f.fold(out, cdfOf(f.src.filter(col("doc_id") === 3L), "delete"))
+    }
+    assert(e.getMessage.contains("departure preimage") &&
+      e.getMessage.contains("must reference indexed documents"), e.getMessage)
+    assert(intent == intentBefore, "_fold_intent changed")
+  }
+
+  test("a corrupt BM25 _meta marker fails the probe naming the marker") {
+    import spark.implicits._
+    import graft.operators.Retrieval
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    val out = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_corrupt_meta_${spark.sparkContext.applicationId}").getPath
+    Retrieval.bm25IndexWrite(docs, out, buckets = 4)
+    val metaFiles = new java.io.File(out + "_meta").listFiles()
+    val parts = metaFiles.filter(f =>
+      f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    assert(parts.nonEmpty)
+    // garbage bytes under the part file's own name; its checksum goes
+    // too, so the read fails in the parquet footer, not the checksum
+    parts.foreach(f => java.nio.file.Files.write(f.toPath,
+      "not a parquet file".getBytes("UTF-8")))
+    metaFiles.filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    val e = intercept[IllegalStateException] {
+      Retrieval.bm25TopKFromLayout(spark, out,
+        docs.select(col("doc_id").as("query_id"), col("text")), k = 1)
+    }
+    assert(e.getMessage.contains(s"marker ${out}_meta is corrupt"),
+      e.getMessage)
+  }
 }

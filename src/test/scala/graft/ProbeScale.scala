@@ -1,21 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Scaling probe harness: time layout-served BM25 with rare-term vs
   * stopword-heavy queries to decompose 10x serving growth into the
   * layout-mechanics term (flat) and the posting-list term (grows with
   * df — the dfCapPpm territory). Numbers recorded in docs/SCALING.md;
-  * run: `[SF_DIR=...] sbt "Test/runMain graft.ProbeScale"`. */
+  * run: `[SPARK_GRAFT_SF_DIR=...] sbt "Test/runMain graft.ProbeScale"`. */
 object ProbeScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("probescale").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.1")
+    val spark = LocalSpark.session("probescale")
+    val dir = LocalSpark.sfDir
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val out = new java.io.File(sys.props("java.io.tmpdir"),
@@ -31,9 +24,8 @@ object ProbeScale {
         cap: Option[Long] = None): Unit = {
       (1 to 3).foreach { i =>
         val t0 = System.nanoTime()
-        graft.operators.Retrieval.bm25TopKFromLayout(spark, out, q,
-          k = 10, dfCapPpm = cap)
-          .write.format("noop").mode("overwrite").save()
+        LocalSpark.sink(graft.operators.Retrieval.bm25TopKFromLayout(
+          spark, out, q, k = 10, dfCapPpm = cap))
         println(f"PROBE $name run$i ${(System.nanoTime() - t0) / 1e9}%7.3f s")
       }
     }

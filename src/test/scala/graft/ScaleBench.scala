@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-runnable scaling artifact: times a named-query subset at TWO
   * sf dirs — cold (first run in this JVM at that dir, layout/centroid
   * builds included) and steady (min of the next two runs, pure
@@ -13,13 +11,13 @@ import org.apache.spark.sql.SparkSession
   * {{{
   *   sbt "Test/runMain GenScale /root/testdata/sf0.1 /tmp/graft_sf1 10"
   *   sbt "Test/runMain graft.ScaleBench /root/testdata/sf0.1 \
-  *     /tmp/graft_sf1 SCALING_r18.json [q1,q2,...]"
+  *     /tmp/graft_sf1 <out.json> [q1,q2,...]"
   * }}}
   *
-  * Timing discipline matches Bench/TimeQ: query CONSTRUCTION inside
-  * the timed window (eager operators do real work at build time) and
-  * a noop WRITE as the action (count() would let Catalyst prune the
-  * very expressions being measured). */
+  * The session is [[LocalSpark]]'s (cores from `SPARK_GRAFT_CPUS`,
+  * recorded as `"cpus"` in the JSON). Timing discipline matches
+  * Bench: query CONSTRUCTION inside the timed window (eager operators
+  * do real work at build time) and [[LocalSpark.sink]] as the action. */
 object ScaleBench {
   private val DefaultQueries = Seq(
     "q58_pagerank", "q60_triangles", "q71_lpa_incremental",
@@ -28,33 +26,24 @@ object ScaleBench {
     "dd3_dedup_minhash", "ss9_ivfpq_topk")
 
   def main(args: Array[String]): Unit = {
-    val sfA = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val sfB = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val outPath = args.lift(2).getOrElse("SCALING_r18.json")
+    if (args.length < 3) {
+      System.err.println("usage: Test/runMain graft.ScaleBench " +
+        "<sfA> <sfB> <out.json> [q1,q2,...]")
+      sys.exit(2)
+    }
+    val Array(sfA, sfB, outPath) = args.take(3)
     val names = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
     require(new java.io.File(s"$sfB/lineitem.parquet").exists(),
       s"$sfB has no tables — run GenScale first (see scaladoc)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench: sized so steady runs measure execution, not
-      // Janino recompiles of cache-evicted codegen units — read from
-      // the SAME env knob as Bench so the two sessions cannot diverge
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", false).appName("scalebench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session("scalebench", cpus)
     // JVM/codegen warmup off the timed path
-    SparkEntry.queries("dd1_dedup_exact")(spark, sfA)
-      .write.format("noop").mode("overwrite").save()
+    LocalSpark.sink(SparkEntry.queries("dd1_dedup_exact")(spark, sfA))
     def time1(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      LocalSpark.sink(SparkEntry.queries(name)(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
     def run(name: String, dir: String): (Double, Double) = {
@@ -79,7 +68,7 @@ object ScaleBench {
       f""""$n":{"a_cold":$ac%.3f,"a_steady":$as%.3f,"b_cold":$bc%.3f,"b_steady":$bs%.3f,"ratio_steady":${bs / as}%.3f}"""
     }
     val json =
-      s"""{"sf_a":"$sfA","sf_b":"$sfB","protocol":"two-phase: all sf_a rows first, then all sf_b rows; cold=first run in JVM at that dir (builds included), steady=min of next 2 (serving)","queries":${rows.mkString("{", ",", "}")}}"""
+      s"""{"sf_a":"$sfA","sf_b":"$sfB","cpus":$cpus,"protocol":"two-phase: all sf_a rows first, then all sf_b rows; cold=first run in JVM at that dir (builds included), steady=min of next 2 (serving)","queries":${rows.mkString("{", ",", "}")}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     println(s"wrote $outPath")
