@@ -9,6 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 
 /** Read-only Hadoop FileSystem that resolves `graftds:/<size>/<b64-id>`
   * paths to presigned HTTP(S) URLs and serves ranged reads, so Spark's
@@ -32,10 +33,10 @@ import org.apache.hadoop.util.Progressable
   * mid-scan (multi-hour 100 TB scans outlive typical ~1 h URL TTLs;
   * task retries alone would re-read the same dead URL).
   *
-  * Seek is implemented as close-and-reopen with an HTTP `Range`
-  * header; positioned reads issue an independent one-shot ranged GET,
-  * which is exactly the access pattern parquet footers + column chunks
-  * need (a few ranges per file, no full download).
+  * Reads go through [[HttpRangeInputStream]]: every GET is bounded
+  * and read to its end, the footer costs one suffix GET and a parquet
+  * row group's column chunks one merged GET, so a file costs a few
+  * GETs over kept-alive connections.
   */
 class PresignedUrlFileSystem extends FileSystem {
   private var fsUri: URI = _
@@ -56,7 +57,7 @@ class PresignedUrlFileSystem extends FileSystem {
     new FSDataInputStream(new HttpRangeInputStream(
       () => PresignedUrlCache.urlFor(id),
       stale => PresignedUrlCache.refresh(id, stale),
-      size))
+      size, statistics, PresignedReadCounters.onThisThread))
   }
 
   override def getFileStatus(f: Path): FileStatus = {
@@ -277,20 +278,47 @@ object PresignedUrlCache {
 private[sources] final class HttpStatusException(
     val code: Int, message: String) extends IOException(message)
 
-/** Seekable ranged-HTTP input stream (also handles `file:` URLs so
-  * stub-server tests and local smoke runs skip the HTTP hop). The URL
-  * is re-resolved through `resolve` on every (re)open and `refresh` is
-  * invoked once per open on HTTP 401/403, so an expired presigned URL
-  * heals inside the running task instead of failing the job. */
+/** Seekable, vectored ranged-HTTP input stream (also handles `file:`
+  * URLs so stub-server tests and local smoke runs skip the HTTP hop).
+  *
+  * Every object-store GET is bounded and its body is read to the end,
+  * so the JDK keeps the connection alive for the next GET:
+  *  - a read that misses near the end of the file fetches the last
+  *    [[HttpRangeInputStream.TailBytes]] with one suffix GET
+  *    (`bytes=-N`), which holds the parquet footer and its length;
+  *  - any other sequential read that misses fetches a bounded window
+  *    of [[HttpRangeInputStream.WindowBytes]] from the read position;
+  *  - positional reads, vectored reads and sequential reads of a
+  *    window or more fetch exactly the bytes asked for, less the
+  *    prefix or suffix the held tail or window already covers;
+  *  - `readVectored` merges ranges closer than
+  *    [[HttpRangeInputStream.MergeGapBytes]] (up to
+  *    [[HttpRangeInputStream.MaxMergedBytes]] each) with Hadoop's
+  *    `VectoredReadUtils` and issues one GET per merged range, so a
+  *    parquet row group costs one GET.
+  *
+  * The URL is re-resolved through `resolve` on every GET and `refresh`
+  * is invoked once per GET on HTTP 401/403, so an expired presigned URL
+  * heals inside the running task instead of failing the job. Each GET
+  * counts its body bytes and one read operation in the FileSystem's
+  * `stats` (Spark's task input metrics) and in `counters` (the scan's
+  * custom metrics). */
 private[sources] class HttpRangeInputStream(
     resolve: () => String,
     refresh: String => String,
-    size: Long)
+    size: Long,
+    stats: FileSystem.Statistics,
+    counters: PresignedReadCounters)
   extends InputStream with Seekable with PositionedReadable {
+  import HttpRangeInputStream._
 
   private var pos = 0L
-  private var in: InputStream = _
-  private var inPos = -1L // stream's current offset, -1 = closed
+  /** Bytes [heldStart, heldStart + held.length) of the file: the tail
+    * or the last sequential window, served without a GET. */
+  private var held = Array.emptyByteArray
+  private var heldStart = 0L
+  private def heldEnd: Long = heldStart + held.length
+  private def holds(at: Long): Boolean = at >= heldStart && at < heldEnd
 
   private def isLocal(url: String): Boolean =
     url.startsWith("file:") || url.startsWith("/")
@@ -302,84 +330,147 @@ private[sources] class HttpRangeInputStream(
   private def redact(url: String): String =
     PresignedUrlFileSystem.redact(url)
 
-  private def openAt(url: String, offset: Long): InputStream =
+  /** One read of file bytes [off, off + len) into `dst`: a bounded GET
+    * (a suffix GET when `suffix`, which requires off + len == size), or
+    * a positional read of a local file. Returns the body bytes
+    * received. */
+  private def get(url: String, off: Long, len: Int, suffix: Boolean,
+      dst: Array[Byte], dstOff: Int): Long =
     if (isLocal(url)) {
-      val ch = java.nio.file.Files.newInputStream(localPath(url))
-      var skipped = 0L
-      while (skipped < offset) {
-        val s = ch.skip(offset - skipped)
-        if (s <= 0) throw new EOFException(
-          s"cannot skip to $offset in ${redact(url)}")
-        skipped += s
-      }
-      ch
+      val ch = java.nio.channels.FileChannel.open(localPath(url))
+      try {
+        val buf = java.nio.ByteBuffer.wrap(dst, dstOff, len)
+        while (buf.hasRemaining)
+          if (ch.read(buf, off + buf.position() - dstOff) < 0)
+            throw new EOFException(
+              s"EOF at ${off + buf.position() - dstOff} in ${redact(url)}")
+      } finally ch.close()
+      len
     } else {
+      val range = if (suffix) s"bytes=-$len" else s"bytes=$off-${off + len - 1}"
       val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(20000)
       conn.setReadTimeout(120000)
-      if (offset > 0) conn.setRequestProperty("Range", s"bytes=$offset-")
+      conn.setRequestProperty("Range", range)
       val code = conn.getResponseCode
-      if (code != 200 && code != 206)
+      if (code != 200 && code != 206) {
+        // read the error body to its end so the connection stays alive
+        Option(conn.getErrorStream).foreach { e =>
+          try e.readAllBytes() finally e.close()
+        }
         throw new HttpStatusException(code,
-          s"HTTP $code reading ${redact(url)} at offset $offset")
-      if (offset > 0 && code == 200) {
-        // server ignored Range: emulate by skipping
-        val s = conn.getInputStream
+          s"HTTP $code reading ${redact(url)} ($range)")
+      }
+      val in = conn.getInputStream
+      try {
+        // 200 = the server ignored Range and sends the whole object:
+        // skip to the offset
+        val skip = if (code == 200) off else 0L
         var skipped = 0L
-        while (skipped < offset) {
-          val k = s.skip(offset - skipped)
+        while (skipped < skip) {
+          val k = in.skip(skip - skipped)
           if (k <= 0) throw new EOFException(
-            s"cannot skip to $offset in ${redact(url)}")
+            s"cannot skip to $off in ${redact(url)}")
           skipped += k
         }
-        s
-      } else conn.getInputStream
+        var done = 0
+        while (done < len) {
+          val n = in.read(dst, dstOff + done, len - done)
+          if (n < 0) throw new EOFException(
+            s"EOF at ${off + done} reading ${redact(url)} ($range)")
+          done += n
+        }
+        skipped + len
+      } finally in.close()
     }
 
-  /** Transient-failure retry (3 attempts with backoff) plus one
-    * expiry refresh: a 401/403 means the presigned signature lapsed,
-    * so re-resolve through the refresh callback and continue. */
-  private def openWithRetry(offset: Long): InputStream = {
+  /** [[get]] with transient-failure retry (3 attempts with backoff)
+    * plus one expiry refresh: a 401/403 means the presigned signature
+    * lapsed, so re-resolve through the refresh callback and continue. */
+  private def fetch(off: Long, len: Int, suffix: Boolean,
+      dst: Array[Byte], dstOff: Int): Unit = {
     var attempt = 0
     var refreshed = false
     while (true) {
       val url = resolve()
-      try return openAt(url, offset)
-      catch {
+      counters.gets.incrementAndGet()
+      try {
+        val got = get(url, off, len, suffix, dst, dstOff)
+        counters.bytes.addAndGet(got)
+        if (stats != null) {
+          stats.incrementBytesRead(got)
+          stats.incrementReadOps(1)
+        }
+        return
+      } catch {
         case e: HttpStatusException
             if (e.code == 401 || e.code == 403) && !refreshed =>
           refreshed = true
+          counters.refreshes.incrementAndGet()
           refresh(url) // next resolve() sees the renewed URL
-        case _: java.io.IOException if attempt < 3 =>
+        case _: IOException if attempt < 3 =>
           attempt += 1
+          counters.retries.incrementAndGet()
           Thread.sleep(200L << attempt)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  private def ensureOpen(): Unit =
-    if (in == null || inPos != pos) {
-      if (in != null) in.close()
-      in = openWithRetry(pos)
-      inPos = pos
+  /** File bytes [off, off + len) into `dst`: the prefix or suffix the
+    * held bytes cover is copied, the rest is one bounded GET. */
+  private def readRange(off: Long, dst: Array[Byte], dstOff: Int,
+      len: Int): Unit = {
+    val end = off + len
+    val lo = math.max(off, heldStart)
+    val hi = math.min(end, heldEnd)
+    val (from, to) =
+      if (lo < hi && (lo == off || hi == end)) {
+        System.arraycopy(held, (lo - heldStart).toInt, dst,
+          dstOff + (lo - off).toInt, (hi - lo).toInt)
+        if (lo == off) (hi, end) else (off, lo)
+      } else (off, end)
+    if (to > from)
+      fetch(from, (to - from).toInt, suffix = false, dst,
+        dstOff + (from - off).toInt)
+  }
+
+  /** Make the held bytes cover `at` (< size): the tail when `at` lies
+    * in it, else a window starting at `at`. */
+  private def hold(at: Long): Unit =
+    if (!holds(at)) {
+      val tail = math.min(TailBytes.toLong, size)
+      val (from, len) =
+        if (at >= size - tail) (size - tail, tail.toInt)
+        else (at, math.min(WindowBytes.toLong, size - at).toInt)
+      val bytes = new Array[Byte](len)
+      fetch(from, len, suffix = from + len == size, bytes, 0)
+      held = bytes
+      heldStart = from
     }
 
-  override def read(): Int = {
-    if (pos >= size) return -1
-    ensureOpen()
-    val b = in.read()
-    if (b >= 0) { pos += 1; inPos += 1 }
-    b
-  }
+  override def read(): Int =
+    if (pos >= size) -1
+    else {
+      hold(pos)
+      val b = held((pos - heldStart).toInt) & 0xff
+      pos += 1
+      b
+    }
 
-  override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-    if (pos >= size) return -1
-    ensureOpen()
-    val n = in.read(buf, off, len)
-    if (n > 0) { pos += n; inPos += n }
-    n
-  }
+  override def read(buf: Array[Byte], off: Int, len: Int): Int =
+    if (len == 0) 0
+    else if (pos >= size) -1
+    else {
+      var n = math.min(len.toLong, size - pos).toInt
+      if (!holds(pos) && n >= WindowBytes) readRange(pos, buf, off, n)
+      else {
+        hold(pos)
+        n = math.min(n.toLong, heldEnd - pos).toInt
+        System.arraycopy(held, (pos - heldStart).toInt, buf, off, n)
+      }
+      pos += n
+      n
+    }
 
   override def seek(newPos: Long): Unit = {
     if (newPos < 0 || newPos > size)
@@ -391,34 +482,141 @@ private[sources] class HttpRangeInputStream(
   override def seekToNewSource(targetPos: Long): Boolean = false
 
   override def read(position: Long, buffer: Array[Byte], offset: Int,
-      length: Int): Int = {
-    if (position >= size) return -1
-    val s = openWithRetry(position)
-    // min as Long BEFORE narrowing: >2 GiB remaining would overflow a
-    // (size - position).toInt to negative
-    try s.read(buffer, offset, math.min(length.toLong, size - position).toInt)
-    finally s.close()
-  }
+      length: Int): Int =
+    if (position >= size) -1
+    else {
+      // min as Long BEFORE narrowing: >2 GiB remaining would overflow
+      // a (size - position).toInt to negative
+      val n = math.min(length.toLong, size - position).toInt
+      readRange(position, buffer, offset, n)
+      n
+    }
 
   override def readFully(position: Long, buffer: Array[Byte], offset: Int,
       length: Int): Unit = {
-    var done = 0
-    val s = openWithRetry(position)
-    try {
-      while (done < length) {
-        val n = s.read(buffer, offset + done, length - done)
-        if (n < 0) throw new EOFException(
-          s"EOF at ${position + done} reading shared file")
-        done += n
-      }
-    } finally s.close()
+    if (position < 0 || position + length > size)
+      throw new EOFException(
+        s"readFully($position, $length) out of bounds [0,$size]")
+    readRange(position, buffer, offset, length)
   }
 
   override def readFully(position: Long, buffer: Array[Byte]): Unit =
     readFully(position, buffer, 0, buffer.length)
 
-  override def close(): Unit = {
-    if (in != null) { in.close(); in = null }
-    inPos = -1
+  override def minSeekForVectorReads(): Int = MergeGapBytes
+  override def maxReadSizeForVectorReads(): Int = MaxMergedBytes
+
+  override def readVectored(ranges: java.util.List[_ <: FileRange],
+      allocate: java.util.function.IntFunction[java.nio.ByteBuffer]): Unit = {
+    val sorted = VectoredReadUtils.validateAndSortRanges(ranges,
+      java.util.Optional.of(java.lang.Long.valueOf(size)))
+    sorted.forEach(_.setData(new java.util.concurrent.CompletableFuture))
+    VectoredReadUtils.mergeSortedRanges(sorted, 1, MergeGapBytes,
+      MaxMergedBytes).forEach { merged =>
+      val len = merged.getLength
+      try {
+        val buf = allocate(len)
+        if (buf.hasArray)
+          readRange(merged.getOffset, buf.array,
+            buf.arrayOffset + buf.position(), len)
+        else {
+          val bytes = new Array[Byte](len)
+          readRange(merged.getOffset, bytes, 0, len)
+          buf.put(bytes).flip()
+        }
+        merged.getUnderlying.forEach(r => r.getData.complete(
+          VectoredReadUtils.sliceTo(buf, merged.getOffset, r)))
+      } catch {
+        case e: IOException =>
+          merged.getUnderlying.forEach(_.getData.completeExceptionally(e))
+      }
+    }
   }
+
+  override def close(): Unit = held = Array.emptyByteArray
 }
+
+private[sources] object HttpRangeInputStream {
+  /** Suffix fetched by the first read near the end of a file: Arrow
+    * C++'s default parquet footer read size, enough for the footer of
+    * a wide file with a few row groups in one GET. */
+  val TailBytes: Int = 64 * 1024
+  /** Bounded read-ahead of a sequential read that misses: parquet
+    * reads a filter column's dictionary page this way before it reads
+    * the row group's column chunks, and the vectored read then takes
+    * the prefix or suffix the window holds instead of fetching it
+    * again. */
+  val WindowBytes: Int = 1024 * 1024
+  /** Vectored ranges closer than this are fetched as one GET: the gap
+    * bytes cost less than another first-byte wait. */
+  val MergeGapBytes: Int = 128 * 1024
+  /** Upper bound of one merged vectored GET, and so of the buffer it
+    * fills. */
+  val MaxMergedBytes: Int = 8 * 1024 * 1024
+}
+
+/** Per-reader tallies of the presigned read path, reported as the
+  * scans' DSv2 custom metrics: GETs issued (including refused ones),
+  * body bytes fetched, transient retries and expiry refreshes. A
+  * partition reader installs its counters on the task thread while it
+  * opens its file; `PresignedUrlFileSystem.open` hands them to the
+  * stream. */
+final class PresignedReadCounters {
+  import java.util.concurrent.atomic.AtomicLong
+  val gets = new AtomicLong
+  val bytes = new AtomicLong
+  val retries = new AtomicLong
+  val refreshes = new AtomicLong
+
+  /** Current values, in the order of [[PresignedReadCounters.supported]]. */
+  def taskMetrics: Array[CustomTaskMetric] =
+    PresignedReadCounters.Names.zip(Seq(gets, bytes, retries, refreshes))
+      .map { case (n, c) =>
+        val v = c.get
+        new CustomTaskMetric {
+          override def name(): String = n
+          override def value(): Long = v
+        }
+      }.toArray
+}
+
+object PresignedReadCounters {
+  /** The metrics a scan reading through this path declares. */
+  def supported: Array[CustomMetric] = Array(new PresignedGetsMetric,
+    new PresignedBytesMetric, new PresignedRetriesMetric,
+    new PresignedRefreshesMetric)
+
+  val Names: Seq[String] = supported.map(_.name).toSeq
+
+  private val current = new ThreadLocal[PresignedReadCounters]
+
+  /** Runs `body` with `c` as the counters of streams opened on this
+    * thread. */
+  def counting[T](c: PresignedReadCounters)(body: => T): T = {
+    val prev = current.get
+    current.set(c)
+    try body finally current.set(prev)
+  }
+
+  /** The counters installed on this thread, or fresh unreported ones
+    * for a stream opened outside a partition reader. */
+  private[sources] def onThisThread: PresignedReadCounters =
+    Option(current.get).getOrElse(new PresignedReadCounters)
+}
+
+/** A summed presigned-read counter. Spark instantiates a scan's
+  * declared metrics by class name on the driver, so each counter is a
+  * public class with a no-argument constructor. */
+sealed abstract class PresignedReadMetric(n: String, d: String)
+    extends CustomSumMetric {
+  override def name(): String = n
+  override def description(): String = d
+}
+final class PresignedGetsMetric
+  extends PresignedReadMetric("presignedGets", "presigned GETs")
+final class PresignedBytesMetric
+  extends PresignedReadMetric("presignedBytes", "presigned bytes fetched")
+final class PresignedRetriesMetric
+  extends PresignedReadMetric("presignedRetries", "presigned GET retries")
+final class PresignedRefreshesMetric
+  extends PresignedReadMetric("presignedRefreshes", "presigned URL refreshes")

@@ -28,6 +28,8 @@ class StubSharingServer(
     * /delta-sharing, raw query string or "") — the conformance spec
     * pins the exact request surface the client emits. */
   @volatile var requestLog: Vector[(String, String, String)] = Vector.empty
+  /** Every `/files` (object) request seen, in arrival order. */
+  @volatile var filesLog: Vector[StubSharingServer.FilesRequest] = Vector.empty
   @volatile var shares: Seq[String] = Seq("share1", "share2", "share3")
   /** tableName -> (schemaString, partitionColumns, files) */
   @volatile var tables: Map[String, (String, Seq[String], Seq[(String, Long, Map[String, String])])] = Map.empty
@@ -89,6 +91,10 @@ class StubSharingServer(
     * read); N > 0 = the URL lapses MID-SCAN — the footer reads
     * succeed, then a later column-chunk read hits the expiry. */
   val staleRequestBudget = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Fallback simulation: answer every `/files` request 200 with the
+    * whole body, as a server that ignores `Range` does. */
+  @volatile var ignoreRange: Boolean = false
 
   /** Throttling simulation: while positive, each request burns one
     * unit and is answered 429 with a `Retry-After: [[retryAfterSeconds]]`
@@ -348,29 +354,32 @@ class StubSharingServer(
   server.createContext("/files", (ex: HttpExchange) => {
     val name = ex.getRequestURI.getPath.stripPrefix("/files/")
     val q = Option(ex.getRequestURI.getQuery).getOrElse("")
+    val range = Option(ex.getRequestHeaders.getFirst("Range"))
+    def answer(code: Int, body: Array[Byte]): Unit = {
+      synchronized {
+        filesLog :+= StubSharingServer.FilesRequest(name, range, code,
+          if (code / 100 == 2) body.length else 0)
+      }
+      ex.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length)
+      val os = ex.getResponseBody; os.write(body); os.close()
+    }
     val sigOk = !expireFirstQueryUrls || q.contains("sig=fresh") ||
       (q.contains("sig=stale") && staleRequestBudget.getAndDecrement() > 0)
-    if (!sigOk) send(ex, 403, """{"message":"signature expired"}""")
+    if (!sigOk)
+      answer(403, """{"message":"signature expired"}""".getBytes(StandardCharsets.UTF_8))
     else httpFiles.get(name) match {
-      case None => send(ex, 404, "not found")
+      case None => answer(404, "not found".getBytes(StandardCharsets.UTF_8))
       case Some(p) =>
         val bytes = Files.readAllBytes(p)
-        val range = Option(ex.getRequestHeaders.getFirst("Range"))
-        range match {
-          case Some(r) =>
-            val spec = r.stripPrefix("bytes=")
-            val Array(fromS, toS) = if (spec.contains("-")) spec.split("-", 2)
-              else Array(spec, "")
-            val from = fromS.toInt
-            val to = if (toS.nonEmpty) toS.toInt else bytes.length - 1
-            val slice = java.util.Arrays.copyOfRange(bytes, from, to + 1)
-            ex.getResponseHeaders.set("Content-Range",
-              s"bytes $from-$to/${bytes.length}")
-            ex.sendResponseHeaders(206, slice.length)
-            val os = ex.getResponseBody; os.write(slice); os.close()
+        val n = bytes.length.toLong
+        if (range.isEmpty || ignoreRange) answer(200, bytes)
+        else StubSharingServer.byteSpan(range.get, n) match {
+          case Some((from, to)) =>
+            ex.getResponseHeaders.set("Content-Range", s"bytes $from-$to/$n")
+            answer(206, java.util.Arrays.copyOfRange(bytes, from.toInt, to.toInt + 1))
           case None =>
-            ex.sendResponseHeaders(200, bytes.length)
-            val os = ex.getResponseBody; os.write(bytes); os.close()
+            ex.getResponseHeaders.set("Content-Range", s"bytes */$n")
+            answer(416, Array.emptyByteArray)
         }
     }
   })
@@ -398,6 +407,23 @@ class StubSharingServer(
 }
 
 object StubSharingServer {
+  /** One `/files` request: file name, `Range` header, status, and the
+    * file bytes in the body (0 for an error). */
+  final case class FilesRequest(name: String, range: Option[String],
+      status: Int, bytes: Long)
+
+  /** First and last byte of `Range` header `header` over an `n`-byte
+    * file (`bytes=a-b`, `bytes=a-`, `bytes=-k`), clipped to the file
+    * end; None when unsatisfiable or malformed. */
+  def byteSpan(header: String, n: Long): Option[(Long, Long)] =
+    scala.util.Try {
+      header.trim.stripPrefix("bytes=").split("-", 2) match {
+        case Array("", k) => (n - math.min(k.toLong, n), n - 1)
+        case Array(a, b) =>
+          (a.toLong, if (b.isEmpty) n - 1 else math.min(b.toLong, n - 1))
+      }
+    }.toOption.filter { case (from, to) => from >= 0 && from <= to }
+
   /** One `/changes` action: `action` is "add", "remove", or "cdf". */
   final case class ChangeEntry(
       version: Long,

@@ -68,6 +68,10 @@ class DeltaShareChangesScan(
 
   override def toBatch: Batch = this
 
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    PresignedReadCounters.supported
+
   override def description(): String =
     s"DeltaShareChangesScan ${addr.share}.${addr.schema}.${addr.table} " +
       Seq(range.startingVersion.map(v => s"startingVersion=$v"),

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -601,6 +602,9 @@ class DeltaShareScan(
 
   override def toBatch: Batch = this
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    PresignedReadCounters.supported
+
   /** Streaming form of this scan: version-offset micro-batches over
     * the `/changes` endpoint (see [[DeltaShareMicroBatchStream]]).
     * Column pruning applies (required schemas flow through); filters
@@ -838,6 +842,28 @@ final case class DeltaSharePartitionReaderFactory(
       modificationTime = 0L,
       fileSize = p.size,
       otherConstantMetadataColumnValues = Map.empty)
+    // The file opens on the first next(), under this reader's
+    // counters: Spark's task input metrics count bytes read after
+    // createReader returns, and the parquet closure reads the footer
+    // as soon as it is called.
+    val counters = new PresignedReadCounters
+    lazy val rows: Iterator[InternalRow] =
+      PresignedReadCounters.counting(counters)(rowsOf(p, pf))
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean =
+        if (rows.hasNext) { current = rows.next(); true } else false
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        counters.taskMetrics
+    }
+  }
+
+  /** The rows of `p`'s file that survive its deletion vector and
+    * pushed-offset skip. */
+  private def rowsOf(p: DeltaShareInputPartition,
+      pf: PartitionedFile): Iterator[InternalRow] = {
     // the parquet closure may emit ColumnarBatch disguised as
     // InternalRow (vectorized path); flatten to rows for DSv2
     import scala.jdk.CollectionConverters._
@@ -866,16 +892,7 @@ final case class DeltaSharePartitionReaderFactory(
     // pushed-offset boundary skip: leading surviving rows of THIS file
     // fall inside the global offset (whole-file skips never reach here
     // — their partitions are not planned)
-    val rows: Iterator[InternalRow] =
-      if (p.rowSkip == 0L) surviving
-      else surviving.drop(
-        math.min(p.rowSkip, Int.MaxValue.toLong).toInt)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    if (p.rowSkip == 0L) surviving
+    else surviving.drop(math.min(p.rowSkip, Int.MaxValue.toLong).toInt)
   }
 }

@@ -261,41 +261,54 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       // collect, not count(): a COUNT would first probe the aggregate
       // fast path (its own /query POST), consuming the stale-signed
       // response this test needs the ROW scan to receive
-      val n = spark.read.format("deltashare")
+      val df = spark.read.format("deltashare")
         .option("endpoint", expServer.endpoint).option("bearerToken", "tok")
         .load("share1.schema1.customer")
-        .select("c_custkey").collect().length
+        .select("c_custkey")
+      val n = df.collect().length
       assert(n == spark.read.parquet(src.toString).count())
+      assert(scanMetrics(df)("presignedRefreshes") == 1)
     } finally expServer.stop()
   }
 
   test("presigned url that lapses mid-scan (after the footer reads) heals") {
     // SURVEY risk #4: a multi-hour scan outlives the URL TTL. The
-    // stale signature serves the first 2 requests (the parquet footer
-    // reads), then 403s — so the expiry fires in the MIDDLE of an
+    // stale signature serves the first request (the footer's tail
+    // GET), then 403s — so the expiry fires in the MIDDLE of an
     // in-progress task, and the reader must re-POST /query and resume
-    // without failing the task.
-    val src = Paths.get("/root/testdata/sf0.001/orders.parquet")
+    // without failing the task. lineitem (117 KB) is larger than the
+    // tail, so its column chunks need GETs after the footer's.
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
     val expServer = new StubSharingServer(expectedToken = "tok").start()
     try {
-      expServer.httpFiles = Map("orders.parquet" -> src)
+      expServer.httpFiles = Map("lineitem.parquet" -> src)
       expServer.expireFirstQueryUrls = true
-      expServer.staleRequestBudget.set(2)
+      expServer.staleRequestBudget.set(1)
       val schema = spark.read.parquet(src.toString).schema.json
-      expServer.tables = Map("orders" -> ((schema, Seq.empty,
-        Seq((s"http://127.0.0.1:${expServer.port}/files/orders.parquet",
+      expServer.tables = Map("lineitem" -> ((schema, Seq.empty,
+        Seq((s"http://127.0.0.1:${expServer.port}/files/lineitem.parquet",
           Files.size(src), Map.empty[String, String])))))
       val df = spark.read.format("deltashare")
         .option("endpoint", expServer.endpoint).option("bearerToken", "tok")
-        .load("share1.schema1.orders")
-      val total = df.agg(sum("o_totalprice")).collect()(0).getDouble(0)
+        .load("share1.schema1.lineitem")
+      val total = df.agg(sum("l_extendedprice")).collect()(0).getDouble(0)
       val direct = spark.read.parquet(src.toString)
-        .agg(sum("o_totalprice")).collect()(0).getDouble(0)
+        .agg(sum("l_extendedprice")).collect()(0).getDouble(0)
       assert(math.abs(total - direct) < 1e-6)
       assert(expServer.staleRequestBudget.get() <= 0,
         "stale URL never served the early reads — expiry was not mid-scan")
       assert(expServer.queryPosts >= 2,
         "no /query re-POST — the reader did not refresh")
+      // the footer GET was served, the next GET met the expiry, and the
+      // same stream went on: a failed and retried task would have
+      // fetched the footer again
+      val log = expServer.filesLog
+      def isTail(r: StubSharingServer.FilesRequest) =
+        r.range.exists(_.startsWith("bytes=-"))
+      assert(isTail(log(0)) && log(0).status == 206, log)
+      assert(log(1).status == 403 && !isTail(log(1)), log)
+      assert(log.drop(2).nonEmpty && log.drop(2).forall(_.status == 206), log)
+      assert(log.count(isTail) == 1, log)
     } finally expServer.stop()
   }
 
@@ -635,4 +648,161 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(sum("o_totalprice")).collect()(0).getDouble(0)
     assert(math.abs(total - totalDirect) < 1e-6)
   }
+
+  /** A stub serving `src` as the one-file table `t` over `/files`. */
+  private def fileStub(t: String, src: java.nio.file.Path): StubSharingServer = {
+    val st = new StubSharingServer(expectedToken = "tok").start()
+    st.httpFiles = Map(src.getFileName.toString -> src)
+    st.tables = Map(t -> ((spark.read.parquet(src.toString).schema.json,
+      Seq.empty, Seq((s"http://127.0.0.1:${st.port}/files/${src.getFileName}",
+        Files.size(src), Map.empty[String, String])))))
+    st
+  }
+
+  /** The presigned-read metrics of the Delta Sharing scans in `df`'s
+    * executed plan, summed over scans. */
+  private def scanMetrics(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+    val scans = PlanWalk.collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    PresignedReadCounters.Names.map(n =>
+      n -> scans.map(_.metrics(n).value).sum).toMap
+  }
+
+  /** A graftds stream over `url`, registered under a fresh file id. */
+  private def openShared(url: String, size: Long): org.apache.hadoop.fs.FSDataInputStream = {
+    val id = s"spec-${java.util.UUID.randomUUID}"
+    PresignedUrlCache.register(id, url, PresignedUrlCache.RefreshSpec(
+      DeltaSharingProfile("http://127.0.0.1:1/unused", "tok"), "s", "s", "t",
+      None, Nil, None, None))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    PresignedUrlFileSystem.register(conf)
+    val path = new org.apache.hadoop.fs.Path(PresignedUrlFileSystem.encode(id, size))
+    path.getFileSystem(conf).open(path)
+  }
+
+  /** The first two column chunks of `src`'s first row group, which
+    * parquet writes back to back. */
+  private def firstTwoChunks(src: java.nio.file.Path): Seq[org.apache.hadoop.fs.FileRange] = {
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(src.toUri),
+        new org.apache.hadoop.conf.Configuration()))
+    try reader.getFooter.getBlocks.get(0).getColumns.asScala.take(2).map(c =>
+      org.apache.hadoop.fs.FileRange.createFileRange(c.getStartingPos,
+        c.getTotalSize.toInt)).toSeq
+    finally reader.close()
+  }
+
+  /** `ranges` read vectored from `in`, as byte arrays. */
+  private def vectored(in: org.apache.hadoop.fs.FSDataInputStream,
+      ranges: Seq[org.apache.hadoop.fs.FileRange]): Seq[Array[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    in.readVectored(ranges.asJava, (n: Int) => java.nio.ByteBuffer.allocate(n))
+    ranges.map { r =>
+      val b = r.getData.get()
+      val out = new Array[Byte](b.remaining); b.get(out); out
+    }
+  }
+
+  test("presigned reads send only bounded Range headers") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = fileStub("lineitem", src)
+    try {
+      val df = readFrom(st, "lineitem")
+      df.write.format("noop").mode("overwrite").save()
+      df.select("l_partkey", "l_extendedprice")
+        .write.format("noop").mode("overwrite").save()
+      assert(df.filter(col("l_quantity") < 10).count() ==
+        spark.read.parquet(src.toString).filter(col("l_quantity") < 10).count())
+      val bounded = "bytes=(\\d+-\\d+|-\\d+)".r
+      assert(st.filesLog.nonEmpty)
+      assert(st.filesLog.forall(_.range.exists(bounded.matches)),
+        s"unbounded or missing Range: ${st.filesLog}")
+    } finally st.stop()
+  }
+
+  test("a vectored read of two adjacent column chunks costs one GET") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = fileStub("lineitem", src)
+    try {
+      val ranges = firstTwoChunks(src)
+      val in = openShared(s"http://127.0.0.1:${st.port}/files/lineitem.parquet",
+        Files.size(src))
+      val got = try vectored(in, ranges) finally in.close()
+      val local = Files.readAllBytes(src)
+      ranges.zip(got).foreach { case (r, b) =>
+        assert(b.sameElements(local.slice(r.getOffset.toInt,
+          r.getOffset.toInt + r.getLength)))
+      }
+      assert(st.filesLog.size == 1, st.filesLog)
+    } finally st.stop()
+  }
+
+  test("a server that ignores Range still yields the correct rows") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = fileStub("lineitem", src)
+    try {
+      st.ignoreRange = true
+      val got = readFrom(st, "lineitem")
+        .agg(sum("l_extendedprice"), count(lit(1))).collect()(0)
+      val want = spark.read.parquet(src.toString)
+        .agg(sum("l_extendedprice"), count(lit(1))).collect()(0)
+      assert(math.abs(got.getDouble(0) - want.getDouble(0)) < 1e-6)
+      assert(got.getLong(1) == want.getLong(1))
+      assert(st.filesLog.nonEmpty && st.filesLog.forall(_.status == 200))
+    } finally st.stop()
+  }
+
+  test("a graftds path whose URL is a local file: URL still reads") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val local = Files.readAllBytes(src)
+    val in = openShared(src.toUri.toString, local.length)
+    try {
+      val tail = new Array[Byte](8)
+      in.seek(local.length - 8L)
+      in.readFully(tail)
+      assert(tail.sameElements(local.takeRight(8)))
+      val ranges = firstTwoChunks(src)
+      vectored(in, ranges).zip(ranges).foreach { case (b, r) =>
+        assert(b.sameElements(local.slice(r.getOffset.toInt,
+          r.getOffset.toInt + r.getLength)))
+      }
+    } finally in.close()
+  }
+
+  test("scan custom metrics and task input bytes equal the stub's /files log") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = fileStub("lineitem", src)
+    try {
+      val df = readFrom(st, "lineitem").select("l_orderkey", "l_extendedprice")
+      val rows = spark.read.parquet(src.toString).count()
+      val bytesRead = new java.util.concurrent.atomic.AtomicLong
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null)
+            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        assert(df.collect().length == rows)
+        org.apache.spark.GraftTestBridge
+          .waitUntilListenerBusEmpty(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(l)
+      val log = st.filesLog
+      val served = log.map(_.bytes).sum
+      assert(log.nonEmpty && served > 0)
+      assert(scanMetrics(df) == Map(
+        "presignedGets" -> log.size.toLong,
+        "presignedBytes" -> served,
+        "presignedRetries" -> 0L,
+        "presignedRefreshes" -> 0L))
+      assert(bytesRead.get == served)
+    } finally st.stop()
+  }
 }
+
+private object PlanWalk
+  extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
