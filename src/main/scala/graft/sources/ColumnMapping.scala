@@ -16,14 +16,16 @@ import org.apache.spark.sql.types._
   * Division of labor here:
   *  - the CLIENT remaps `partitionValues` keys and parsed stats keys
   *    to logical right after parsing a `/query` response
-  *    ([[remapFiles]]), so the whole scan/pruning/stats stack stays
-  *    logical-only;
-  *  - the SCAN renames the schemas it hands Spark's parquet reader to
-  *    physical ([[toPhysical]] — a pure positional rename, recursive
-  *    through nested structs/arrays/maps, driven by the TABLE
-  *    schema's metadata so pruned subtrees keep their mapping);
-  *    `InternalRow`s are positional, so logical names re-attach for
-  *    free above the reader.
+  *    ([[remapFiles]]), and the `partitionValues` keys of a `/changes`
+  *    response's actions ([[remapChanges]]), so the whole
+  *    scan/pruning/stats stack stays logical-only;
+  *  - the one parquet read of the batch, change-feed and streaming
+  *    scans (`ParquetRead.build`) renames the schemas it hands Spark's
+  *    parquet reader to physical ([[toPhysical]] — a pure positional
+  *    rename, recursive through nested structs/arrays/maps, driven by
+  *    the TABLE schema's metadata so pruned subtrees keep their
+  *    mapping); `InternalRow`s are positional, so logical names
+  *    re-attach for free above the reader.
   *
   * Both `name` and `id` modes read correctly through physical-NAME
   * matching: column-mapping writers store the physical name in the
@@ -78,16 +80,22 @@ object ColumnMapping {
   def physicalToLogical(table: StructType): Map[String, String] =
     table.fields.map(f => physicalName(f) -> f.name).toMap
 
+  /** physical → logical for top-level names (unknown names kept) when
+    * column mapping is active; None when it is off. */
+  private def logicalName(meta: TableMetadata): Option[String => String] =
+    mode(meta).map { _ =>
+      val p2l = physicalToLogical(
+        DataType.fromJson(meta.schemaString).asInstanceOf[StructType])
+      k => p2l.getOrElse(k, k)
+    }
+
   /** Remap a `/query` response's physical-keyed side channels
     * (partitionValues keys, parsed stats minValues/maxValues/nullCount
     * keys) to logical names. No-op when column mapping is off. */
   def remapFiles(meta: TableMetadata, files: Seq[FileAction]): Seq[FileAction] =
-    if (mode(meta).isEmpty) files
-    else {
-      val table = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
-      val p2l = physicalToLogical(table)
+    logicalName(meta).fold(files) { l =>
       def logical[V](m: Map[String, V]): Map[String, V] =
-        m.map { case (k, v) => p2l.getOrElse(k, k) -> v }
+        m.map { case (k, v) => l(k) -> v }
       files.map { f =>
         f.copy(
           partitionValues = logical(f.partitionValues),
@@ -98,16 +106,16 @@ object ColumnMapping {
       }
     }
 
+  /** Remap a `/changes` response's `partitionValues` keys to logical
+    * names. No-op when column mapping is off. */
+  def remapChanges(meta: TableMetadata,
+      actions: Seq[ChangeAction]): Seq[ChangeAction] =
+    logicalName(meta).fold(actions)(l => actions.map(a => a.copy(
+      partitionValues = a.partitionValues.map { case (k, v) => l(k) -> v })))
+
   /** Logical-name view of `partitionColumns` — Delta stores logical
     * names there, but remapping is harmless when a writer stored
     * physical ones. */
   def logicalPartitionColumns(meta: TableMetadata): Seq[String] =
-    mode(meta) match {
-      case None => meta.partitionColumns
-      case Some(_) =>
-        val table =
-          DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
-        val p2l = physicalToLogical(table)
-        meta.partitionColumns.map(c => p2l.getOrElse(c, c))
-    }
+    logicalName(meta).fold(meta.partitionColumns)(meta.partitionColumns.map)
 }

@@ -14,6 +14,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 final class DeltaSharingException(val status: Int, message: String)
   extends RuntimeException(message)
 
+object DeltaSharingClient {
+  /** Throttling and server faults: the only HTTP statuses retried. */
+  private[sources] def transient(code: Int): Boolean = code == 429 || code >= 500
+}
+
 /** Delta Sharing REST client over JDK `java.net.http` (zero extra
   * dependencies).
   *
@@ -82,8 +87,7 @@ class DeltaSharingClient(
         val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
         val code = resp.statusCode()
         if (code >= 200 && code < 300) return resp
-        // retry only on transient server-side codes
-        if (code == 429 || code >= 500) last = Right(resp)
+        if (DeltaSharingClient.transient(code)) last = Right(resp)
         else throw httpError(resp)
       } catch {
         case e: DeltaSharingException => throw e
@@ -448,7 +452,8 @@ class DeltaSharingClient(
           else 0L,
         expirationTimestamp = optText(outer, "expirationTimestamp"))
     }
-    TableChanges(meta, actions)
+    // column mapping: logical partitionValues keys, as for /query
+    TableChanges(meta, ColumnMapping.remapChanges(meta, actions))
   }
 
   /** Residual deletion-vector guard. Snapshot reads now APPLY

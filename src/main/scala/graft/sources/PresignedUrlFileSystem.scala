@@ -386,7 +386,8 @@ private[sources] class HttpRangeInputStream(
 
   /** [[get]] with transient-failure retry (3 attempts with backoff)
     * plus one expiry refresh: a 401/403 means the presigned signature
-    * lapsed, so re-resolve through the refresh callback and continue. */
+    * lapsed, so re-resolve through the refresh callback and continue.
+    * Only [[retryable]] failures are retried. */
   private def fetch(off: Long, len: Int, suffix: Boolean,
       dst: Array[Byte], dstOff: Int): Unit = {
     var attempt = 0
@@ -408,12 +409,19 @@ private[sources] class HttpRangeInputStream(
           refreshed = true
           counters.refreshes.incrementAndGet()
           refresh(url) // next resolve() sees the renewed URL
-        case _: IOException if attempt < 3 =>
+        case e: IOException if attempt < 3 && retryable(e) =>
           attempt += 1
           counters.retries.incrementAndGet()
           Thread.sleep(200L << attempt)
       }
     }
+  }
+
+  /** Transport errors and HTTP 429/5xx; any other HTTP status (404,
+    * 416, a 403 after the refresh) is definitive. */
+  private def retryable(e: IOException): Boolean = e match {
+    case h: HttpStatusException => DeltaSharingClient.transient(h.code)
+    case _ => true
   }
 
   /** File bytes [off, off + len) into `dst`: the prefix or suffix the

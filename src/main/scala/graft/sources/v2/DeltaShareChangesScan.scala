@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources._
 
@@ -35,7 +34,11 @@ import graft.sources._
   * `_change_type` is the last REQUIRED data column (read from the
   * file) and the appended constants are `partCols ++ [version,
   * timestamp]` — identical ordinals either way, so the scan stays on
-  * the vectorized reader for every file.
+  * the vectorized reader for every file. The two shapes are the
+  * scan's two [[ParquetRead]]s, built by the same function as the
+  * batch and streaming reads; each input partition names its read, and
+  * a column-mapped table's files are read by physical name (the client
+  * has already remapped the actions' `partitionValues` to logical).
   *
   * Scale: one `InputPartition` per changed file, executor-parallel,
   * through the same [[PresignedUrlFileSystem]] id-indirection and
@@ -95,65 +98,34 @@ class DeltaShareChangesScan(
     actions.map(actionPartition).toArray
 
   private def actionPartition(a: ChangeAction): DeltaShareInputPartition = {
-    val isCdf = a.changeType == "cdf"
+    val cdf = a.changeType == "cdf"
     val constants = a.partitionValues ++
-      (if (isCdf) Map.empty[String, String]
+      (if (cdf) Map.empty[String, String]
        else Map(ChangeTypeCol ->
          (if (a.changeType == "add") "insert" else "delete"))) +
       (CommitVersionCol -> a.version.toString) +
       (CommitTimestampCol ->
         java.time.Instant.ofEpochMilli(a.timestamp).toString)
     DeltaShareInputPartition.forFile(a.url, a.id, a.size, constants)
-      .copy(isCdf = isCdf)
+      .copy(read = if (cdf) CdfRead else AddRemoveRead)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val fmt = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-    // buildReaderWithPartitionValues MUTATES the conf it is given
-    // (requested-schema keys); the two closures below must not share
-    // one Configuration or the second build poisons the first's reads
-    val confAddRemove = new Configuration(hadoopConf)
-    val confCdf = new Configuration(hadoopConf)
-    val opts = Map("returning_batch" -> "false", "mergeSchema" -> "false")
-    // add/remove: whole file is one change kind — _change_type rides
-    // the constant (pseudo-partition) side together with the real
-    // partition columns and the commit metadata
-    val addRemovePartSchema = StructType(
-      StructField(ChangeTypeCol, StringType, nullable = true) +:
-        (partitionSchema.fields :+
-          StructField(CommitVersionCol, LongType, nullable = false) :+
-          StructField(CommitTimestampCol, TimestampType, nullable = false)))
-    val addRemoveRead = fmt.buildReaderWithPartitionValues(
-      sparkSession = spark,
-      dataSchema = dataSchema,
-      partitionSchema = addRemovePartSchema,
-      requiredSchema = dataSchema,
-      filters = Nil,
-      options = opts,
-      hadoopConf = confAddRemove)
-    val addRemove = DeltaSharePartitionReaderFactory(
-      addRemoveRead, addRemoveRead,
-      addRemovePartSchema, new SerializableConfiguration(confAddRemove),
-      refreshSpec)
-    // cdf: the file itself carries _change_type per row — it is the
-    // last required DATA column; only partition + commit columns are
-    // appended
-    val cdfDataSchema = StructType(dataSchema.fields :+
-      StructField(ChangeTypeCol, StringType, nullable = true))
-    val cdfPartSchema = StructType(partitionSchema.fields :+
-      StructField(CommitVersionCol, LongType, nullable = false) :+
+    val commitCols = Seq(
+      StructField(CommitVersionCol, LongType, nullable = false),
       StructField(CommitTimestampCol, TimestampType, nullable = false))
-    val cdfRead = fmt.buildReaderWithPartitionValues(
-      sparkSession = spark,
-      dataSchema = cdfDataSchema,
-      partitionSchema = cdfPartSchema,
-      requiredSchema = cdfDataSchema,
-      filters = Nil,
-      options = opts,
-      hadoopConf = confCdf)
-    val cdf = DeltaSharePartitionReaderFactory(cdfRead, cdfRead,
-      cdfPartSchema, new SerializableConfiguration(confCdf), refreshSpec)
-    DeltaShareChangesReaderFactory(addRemove, cdf)
+    val changeType = StructField(ChangeTypeCol, StringType, nullable = true)
+    def read(data: StructType, constants: StructType) = ParquetRead.build(
+      spark, meta, data, constants, data, Nil, hadoopConf)
+    // add/remove: the whole file is one change kind, so _change_type
+    // rides the constant (pseudo-partition) side together with the real
+    // partition columns and the commit metadata; cdf: the file itself
+    // carries _change_type per row as the last required DATA column
+    DeltaSharePartitionReaderFactory(Vector(
+      read(dataSchema,
+        StructType(changeType +: (partitionSchema.fields ++ commitCols))),
+      read(StructType(dataSchema.fields :+ changeType),
+        StructType(partitionSchema.fields ++ commitCols))), refreshSpec)
   }
 }
 
@@ -163,6 +135,11 @@ object DeltaShareChangesScan {
   val CommitTimestampCol = "_commit_timestamp"
   val CdfColumns: Set[String] =
     Set(ChangeTypeCol, CommitVersionCol, CommitTimestampCol)
+
+  /** Indexes of the scan's two reads in its reader factory: the
+    * add/remove read first, then the cdf read. */
+  private val AddRemoveRead = 0
+  private val CdfRead = 1
 
   /** Output schema of a CDF read: data columns, `_change_type`,
     * partition columns, `_commit_version`, `_commit_timestamp` (see
@@ -179,17 +156,5 @@ object DeltaShareChangesScan {
         part :+
         StructField(CommitVersionCol, LongType, nullable = false) :+
         StructField(CommitTimestampCol, TimestampType, nullable = false))
-  }
-}
-
-/** Dispatches to the add/remove or cdf reader per input partition;
-  * both emit the same ordinal layout (see [[DeltaShareChangesScan]]). */
-final case class DeltaShareChangesReaderFactory(
-    addRemove: DeltaSharePartitionReaderFactory,
-    cdf: DeltaSharePartitionReaderFactory) extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val p = partition.asInstanceOf[DeltaShareInputPartition]
-    if (p.isCdf) cdf.createReader(partition) else addRemove.createReader(partition)
   }
 }

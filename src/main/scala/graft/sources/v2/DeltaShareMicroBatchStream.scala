@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources._
 
@@ -42,7 +41,6 @@ class DeltaShareMicroBatchStream(
     addr: TableAddress,
     meta: TableMetadata,
     dataSchema: StructType,
-    partitionSchema: StructType,
     requiredDataSchema: StructType,
     requiredPartitionSchema: StructType,
     hadoopConf: Configuration,
@@ -121,24 +119,13 @@ class DeltaShareMicroBatchStream(
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new Configuration(hadoopConf)
-    val readFunc = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = dataSchema,
-        partitionSchema = requiredPartitionSchema,
-        requiredSchema = requiredDataSchema,
-        filters = Nil,
-        options = Map("returning_batch" -> "false", "mergeSchema" -> "false"),
-        hadoopConf = conf)
-    DeltaSharePartitionReaderFactory(readFunc, readFunc,
-      requiredPartitionSchema,
-      new SerializableConfiguration(conf),
+  override def createReaderFactory(): PartitionReaderFactory =
+    DeltaSharePartitionReaderFactory(
+      Vector(ParquetRead.build(spark, meta, dataSchema,
+        requiredPartitionSchema, requiredDataSchema, Nil, hadoopConf)),
       PresignedUrlCache.RefreshSpec(
         addr.profile, addr.share, addr.schema, addr.table,
         jsonPredicateHints = None, predicateHints = Nil, limitHint = None,
         version = None,
         changesRange = Some(ChangesRange(Some(initialVersion + 1), None))))
-  }
 }

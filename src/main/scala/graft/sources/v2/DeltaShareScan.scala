@@ -12,9 +12,7 @@ import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources._
 
@@ -612,7 +610,7 @@ class DeltaShareScan(
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new DeltaShareMicroBatchStream(spark, addr, meta, dataSchema,
-      partitionSchema, requiredDataSchema, requiredPartitionSchema,
+      requiredDataSchema, requiredPartitionSchema,
       hadoopConf, streamStartingVersion, streamIgnoreDeletes,
       streamMaxVersionsPerTrigger)
 
@@ -700,9 +698,11 @@ class DeltaShareScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
+    val dvRead = if (separateDvRead) 1 else 0
     def mk(f: FileAction, rowSkip: Long): DeltaShareInputPartition =
       DeltaShareInputPartition.forFile(f.url, f.id, f.size, f.partitionValues)
-        .copy(dv = f.deletionVector, rowSkip = rowSkip)
+        .copy(dv = f.deletionVector, rowSkip = rowSkip,
+          read = if (f.deletionVector.isDefined) dvRead else 0)
     offset match {
       case None => topNPrunedFiles.map(mk(_, 0L)).toArray
       case Some(off) =>
@@ -731,46 +731,29 @@ class DeltaShareScan(
     }
   }
 
+  /** Whether deletion-vector files need their own, filter-free read:
+    * row-group / page skipping would break the physical row-index
+    * correspondence the anti-filter depends on. Only when the listing
+    * carries a DV and there are parquet filters to drop; every data
+    * filter is a residual Spark re-applies above the scan, so only the
+    * pushdown optimization is lost, and only for DV files. */
+  private lazy val separateDvRead: Boolean =
+    ParquetRead.pushable(meta, dataFilters.toSeq).nonEmpty &&
+      listing(request).exists(_.deletionVector.isDefined)
+
   override def createReaderFactory(): PartitionReaderFactory = {
-    // Build Spark's own parquet reader closure (vectorized decode,
-    // row-group pruning from pushed data filters, partition-column
-    // append) — it is designed to be serialized to executors. Only the
-    // REQUIRED partition columns are appended: the reader's output
-    // must line up ordinally with readSchema() (requiredDataSchema ++
-    // requiredPartitionSchema), so passing the full partitionSchema
-    // here would misalign any query projecting a subset of ≥2
-    // partition columns.
-    // column mapping: hand the parquet reader PHYSICAL column names
-    // (renamed positionally from the logical schemas, mapping taken
-    // from the TABLE schema's field metadata) — InternalRows are
-    // positional, so logical names re-attach for free above the
-    // reader. Parquet-level filter pushdown is skipped for mapped
-    // tables (logical filter names would not match physical columns);
-    // data filters are residuals Spark re-applies, so only the
-    // row-group-skip optimization is lost.
-    val mapped = ColumnMapping.mode(meta).isDefined
-    def phys(schema: StructType): StructType =
-      if (mapped) ColumnMapping.toPhysical(schema,
-        StructType(dataSchema.fields)) else schema
-    def buildRead(filters: Seq[Filter]) =
-      new ParquetFileFormat().buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = phys(dataSchema),
-        partitionSchema = requiredPartitionSchema,
-        requiredSchema = phys(requiredDataSchema),
-        filters = if (mapped) Nil else filters,
-        options = Map(
-          "returning_batch" -> "false",
-          "mergeSchema" -> "false"),
-        hadoopConf = hadoopConf)
-    // DV-bearing files read with NO parquet-level filters: row-group /
-    // page skipping would break the physical row-index correspondence
-    // the anti-filter depends on. Safe because every data filter is a
-    // RESIDUAL (pushFilters) that Spark re-applies above the scan —
-    // only the pushdown optimization is lost, and only for DV files.
-    DeltaSharePartitionReaderFactory(buildRead(dataFilters.toSeq),
-      buildRead(Nil), requiredPartitionSchema,
-      new SerializableConfiguration(hadoopConf), refreshSpec)
+    // Only the REQUIRED partition columns are appended: the reader's
+    // output must line up ordinally with readSchema()
+    // (requiredDataSchema ++ requiredPartitionSchema), so passing the
+    // full partitionSchema here would misalign any query projecting a
+    // subset of ≥2 partition columns.
+    def read(filters: Seq[Filter]) = ParquetRead.build(spark, meta,
+      dataSchema, requiredPartitionSchema, requiredDataSchema, filters,
+      hadoopConf)
+    val filtered = read(dataFilters.toSeq)
+    DeltaSharePartitionReaderFactory(
+      if (separateDvRead) Vector(filtered, read(Nil)) else Vector(filtered),
+      refreshSpec)
   }
 }
 
@@ -789,9 +772,9 @@ final case class DeltaShareInputPartition(
     partitionValues: Map[String, String],
     fileId: String,
     url: String,
-    /** CDF scans: this file carries a per-row `_change_type` column
-      * (see [[DeltaShareChangesScan]]); always false for batch scans. */
-    isCdf: Boolean = false,
+    /** Index of the [[ParquetRead]] in the reader factory's `reads`
+      * that reads this file. */
+    read: Int = 0,
     /** Deletion-vector descriptor for THIS file, when present: the
       * reader fetches + decodes it task-side and anti-filters by
       * physical row index. */
@@ -817,11 +800,58 @@ object DeltaShareInputPartition {
         url = "")
 }
 
+/** Spark's parquet reader closure for one shape of shared file, and
+  * the partition schema whose values it appends to every row. */
+final case class ParquetRead(
+    func: PartitionedFile => Iterator[InternalRow],
+    partitionSchema: StructType)
+
+object ParquetRead {
+  /** The filters a read pushes into parquet: none for a column-mapped
+    * table, whose logical filter names would not match the physical
+    * columns (data filters are residuals Spark re-applies, so only the
+    * row-group skip is lost). */
+  def pushable(meta: TableMetadata, filters: Seq[Filter]): Seq[Filter] =
+    if (ColumnMapping.mode(meta).isDefined) Nil else filters
+
+  /** The one way a share scan builds Spark's parquet reader closure
+    * (vectorized decode, row-group pruning from `filters`, partition
+    * append; made to be serialized to executors). It yields rows, not
+    * columnar batches (`returning_batch=false`).
+    *  - Column mapping: `dataSchema` and `requiredSchema` go in under
+    *    the PHYSICAL names in `dataSchema`'s field metadata (unmapped
+    *    fields keep theirs); rows are positional, so logical names
+    *    re-attach for free above the reader.
+    *  - The build mutates the Hadoop conf it is given (requested-schema
+    *    keys) and broadcasts it, so each read gets its own copy. */
+  def build(spark: SparkSession, meta: TableMetadata,
+      dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter],
+      hadoopConf: Configuration): ParquetRead = {
+    def phys(schema: StructType): StructType =
+      if (ColumnMapping.mode(meta).isDefined)
+        ColumnMapping.toPhysical(schema, dataSchema)
+      else schema
+    ParquetRead(
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        sparkSession = spark,
+        dataSchema = phys(dataSchema),
+        partitionSchema = partitionSchema,
+        requiredSchema = phys(requiredSchema),
+        filters = pushable(meta, filters),
+        options = Map("returning_batch" -> "false", "mergeSchema" -> "false"),
+        hadoopConf = new Configuration(hadoopConf)),
+      partitionSchema)
+  }
+}
+
+/** Reads each [[DeltaShareInputPartition]] with the [[ParquetRead]] it
+  * names: a batch scan has one read, plus a filter-free one for
+  * deletion-vector files when it pushes parquet filters; a change-feed
+  * scan has one for add/remove files and one for cdf files; a stream
+  * has one. */
 final case class DeltaSharePartitionReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
-    readFuncUnfiltered: PartitionedFile => Iterator[InternalRow],
-    partitionSchema: StructType,
-    conf: SerializableConfiguration,
+    reads: IndexedSeq[ParquetRead],
     refreshSpec: PresignedUrlCache.RefreshSpec) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -832,9 +862,10 @@ final case class DeltaSharePartitionReaderFactory(
     // refresh already renewed.
     if (p.fileId.nonEmpty)
       PresignedUrlCache.register(p.fileId, p.url, refreshSpec)
+    val read = reads(p.read)
     val pf = PartitionedFile(
       partitionValues =
-        PartitionValues.toInternalRow(p.partitionValues, partitionSchema),
+        PartitionValues.toInternalRow(p.partitionValues, read.partitionSchema),
       filePath = SparkPath.fromUrlString(p.path),
       start = 0L,
       length = p.size,
@@ -848,7 +879,7 @@ final case class DeltaSharePartitionReaderFactory(
     // as soon as it is called.
     val counters = new PresignedReadCounters
     lazy val rows: Iterator[InternalRow] =
-      PresignedReadCounters.counting(counters)(rowsOf(p, pf))
+      PresignedReadCounters.counting(counters)(rowsOf(p, read.func(pf)))
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean =
@@ -863,16 +894,7 @@ final case class DeltaSharePartitionReaderFactory(
   /** The rows of `p`'s file that survive its deletion vector and
     * pushed-offset skip. */
   private def rowsOf(p: DeltaShareInputPartition,
-      pf: PartitionedFile): Iterator[InternalRow] = {
-    // the parquet closure may emit ColumnarBatch disguised as
-    // InternalRow (vectorized path); flatten to rows for DSv2
-    import scala.jdk.CollectionConverters._
-    val read = if (p.dv.isDefined) readFuncUnfiltered else readFunc
-    val raw: Iterator[InternalRow] =
-      read(pf).asInstanceOf[Iterator[Any]].flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case row: InternalRow => Iterator.single(row)
-      }
+      raw: Iterator[InternalRow]): Iterator[InternalRow] = {
     // deletion-vector application: the partition is one WHOLE file
     // read in physical order with no parquet-level skipping, so the
     // iterator position IS the file row index — a merge-walk against

@@ -37,8 +37,12 @@ object JobProf {
       // second run = steady state (layouts/memos built on the first)
       (1 to 2).foreach { round =>
         jobs.synchronized { jobs.clear() }
+        // the description rides the local properties AQE captures, so
+        // jobs it submits from its own threads carry it too
+        spark.sparkContext.setJobDescription(s"$n round $round")
         val t0 = System.nanoTime()
-        graft.LocalSpark.sink(graft.SparkEntry.queries(n)(spark, dir))
+        try graft.LocalSpark.sink(graft.SparkEntry.queries(n)(spark, dir))
+        finally spark.sparkContext.setJobDescription(null)
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(400) // let the listener bus drain
         val snap = jobs.synchronized { jobs.values.toSeq }

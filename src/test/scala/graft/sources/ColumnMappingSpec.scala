@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.sources.testing.StubSharingServer
+import graft.sources.testing.StubSharingServer.ChangeEntry
 
 /** Column-mapping reads: tables whose parquet files store stable
   * physical `col-<uuid>` names while the logical schema carries the
@@ -146,6 +147,89 @@ class ColumnMappingSpec extends AnyFunSuite with BeforeAndAfterAll {
       server.deltaFormatTables = Set.empty
       server.tableConfig = Map.empty
       server.tables -= "cm_part"
+    }
+  }
+
+  test("change feed of a name-mapped partitioned table reads logical values") {
+    import spark.implicits._
+    // an add file and a cdf file, both stored under physical names
+    val (addUrl, addSize) = writeOne(
+      Seq((1L, "a1"), (2L, "a2")).toDF("col-aaa", "col-bbb"), "cm_cdf_add")
+    val (cdfUrl, cdfSize) = writeOne(
+      Seq((3L, "c3", "update_preimage"), (3L, "c3x", "update_postimage"))
+        .toDF("col-aaa", "col-bbb", "_change_type"), "cm_cdf_cdf")
+    val logical = StructType(Seq(
+      mappedField("k", "col-aaa", 1, LongType),
+      mappedField("v", "col-bbb", 2, StringType),
+      mappedField("p", "col-ppp", 3, StringType)))
+    server.tables += ("cm_cdf" -> ((logical.json, Seq("p"),
+      Seq((addUrl, addSize, Map("col-ppp" -> "x"))))))
+    server.tableConfig = Map("cm_cdf" ->
+      Map("delta.columnMapping.mode" -> "name"))
+    server.changeFeed = Map("cm_cdf" -> Seq(
+      ChangeEntry(1, 1700000001000L, "add", addUrl, addSize,
+        Map("col-ppp" -> "x")),
+      ChangeEntry(2, 1700000002000L, "cdf", cdfUrl, cdfSize,
+        Map("col-ppp" -> "y"))))
+    try {
+      val rows = spark.read.format("deltashare")
+        .option("endpoint", server.endpoint).option("bearerToken", "tok")
+        .option("readChangeFeed", "true").option("startingVersion", "1")
+        .load("share1.schema1.cm_cdf")
+        .select("k", "v", "_change_type", "p", "_commit_version")
+        .collect().map(_.toSeq).toSet
+      assert(rows == Set(
+        Seq(1L, "a1", "insert", "x", 1L), Seq(2L, "a2", "insert", "x", 1L),
+        Seq(3L, "c3", "update_preimage", "y", 2L),
+        Seq(3L, "c3x", "update_postimage", "y", 2L)))
+    } finally {
+      server.tableConfig = Map.empty
+      server.changeFeed = Map.empty
+      server.tables -= "cm_cdf"
+    }
+  }
+
+  test("stream of an id-mapped partitioned table reads logical values") {
+    import spark.implicits._
+    val (urlA, sizeA) = writeOne(
+      Seq((1L, 10L), (2L, 20L)).toDF("col-aaa", "col-qqq"), "cm_stream_a")
+    val (urlB, sizeB) = writeOne(
+      Seq((3L, 30L)).toDF("col-aaa", "col-qqq"), "cm_stream_b")
+    val logical = StructType(Seq(
+      mappedField("k", "col-aaa", 1, LongType),
+      mappedField("q", "col-qqq", 2, LongType),
+      mappedField("p", "col-ppp", 3, StringType)))
+    server.tables += ("cm_stream" -> ((logical.json, Seq("p"),
+      Seq((urlA, sizeA, Map("col-ppp" -> "x"))))))
+    server.tableConfig = Map("cm_stream" ->
+      Map("delta.columnMapping.mode" -> "id"))
+    server.changeFeed = Map("cm_stream" -> Seq(
+      ChangeEntry(1, 1700000001000L, "add", urlA, sizeA,
+        Map("col-ppp" -> "x")),
+      ChangeEntry(2, 1700000002000L, "add", urlB, sizeB,
+        Map("col-ppp" -> "y"))))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Any]]()
+    try {
+      val q = spark.readStream.format("deltashare")
+        .option("endpoint", server.endpoint).option("bearerToken", "tok")
+        .option("startingVersion", "1")
+        .load("share1.schema1.cm_stream")
+        .writeStream
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-cm-ckpt").toString)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.select("k", "q", "p").collect().foreach(r => got.add(r.toSeq))
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      import scala.jdk.CollectionConverters._
+      assert(got.asScala.toSet ==
+        Set(Seq(1L, 10L, "x"), Seq(2L, 20L, "x"), Seq(3L, 30L, "y")))
+    } finally {
+      server.tableConfig = Map.empty
+      server.changeFeed = Map.empty
+      server.tables -= "cm_stream"
     }
   }
 }

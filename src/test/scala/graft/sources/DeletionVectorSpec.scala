@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -188,6 +189,62 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       server.deltaFormatTables = Set.empty
       server.fileDeletionVectors = Map.empty
       server.tables -= "dv_url"
+    }
+  }
+
+  test("mixed DV table: the DV file reads unfiltered, the other prunes row groups") {
+    import spark.implicits._
+    // two files of 1,000 rows each, sorted by k, in row groups of about
+    // 100 rows: A (k 0..999) carries a DV, B (k 1000..1999) does not
+    def writeGrouped(from: Long, name: String): (String, Long) = {
+      val dir = tmp.resolve(name)
+      (from until from + 1000L).map(i => (i, s"row$i")).toDF("k", "v")
+        .coalesce(1).write.option("parquet.block.size", "1024")
+        .mode("overwrite").parquet(dir.toString)
+      var p: java.nio.file.Path = null
+      graft.sources.testing.DirWalk.eachChild(dir)(f =>
+        if (f.getFileName.toString.endsWith(".parquet")) p = f)
+      (p.toUri.toString, Files.size(p))
+    }
+    val (urlA, sizeA) = writeGrouped(0L, "dv_mixed_a")
+    val (urlB, sizeB) = writeGrouped(1000L, "dv_mixed_b")
+    val deleted = Seq(5L, 950L, 951L, 999L)
+    val data = DeletionVectors.serialize(deleted)
+    server.tables += ("dv_mixed" -> ((
+      StructType.fromDDL("k BIGINT, v STRING").json, Seq.empty[String],
+      Seq((urlA, sizeA, Map.empty[String, String]),
+        (urlB, sizeB, Map.empty[String, String])))))
+    server.deltaFormatTables = Set("dv_mixed")
+    server.fileDeletionVectors = Map(urlA ->
+      s"""{"storageType":"i","pathOrInlineDv":"${DeletionVectors.z85Encode(data)}","sizeInBytes":${data.length},"cardinality":${deleted.size}}""")
+    def query = sharedRead("dv_mixed")
+      .filter(col("k") >= 950 && col("k") < 1100).select("k")
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      PlanWalk.collect(df.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }
+    def parquetReads(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      scans(df).map(_.readerFactory
+        .asInstanceOf[graft.sources.v2.DeltaSharePartitionReaderFactory]
+        .reads.size)
+    try {
+      val df = query
+      val got = df.collect().map(_.getLong(0)).sorted
+      assert(got.toSeq == (950L until 1100L).filterNot(deleted.contains))
+      // B's row groups outside [950, 1100) were pruned: the scan emits
+      // fewer rows than A's 996 survivors plus all of B
+      val scanned = scans(df).map(_.metrics("numOutputRows").value).sum
+      assert(scanned > 0 && scanned < 996 + 1000,
+        s"no row group of B was pruned: $scanned")
+      // one read for B (filtered), a filter-free one for A's DV
+      assert(parquetReads(df) == Seq(2))
+      // without any DV the same query builds a single read
+      server.fileDeletionVectors = Map.empty
+      assert(parquetReads(query) == Seq(1))
+    } finally {
+      server.deltaFormatTables = Set.empty
+      server.fileDeletionVectors = Map.empty
+      server.tables -= "dv_mixed"
     }
   }
 

@@ -191,6 +191,9 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(m => m.contains("HTTP 404") ||
       m.contains("nope.parquet")), s"unhelpful error: ${messages(e)}")
+    // a 404 is definitive: one GET, no retries
+    assert(server.filesLog.count(_.name == "nope.parquet") == 1,
+      server.filesLog)
   }
 
   test("two partition columns: projecting only the later one stays aligned") {
