@@ -258,20 +258,26 @@ object DeletionVectors {
   // ---- fetch + decode ----------------------------------------------
 
   /** Materialize a supported descriptor into ascending deleted row
-    * indexes. `i` decodes inline; `p` fetches the absolute URL (http/
-    * https via the JDK client, file: for tests) and unframes the DV
-    * file (`[version 1][… size int32 BE, data, crc …]` at `offset` —
-    * writers differ on whether `offset` points at the size prefix or
-    * the data, so both framings are accepted when unambiguous). */
+    * indexes. `i` decodes inline; `p` reads the absolute URL's DV file
+    * (`[version 1][… size int32 BE, data, crc …]`) through
+    * [[HttpTransport]] with one bounded GET of its first
+    * `offset + 4 + sizeInBytes` bytes, counted in the reading task's
+    * presigned counters. Writers differ on whether `offset` points at
+    * the size prefix or the data, so both framings are accepted when
+    * unambiguous. */
   def positions(dv: Descriptor): Array[Long] = dv.storageType match {
     case "i" =>
       deserialize(z85Decode(dv.pathOrInlineDv, dv.sizeInBytes.toInt))
     case "p" =>
-      val bytes = fetch(dv.pathOrInlineDv)
-      require(bytes.nonEmpty && bytes(0) == 1,
-        s"unsupported DV file version ${if (bytes.isEmpty) "<empty>" else bytes(0)}")
       val off = dv.offset.toInt
       val size = dv.sizeInBytes.toInt
+      val counters = PresignedReadCounters.onThisThread
+      val bytes = HttpTransport.request(() => dv.pathOrInlineDv,
+          headers = Seq("Range" -> s"bytes=0-${off + 4 + size - 1}"),
+          counters = Some(counters))(_.body.readNBytes(off + 4 + size))
+      counters.bytes.addAndGet(bytes.length)
+      require(bytes.nonEmpty && bytes(0) == 1,
+        s"unsupported DV file version ${if (bytes.isEmpty) "<empty>" else bytes(0)}")
       def i32be(at: Int): Int =
         ((bytes(at) & 0xff) << 24) | ((bytes(at + 1) & 0xff) << 16) |
           ((bytes(at + 2) & 0xff) << 8) | (bytes(at + 3) & 0xff)
@@ -291,22 +297,4 @@ object DeletionVectors {
         s"deletion vector storageType '$other' is not readable by this " +
           "client")
   }
-
-  private def fetch(pathOrUrl: String): Array[Byte] =
-    if (pathOrUrl.startsWith("http://") || pathOrUrl.startsWith("https://")) {
-      val client = java.net.http.HttpClient.newHttpClient()
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(pathOrUrl))
-          .GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-      if (resp.statusCode() != 200)
-        throw new DeltaSharingException(resp.statusCode(),
-          s"deletion vector fetch failed: HTTP ${resp.statusCode()}")
-      resp.body()
-    } else if (pathOrUrl.startsWith("file:")) {
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(java.net.URI.create(pathOrUrl)))
-    } else {
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(pathOrUrl))
-    }
 }

@@ -24,7 +24,7 @@ object DeltaShare {
     StructField("shareId", StringType)))
 
   private def client(spark: SparkSession): DeltaSharingClient =
-    new DeltaSharingClient(DeltaSharingProfile.fromSession(spark))
+    new DeltaSharingClient(DeltaSharingProfile.resolve(_ => None, Some(spark)))
 
   /** `delta_share_list()` — all shares
     * (`duck_delta_share_extension.cpp:42-49`). */

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.time.Duration
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.jdk.CollectionConverters._
-import scala.jdk.OptionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -15,12 +13,15 @@ final class DeltaSharingException(val status: Int, message: String)
   extends RuntimeException(message)
 
 object DeltaSharingClient {
-  /** Throttling and server faults: the only HTTP statuses retried. */
-  private[sources] def transient(code: Int): Boolean = code == 429 || code >= 500
+  /** A sharing-server answer: the body and a header lookup. */
+  private[sources] final case class Reply(body: String,
+      header: String => Option[String])
+
+  private val mapper = new ObjectMapper()
 }
 
-/** Delta Sharing REST client over JDK `java.net.http` (zero extra
-  * dependencies).
+/** Delta Sharing REST client over the connector's one HTTP transport
+  * ([[HttpTransport]]; zero extra dependencies).
   *
   * Endpoint surface mirrors the reference client
   * (`/root/reference/src/delta_sharing_client.cpp:183-465`) with the
@@ -33,16 +34,8 @@ object DeltaSharingClient {
   *  - transient HTTP failures are retried with backoff (absent in the
   *    reference).
   */
-class DeltaSharingClient(
-    profile: DeltaSharingProfile,
-    requestTimeout: Duration = Duration.ofSeconds(60),
-    maxRetries: Int = 3) {
-
-  private val mapper = new ObjectMapper()
-  private lazy val http: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(20))
-    .followRedirects(HttpClient.Redirect.NORMAL)
-    .build()
+class DeltaSharingClient(profile: DeltaSharingProfile) {
+  import DeltaSharingClient.{mapper, Reply}
 
   // ---- transport ---------------------------------------------------
 
@@ -60,72 +53,38 @@ class DeltaSharingClient(
       method: String,
       path: String,
       query: Map[String, String] = Map.empty,
-      postBody: Option[String] = None): HttpResponse[String] = {
+      postBody: Option[String] = None): Reply = {
     val qs =
       if (query.isEmpty) ""
       else query.map { case (k, v) =>
         s"${urlEnc(k)}=${urlEnc(v)}"
       }.mkString("?", "&", "")
-    val uri = URI.create(s"${profile.endpoint}$path$qs")
-    val b = HttpRequest.newBuilder(uri)
-      .timeout(requestTimeout)
-      .header("Authorization", s"Bearer ${profile.bearerToken}")
-      .header("delta-sharing-capabilities",
-        "responseformat=parquet,delta;readerfeatures=deletionvectors,columnmapping")
-    val req = method match {
-      case "GET" => b.GET().build()
-      case "HEAD" => b.method("HEAD", HttpRequest.BodyPublishers.noBody()).build()
-      case "POST" => b.header("Content-Type", "application/json")
-        .POST(HttpRequest.BodyPublishers.ofString(postBody.getOrElse("{}")))
-        .build()
-      case other => throw new IllegalArgumentException(s"method $other")
-    }
-    var attempt = 0
-    var last: Either[Throwable, HttpResponse[String]] = null
-    while (attempt <= maxRetries) {
-      try {
-        val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-        val code = resp.statusCode()
-        if (code >= 200 && code < 300) return resp
-        if (DeltaSharingClient.transient(code)) last = Right(resp)
-        else throw httpError(resp)
-      } catch {
-        case e: DeltaSharingException => throw e
-        case e: java.io.IOException => last = Left(e)
-      }
-      attempt += 1
-      if (attempt <= maxRetries) {
-        // a throttling server's Retry-After (seconds, per RFC 9110 —
-        // Delta Sharing servers send it on 429) overrides the
-        // exponential backoff; capped so a misbehaving header can't
-        // park a task for minutes
-        val retryAfterMs: Option[Long] = last match {
-          case Right(resp) =>
-            val h = resp.headers().firstValue("Retry-After")
-            if (h.isPresent)
-              h.get().toLongOption.map(s => math.min(s * 1000L, 10000L))
-            else None
-          case _ => None
-        }
-        Thread.sleep(retryAfterMs.getOrElse(100L << attempt))
-      }
-    }
-    last match {
-      case Right(resp) => throw httpError(resp)
-      case Left(e) => throw new DeltaSharingException(0,
-        s"delta sharing request failed after ${maxRetries + 1} attempts: ${e.getMessage}")
+    val payload = if (method == "POST") Some(postBody.getOrElse("{}")) else None
+    val headers = Seq(
+      "Authorization" -> s"Bearer ${profile.bearerToken}",
+      "delta-sharing-capabilities" ->
+        "responseformat=parquet,delta;readerfeatures=deletionvectors,columnmapping") ++
+      payload.map(_ => "Content-Type" -> "application/json")
+    try HttpTransport.request(() => s"${profile.endpoint}$path$qs", method,
+        headers, payload.map(_.getBytes(UTF_8))) { resp =>
+      Reply(new String(resp.body.readAllBytes(), UTF_8), resp.header)
+    } catch {
+      case e: HttpTransport.StatusException => throw httpError(e)
+      case e: java.io.IOException => throw new DeltaSharingException(0,
+        s"delta sharing request failed after ${HttpTransport.MaxRetries + 1} " +
+          s"attempts: ${e.getMessage}")
     }
   }
 
-  private def httpError(resp: HttpResponse[String]): DeltaSharingException = {
+  private def httpError(e: HttpTransport.StatusException): DeltaSharingException = {
     val msg =
       try {
-        val node = mapper.readTree(resp.body())
+        val node = mapper.readTree(e.body)
         if (node.hasNonNull("message")) node.get("message").asText()
-        else resp.body()
-      } catch { case _: Exception => resp.body() }
-    new DeltaSharingException(resp.statusCode(),
-      s"delta sharing server returned HTTP ${resp.statusCode()}: $msg")
+        else e.body
+      } catch { case _: Exception => e.body }
+    new DeltaSharingException(e.status,
+      s"delta sharing server returned HTTP ${e.status}: $msg")
   }
 
   /** Percent-encoding safe in BOTH path segments and query values:
@@ -159,7 +118,7 @@ class DeltaSharingClient(
       val query = Map.newBuilder[String, String]
       if (maxResults > 0) query += ("maxResults" -> maxResults.toString)
       token.foreach(t => query += ("pageToken" -> t))
-      val node = mapper.readTree(perform("GET", path, query.result()).body())
+      val node = mapper.readTree(perform("GET", path, query.result()).body)
       if (node.hasNonNull("items"))
         node.get("items").elements().asScala.foreach(n => out += parse(n))
       token = optText(node, "nextPageToken")
@@ -174,7 +133,7 @@ class DeltaSharingClient(
 
   def getShare(name: String): Share = {
     val node = mapper.readTree(
-      perform("GET", s"/shares/${urlEnc(name)}").body())
+      perform("GET", s"/shares/${urlEnc(name)}").body)
     val s = if (node.hasNonNull("share")) node.get("share") else node
     Share(s.get("name").asText(), optText(s, "id"))
   }
@@ -215,7 +174,7 @@ class DeltaSharingClient(
       .getOrElse(Map.empty[String, String])
     val lines = parseNdjson(
       perform("GET", s"${tablePath(share, schema, table)}/metadata",
-        query).body())
+        query).body)
     val meta = parseMetadataLines(lines).getOrElse(
       throw new DeltaSharingException(0,
         s"metadata response for $share.$schema.$table had no metaData line"))
@@ -232,8 +191,7 @@ class DeltaSharingClient(
     * only as the fallback here. */
   def queryTableVersion(share: String, schema: String, table: String): Long = {
     val resp = perform("HEAD", tablePath(share, schema, table))
-    resp.headers().firstValue("Delta-Table-Version").toScala
-      .map(_.toLong)
+    resp.header("Delta-Table-Version").map(_.toLong)
       .getOrElse(queryTableMetadata(share, schema, table).version)
   }
 
@@ -266,7 +224,7 @@ class DeltaSharingClient(
     if (version.isEmpty) timestamp.foreach(t => body.put("timestamp", t))
     val lines = parseNdjson(
       perform("POST", s"${tablePath(share, schema, table)}/query",
-        postBody = Some(mapper.writeValueAsString(body))).body())
+        postBody = Some(mapper.writeValueAsString(body))).body)
     val meta = parseMetadataLines(lines).getOrElse(
       throw new DeltaSharingException(0,
         s"query response for $share.$schema.$table had no metaData line"))
@@ -421,7 +379,7 @@ class DeltaSharingClient(
       query: Map[String, String]): TableChanges = {
     val lines = parseNdjson(
       perform("GET", s"${tablePath(share, schema, table)}/changes",
-        query).body())
+        query).body)
     val meta = parseMetadataLines(lines).getOrElse(
       throw new DeltaSharingException(0,
         s"changes response for $share.$schema.$table had no metaData line"))

@@ -166,18 +166,23 @@ object DeltaSharingProfile {
       credentialsVersion = version, expirationTime = expiration)
   }
 
-  /** Resolve from SparkSession conf, falling back to env vars (the
-    * same precedence the reference implements), with a configured
-    * profile FILE taking priority over inline endpoint/token. */
-  def fromSession(spark: org.apache.spark.sql.SparkSession): DeltaSharingProfile = {
-    def conf(key: String, env: String): String =
-      spark.conf.getOption(key)
-        .orElse(sys.env.get(env))
-        .getOrElse("")
-    val profileFile = conf(ProfileConf, ProfileEnv)
+  /** The one profile resolution of reads, catalogs and the
+    * [[DeltaShare]] API: each setting comes from `option` (a read or
+    * catalog option: `profile`, `endpoint`, `bearerToken`), then the
+    * session conf (`spark.deltaShare.*`), then the environment — the
+    * reference's settings-then-env precedence — and a profile FILE
+    * beats an inline endpoint and token (the `.share` document is
+    * what real providers distribute). */
+  def resolve(option: String => Option[String],
+      spark: Option[org.apache.spark.sql.SparkSession] =
+        org.apache.spark.sql.SparkSession.getActiveSession)
+    : DeltaSharingProfile = {
+    def setting(opt: String, conf: String, env: String): String =
+      option(opt).orElse(spark.flatMap(_.conf.getOption(conf)))
+        .orElse(sys.env.get(env)).getOrElse("")
+    val profileFile = setting("profile", ProfileConf, ProfileEnv)
     if (profileFile.nonEmpty) fromFile(profileFile)
-    else DeltaSharingProfile(
-      stripSlash(conf(EndpointConf, EndpointEnv)),
-      conf(TokenConf, TokenEnv))
+    else DeltaSharingProfile(setting("endpoint", EndpointConf, EndpointEnv),
+      setting("bearerToken", TokenConf, TokenEnv))
   }
 }

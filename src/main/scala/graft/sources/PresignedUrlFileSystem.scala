@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{EOFException, IOException, InputStream}
-import java.net.{HttpURLConnection, URI, URL}
+import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
@@ -272,14 +272,8 @@ object PresignedUrlCache {
   private[graft] def cachedUrlCount: Int = synchronized { urls.size }
 }
 
-/** Non-2xx from the object store; carries the status so the retry loop
-  * can distinguish expiry (403 → refresh) from transient failures. The
-  * message holds only the redacted URL. */
-private[sources] final class HttpStatusException(
-    val code: Int, message: String) extends IOException(message)
-
-/** Seekable, vectored ranged-HTTP input stream (also handles `file:`
-  * URLs so stub-server tests and local smoke runs skip the HTTP hop).
+/** Seekable, vectored ranged-HTTP input stream over [[HttpTransport]]
+  * (which also reads `file:` URLs and local paths).
   *
   * Every object-store GET is bounded and its body is read to the end,
   * so the JDK keeps the connection alive for the next GET:
@@ -299,13 +293,14 @@ private[sources] final class HttpStatusException(
   *
   * The URL is re-resolved through `resolve` on every GET and `refresh`
   * is invoked once per GET on HTTP 401/403, so an expired presigned URL
-  * heals inside the running task instead of failing the job. Each GET
+  * heals inside the running task instead of failing the job; transient
+  * failures follow the transport's retry rule. Each GET
   * counts its body bytes and one read operation in the FileSystem's
   * `stats` (Spark's task input metrics) and in `counters` (the scan's
   * custom metrics). */
 private[sources] class HttpRangeInputStream(
     resolve: () => String,
-    refresh: String => String,
+    refresh: String => Unit,
     size: Long,
     stats: FileSystem.Statistics,
     counters: PresignedReadCounters)
@@ -320,108 +315,37 @@ private[sources] class HttpRangeInputStream(
   private def heldEnd: Long = heldStart + held.length
   private def holds(at: Long): Boolean = at >= heldStart && at < heldEnd
 
-  private def isLocal(url: String): Boolean =
-    url.startsWith("file:") || url.startsWith("/")
-
-  private def localPath(url: String): java.nio.file.Path =
-    if (url.startsWith("file:")) java.nio.file.Paths.get(URI.create(url))
-    else java.nio.file.Paths.get(url)
-
-  private def redact(url: String): String =
-    PresignedUrlFileSystem.redact(url)
-
-  /** One read of file bytes [off, off + len) into `dst`: a bounded GET
-    * (a suffix GET when `suffix`, which requires off + len == size), or
-    * a positional read of a local file. Returns the body bytes
-    * received. */
-  private def get(url: String, off: Long, len: Int, suffix: Boolean,
-      dst: Array[Byte], dstOff: Int): Long =
-    if (isLocal(url)) {
-      val ch = java.nio.channels.FileChannel.open(localPath(url))
-      try {
-        val buf = java.nio.ByteBuffer.wrap(dst, dstOff, len)
-        while (buf.hasRemaining)
-          if (ch.read(buf, off + buf.position() - dstOff) < 0)
-            throw new EOFException(
-              s"EOF at ${off + buf.position() - dstOff} in ${redact(url)}")
-      } finally ch.close()
-      len
-    } else {
-      val range = if (suffix) s"bytes=-$len" else s"bytes=$off-${off + len - 1}"
-      val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(20000)
-      conn.setReadTimeout(120000)
-      conn.setRequestProperty("Range", range)
-      val code = conn.getResponseCode
-      if (code != 200 && code != 206) {
-        // read the error body to its end so the connection stays alive
-        Option(conn.getErrorStream).foreach { e =>
-          try e.readAllBytes() finally e.close()
-        }
-        throw new HttpStatusException(code,
-          s"HTTP $code reading ${redact(url)} ($range)")
-      }
-      val in = conn.getInputStream
-      try {
-        // 200 = the server ignored Range and sends the whole object:
-        // skip to the offset
-        val skip = if (code == 200) off else 0L
-        var skipped = 0L
-        while (skipped < skip) {
-          val k = in.skip(skip - skipped)
-          if (k <= 0) throw new EOFException(
-            s"cannot skip to $off in ${redact(url)}")
-          skipped += k
-        }
-        var done = 0
-        while (done < len) {
-          val n = in.read(dst, dstOff + done, len - done)
-          if (n < 0) throw new EOFException(
-            s"EOF at ${off + done} reading ${redact(url)} ($range)")
-          done += n
-        }
-        skipped + len
-      } finally in.close()
-    }
-
-  /** [[get]] with transient-failure retry (3 attempts with backoff)
-    * plus one expiry refresh: a 401/403 means the presigned signature
-    * lapsed, so re-resolve through the refresh callback and continue.
-    * Only [[retryable]] failures are retried. */
+  /** File bytes [off, off + len) into `dst` with one bounded GET (a
+    * suffix GET when `suffix`, which requires off + len == size),
+    * counting its body bytes. */
   private def fetch(off: Long, len: Int, suffix: Boolean,
       dst: Array[Byte], dstOff: Int): Unit = {
-    var attempt = 0
-    var refreshed = false
-    while (true) {
-      val url = resolve()
-      counters.gets.incrementAndGet()
-      try {
-        val got = get(url, off, len, suffix, dst, dstOff)
-        counters.bytes.addAndGet(got)
-        if (stats != null) {
-          stats.incrementBytesRead(got)
-          stats.incrementReadOps(1)
-        }
-        return
-      } catch {
-        case e: HttpStatusException
-            if (e.code == 401 || e.code == 403) && !refreshed =>
-          refreshed = true
-          counters.refreshes.incrementAndGet()
-          refresh(url) // next resolve() sees the renewed URL
-        case e: IOException if attempt < 3 && retryable(e) =>
-          attempt += 1
-          counters.retries.incrementAndGet()
-          Thread.sleep(200L << attempt)
+    val range = if (suffix) s"bytes=-$len" else s"bytes=$off-${off + len - 1}"
+    val got = HttpTransport.request(resolve, headers = Seq("Range" -> range),
+        counters = Some(counters), refresh = Some(refresh)) { resp =>
+      val in = resp.body
+      // 200 = the server ignored Range and sends the whole object:
+      // skip to the offset
+      val skip = if (resp.status == 200) off else 0L
+      var skipped = 0L
+      while (skipped < skip) {
+        val k = in.skip(skip - skipped)
+        if (k <= 0) throw new EOFException(s"cannot skip to $off ($range)")
+        skipped += k
       }
+      var done = 0
+      while (done < len) {
+        val n = in.read(dst, dstOff + done, len - done)
+        if (n < 0) throw new EOFException(s"EOF at ${off + done} ($range)")
+        done += n
+      }
+      skipped + len
     }
-  }
-
-  /** Transport errors and HTTP 429/5xx; any other HTTP status (404,
-    * 416, a 403 after the refresh) is definitive. */
-  private def retryable(e: IOException): Boolean = e match {
-    case h: HttpStatusException => DeltaSharingClient.transient(h.code)
-    case _ => true
+    counters.bytes.addAndGet(got)
+    if (stats != null) {
+      stats.incrementBytesRead(got)
+      stats.incrementReadOps(1)
+    }
   }
 
   /** File bytes [off, off + len) into `dst`: the prefix or suffix the

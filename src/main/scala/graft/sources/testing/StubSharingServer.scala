@@ -103,6 +103,12 @@ class StubSharingServer(
   val throttleBudget = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile var retryAfterSeconds: Long = 1
 
+  /** `/files` fault simulation, empty (off) by default: file name ->
+    * statuses the next requests for that file are answered with, one
+    * each, before it is served again; a 429 carries `Retry-After:
+    * [[retryAfterSeconds]]`. */
+  @volatile var filesFaults: Map[String, List[Int]] = Map.empty
+
   /** Artificial latency on `/query` — lets tests hold a refresh
     * in flight while asserting cached reads stay unblocked. */
   @volatile var queryDelayMs: Long = 0
@@ -363,9 +369,20 @@ class StubSharingServer(
       ex.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length)
       val os = ex.getResponseBody; os.write(body); os.close()
     }
-    val sigOk = !expireFirstQueryUrls || q.contains("sig=fresh") ||
+    val fault = synchronized {
+      filesFaults.get(name).flatMap(_.headOption).map { code =>
+        filesFaults = filesFaults.updated(name, filesFaults(name).tail)
+        code
+      }
+    }
+    lazy val sigOk = !expireFirstQueryUrls || q.contains("sig=fresh") ||
       (q.contains("sig=stale") && staleRequestBudget.getAndDecrement() > 0)
-    if (!sigOk)
+    if (fault.isDefined) {
+      if (fault.get == 429)
+        ex.getResponseHeaders.set("Retry-After", retryAfterSeconds.toString)
+      answer(fault.get, s"""{"message":"fault ${fault.get}"}"""
+        .getBytes(StandardCharsets.UTF_8))
+    } else if (!sigOk)
       answer(403, """{"message":"signature expired"}""".getBytes(StandardCharsets.UTF_8))
     else httpFiles.get(name) match {
       case None => answer(404, "not found".getBytes(StandardCharsets.UTF_8))

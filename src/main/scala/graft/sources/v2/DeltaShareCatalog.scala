@@ -20,6 +20,7 @@ import graft.sources._
   * spark.conf: spark.sql.catalog.dshare = graft.sources.v2.DeltaShareCatalog
   *             spark.sql.catalog.dshare.endpoint = https://…
   *             spark.sql.catalog.dshare.bearerToken = …
+  *             (or spark.sql.catalog.dshare.profile = /path/to/x.share)
   * SELECT * FROM dshare.share1.schema1.lineitem
   * SHOW NAMESPACES IN dshare          -- = delta_share_list()
   * SHOW TABLES IN dshare.share1.schema1
@@ -38,11 +39,7 @@ class DeltaShareCatalog extends TableCatalog with SupportsNamespaces {
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    def opt(key: String, env: String): String =
-      Option(options.get(key)).orElse(sys.env.get(env)).getOrElse("")
-    profile = DeltaSharingProfile(
-      opt("endpoint", DeltaSharingProfile.EndpointEnv),
-      opt("bearerToken", DeltaSharingProfile.TokenEnv))
+    profile = DeltaSharingProfile.resolve(k => Option(options.get(k)))
   }
 
   override def name(): String = catalogName

@@ -113,14 +113,6 @@ final case class ChangesRange(
 
 object TableAddress {
   def fromOptions(options: CaseInsensitiveStringMap): TableAddress = {
-    val sessionConf: String => Option[String] = key =>
-      SparkSession.getActiveSession.flatMap(_.conf.getOption(key))
-    def resolve(opt: String, confKey: String, env: String): String =
-      Option(options.get(opt))
-        .orElse(sessionConf(confKey))
-        .orElse(sys.env.get(env))
-        .getOrElse("")
-
     val (share, schema, table) =
       (Option(options.get("share")), Option(options.get("schema")),
         Option(options.get("table"))) match {
@@ -146,17 +138,7 @@ object TableAddress {
           Option(options.get("endingVersion")).map(_.toLong),
           st, Option(options.get("endingTimestamp"))))
       } else None
-    // profile FILE (option/conf/env) beats inline endpoint+token —
-    // the `.share` document is what real providers distribute
-    val profileFile = resolve("profile", DeltaSharingProfile.ProfileConf,
-      DeltaSharingProfile.ProfileEnv)
-    val profile =
-      if (profileFile.nonEmpty) DeltaSharingProfile.fromFile(profileFile)
-      else DeltaSharingProfile(
-        resolve("endpoint", DeltaSharingProfile.EndpointConf,
-          DeltaSharingProfile.EndpointEnv),
-        resolve("bearerToken", DeltaSharingProfile.TokenConf,
-          DeltaSharingProfile.TokenEnv))
+    val profile = DeltaSharingProfile.resolve(k => Option(options.get(k)))
     val versionAsOf = Option(options.get("versionAsOf")).map(_.toLong)
     val timestampAsOf = Option(options.get("timestampAsOf"))
     if (versionAsOf.isDefined && timestampAsOf.isDefined)

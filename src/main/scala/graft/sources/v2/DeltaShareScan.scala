@@ -175,11 +175,17 @@ class DeltaShareScanBuilder(
   // Spark re-applies the limit above (limitHint covers offset+limit).
   private var offset: Option[Int] = None
 
+  /** Every pushed filter is applied exactly by file pruning: no
+    * residual data filter, and every partition filter client-exact.
+    * The offset, TopN and aggregate pushdowns count or skip whole
+    * files, which is sound only then. */
+  private def filtersExact: Boolean =
+    dataFilters.isEmpty &&
+      partitionFilters.forall(PartitionValues.isExact(_, partitionSchema))
+
   override def pushOffset(n: Int): Boolean = {
     if (n <= 0) return false
-    if (dataFilters.nonEmpty || topN.isDefined || limit.isDefined ||
-        !partitionFilters.forall(PartitionValues.isExact(_, partitionSchema)))
-      return false
+    if (!filtersExact || topN.isDefined || limit.isDefined) return false
     val files =
       try listedFiles
       catch {
@@ -224,9 +230,7 @@ class DeltaShareScanBuilder(
     // sound only when every filter is fully applied by file pruning:
     // the prune guarantee counts rows of OTHER files, and a residual
     // filter could remove exactly those rows after the scan
-    if (dataFilters.nonEmpty || offset.isDefined ||
-        !partitionFilters.forall(PartitionValues.isExact(_, partitionSchema)))
-      return false
+    if (!filtersExact || offset.isDefined) return false
     if (orders.isEmpty || n <= 0) return false
     // only the FIRST sort key prunes — a strict bound on the primary
     // key is sound regardless of tie-breaking by later keys. Integral
@@ -282,9 +286,7 @@ class DeltaShareScanBuilder(
     : Option[(StructType, Seq[InternalRow])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     import org.apache.spark.sql.types._
-    if (dataFilters.nonEmpty || limit.isDefined || offset.isDefined ||
-        !partitionFilters.forall(PartitionValues.isExact(_, partitionSchema)))
-      return None
+    if (!filtersExact || limit.isDefined || offset.isDefined) return None
     // GROUP BY only on partition columns: each file belongs to exactly
     // one group (its partitionValues), so per-group aggregates are
     // per-group sums/extrema of per-file stats

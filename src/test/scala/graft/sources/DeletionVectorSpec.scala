@@ -192,6 +192,45 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("URL-addressed DV: bounded Range GETs only, a 503 is retried") {
+    import spark.implicits._
+    val df = (0L until 50L).map(i => (i, i * 10)).toDF("k", "x")
+    val (url, size) = writeOne(df, "dv_url")
+    val data = DeletionVectors.serialize(Seq(0L, 49L))
+    // [version 1][pad][size int32 BE][data][crc32 BE], offset 4
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.write(Array[Byte](1, 0, 0, 0))
+    out.writeInt(data.length)
+    out.write(data)
+    val crc = new java.util.zip.CRC32(); crc.update(data)
+    out.writeInt(crc.getValue.toInt)
+    out.flush()
+    val dvPath = tmp.resolve("dv_url.bin")
+    Files.write(dvPath, bos.toByteArray)
+    server.httpFiles += ("dv_url.bin" -> dvPath)
+    server.tables += ("dv_url" -> ((df.schema.json, Seq.empty[String],
+      Seq((url, size, Map.empty[String, String])))))
+    server.deltaFormatTables = Set("dv_url")
+    server.fileDeletionVectors = Map(url ->
+      (s"""{"storageType":"p","pathOrInlineDv":"http://127.0.0.1:${server.port}""" +
+        s"""/files/dv_url.bin","offset":4,"sizeInBytes":${data.length},"cardinality":2}"""))
+    val before = server.filesLog.size
+    server.filesFaults = Map("dv_url.bin" -> List(503))
+    try {
+      val got = sharedRead("dv_url").select("k").as[Long].collect().sorted
+      assert(got.toSeq == (1L until 49L))
+      val dvGets = server.filesLog.drop(before).filter(_.name == "dv_url.bin")
+      assert(dvGets.map(_.status) == Seq(503, 206), dvGets)
+      assert(dvGets.forall(_.range.exists("bytes=\\d+-\\d+".r.matches)), dvGets)
+    } finally {
+      server.filesFaults = Map.empty
+      server.deltaFormatTables = Set.empty
+      server.fileDeletionVectors = Map.empty
+      server.tables -= "dv_url"
+    }
+  }
+
   test("mixed DV table: the DV file reads unfiltered, the other prunes row groups") {
     import spark.implicits._
     // two files of 1,000 rows each, sorted by k, in row groups of about

@@ -71,4 +71,17 @@ class DeltaShareCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       e.getMessage.toLowerCase.contains("not supported") ||
       e.getMessage.toLowerCase.contains("unsupported"))
   }
+
+  test("a catalog configured with only a profile file lists shares") {
+    val profile = Files.createTempFile("graft-cat", ".share")
+    Files.write(profile, s"""{"shareCredentialsVersion": 1,
+      "endpoint": "${server.endpoint}", "bearerToken": "tok"}"""
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    spark.conf.set("spark.sql.catalog.dsprofile",
+      "graft.sources.v2.DeltaShareCatalog")
+    spark.conf.set("spark.sql.catalog.dsprofile.profile", profile.toString)
+    val shares = spark.sql("SHOW NAMESPACES IN dsprofile").collect()
+      .map(_.getString(0)).toSet
+    assert(shares == Set("share1", "share2", "share3"))
+  }
 }

@@ -743,6 +743,36 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally st.stop()
   }
 
+  test("a presigned GET answered 429 waits its Retry-After, then reads") {
+    // one part file of the shared lineitem fixture
+    val src = Paths.get(java.net.URI.create(server.tables("lineitem")._3.head._1))
+    val name = src.getFileName.toString
+    val st = fileStub("lineitem", src)
+    try {
+      st.retryAfterSeconds = 1
+      st.filesFaults = Map(name -> List(429))
+      val local = Files.readAllBytes(src)
+      val in = openShared(s"http://127.0.0.1:${st.port}/files/$name",
+        local.length)
+      val tail = new Array[Byte](8)
+      val t0 = System.nanoTime()
+      try in.readFully(local.length - 8L, tail) finally in.close()
+      val elapsedMs = (System.nanoTime() - t0) / 1000000
+      assert(elapsedMs >= 1000, s"waited only ${elapsedMs}ms")
+      assert(tail.sameElements(local.takeRight(8)))
+      assert(st.filesLog.map(_.status) == Seq(429, 206), st.filesLog)
+      // and a scan whose first GET is throttled still reads every row
+      st.filesFaults = Map(name -> List(429))
+      val got = readFrom(st, "lineitem")
+        .agg(sum("l_extendedprice"), count(lit(1))).collect()(0)
+      val want = spark.read.parquet(src.toString)
+        .agg(sum("l_extendedprice"), count(lit(1))).collect()(0)
+      assert(math.abs(got.getDouble(0) - want.getDouble(0)) < 1e-6)
+      assert(got.getLong(1) == want.getLong(1))
+      assert(st.filesLog.count(_.status == 429) == 2, st.filesLog)
+    } finally st.stop()
+  }
+
   test("a server that ignores Range still yields the correct rows") {
     val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
     val st = fileStub("lineitem", src)
