@@ -260,11 +260,14 @@ object DeletionVectors {
   /** Materialize a supported descriptor into ascending deleted row
     * indexes. `i` decodes inline; `p` reads the absolute URL's DV file
     * (`[version 1][… size int32 BE, data, crc …]`) through
-    * [[HttpTransport]] with one bounded GET of its first
-    * `offset + 4 + sizeInBytes` bytes, counted in the reading task's
-    * presigned counters. Writers differ on whether `offset` points at
-    * the size prefix or the data, so both framings are accepted when
-    * unambiguous. */
+    * [[HttpTransport]] with bounded GETs counted in the reading task's
+    * presigned counters: the descriptor's bytes `[offset, offset + 4 +
+    * sizeInBytes)`, and the version byte, which rides the same GET when
+    * the gap to it is one a vectored read would merge and costs its own
+    * one-byte GET otherwise — so a DV file holding many descriptors is
+    * never re-read from byte 0 for each. Writers differ on whether
+    * `offset` points at the size prefix or the data, so both framings
+    * are accepted when unambiguous. */
   def positions(dv: Descriptor): Array[Long] = dv.storageType match {
     case "i" =>
       deserialize(z85Decode(dv.pathOrInlineDv, dv.sizeInBytes.toInt))
@@ -272,24 +275,36 @@ object DeletionVectors {
       val off = dv.offset.toInt
       val size = dv.sizeInBytes.toInt
       val counters = PresignedReadCounters.onThisThread
-      val bytes = HttpTransport.request(() => dv.pathOrInlineDv,
-          headers = Seq("Range" -> s"bytes=0-${off + 4 + size - 1}"),
-          counters = Some(counters))(_.body.readNBytes(off + 4 + size))
-      counters.bytes.addAndGet(bytes.length)
-      require(bytes.nonEmpty && bytes(0) == 1,
-        s"unsupported DV file version ${if (bytes.isEmpty) "<empty>" else bytes(0)}")
+      // bytes [from, until) of the DV file; a 200 is a server that
+      // ignored Range and sends the whole file
+      def get(from: Int, until: Int): Array[Byte] = {
+        val got = HttpTransport.request(() => dv.pathOrInlineDv,
+            headers = Seq("Range" -> s"bytes=$from-${until - 1}"),
+            counters = Some(counters)) { resp =>
+          if (resp.status == 200) resp.body.skipNBytes(from)
+          resp.body.readNBytes(until - from)
+        }
+        counters.bytes.addAndGet(got.length)
+        got
+      }
+      val start = if (off <= HttpRangeInputStream.MergeGapBytes) 0 else off
+      val bytes = get(start, off + 4 + size)
+      val version = (if (start == 0) bytes else get(0, 1)).headOption
+      require(version.contains(1.toByte),
+        s"unsupported DV file version ${version.getOrElse("<empty>")}")
       def i32be(at: Int): Int =
         ((bytes(at) & 0xff) << 24) | ((bytes(at + 1) & 0xff) << 16) |
           ((bytes(at + 2) & 0xff) << 8) | (bytes(at + 3) & 0xff)
       // magic directly at offset → data starts there; otherwise the
       // int32 BE size prefix sits at offset and data follows
+      val at = off - start
       val dataAt =
-        if (off + 4 <= bytes.length &&
-          java.lang.Integer.reverseBytes(i32be(off)) == Magic) off
+        if (at + 4 <= bytes.length &&
+          java.lang.Integer.reverseBytes(i32be(at)) == Magic) at
         else {
-          require(off + 4 + size <= bytes.length && i32be(off) == size,
+          require(at + 4 + size <= bytes.length && i32be(at) == size,
             s"DV framing mismatch at offset $off (declared $size bytes)")
-          off + 4
+          at + 4
         }
       deserialize(java.util.Arrays.copyOfRange(bytes, dataAt, dataAt + size))
     case other =>

@@ -189,11 +189,16 @@ class DeltaSharingClient(profile: DeltaSharingProfile) {
     * reference issues the HEAD but then ignores the header and
     * re-fetches metadata (`delta_sharing_client.cpp:357-369`) — kept
     * only as the fallback here. */
-  def queryTableVersion(share: String, schema: String, table: String): Long = {
-    val resp = perform("HEAD", tablePath(share, schema, table))
-    resp.header("Delta-Table-Version").map(_.toLong)
+  def queryTableVersion(share: String, schema: String, table: String): Long =
+    headTableVersion(share, schema, table)
       .getOrElse(queryTableMetadata(share, schema, table).version)
-  }
+
+  /** HEAD `…/tables/{t}` alone: its `Delta-Table-Version` header, None
+    * when the server sends none. */
+  def headTableVersion(share: String, schema: String,
+      table: String): Option[Long] =
+    perform("HEAD", tablePath(share, schema, table))
+      .header("Delta-Table-Version").map(_.toLong)
 
   /** POST `…/query` → NDJSON [protocol, metaData, file…]
     * (`delta_sharing_client.cpp:371-465`). `jsonPredicateHints` is the

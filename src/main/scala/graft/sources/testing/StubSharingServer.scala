@@ -31,14 +31,30 @@ class StubSharingServer(
   /** Every `/files` (object) request seen, in arrival order. */
   @volatile var filesLog: Vector[StubSharingServer.FilesRequest] = Vector.empty
   @volatile var shares: Seq[String] = Seq("share1", "share2", "share3")
-  /** tableName -> (schemaString, partitionColumns, files) */
-  @volatile var tables: Map[String, (String, Seq[String], Seq[(String, Long, Map[String, String])])] = Map.empty
   /** files served over HTTP with Range support: name -> local path */
   @volatile var httpFiles: Map[String, Path] = Map.empty
 
   /** Head version reported by HEAD `…/tables/{t}` — mutable so
-    * streaming tests can publish new versions. */
+    * streaming tests can publish new versions. A change to what the
+    * stub serves (the setters below) publishes the next version once a
+    * `/query` has been answered, as a real table's commit would, so a
+    * client that reuses listings per version sees the change. */
   @volatile var tableVersion: Long = 7
+
+  /** A `/query` was answered since the head version last moved. */
+  @volatile private var answered = false
+
+  /** Store one served setting, then advance [[tableVersion]] if a
+    * `/query` was answered under the old one. */
+  private def serve(set: => Unit): Unit = synchronized {
+    set
+    if (answered) { tableVersion += 1; answered = false }
+  }
+
+  /** tableName -> (schemaString, partitionColumns, files) */
+  @volatile private var tables0: Map[String, StubSharingServer.Table] = Map.empty
+  def tables: Map[String, StubSharingServer.Table] = tables0
+  def tables_=(v: Map[String, StubSharingServer.Table]): Unit = serve { tables0 = v }
 
   /** Versioned change feed per table, served by GET `…/changes`. */
   @volatile var changeFeed: Map[String, Seq[StubSharingServer.ChangeEntry]] =
@@ -48,25 +64,33 @@ class StubSharingServer(
     * without an entry are served with NO `stats` field — the stub must
     * never invent row counts, since the connector answers COUNT(*)
     * from them when present. */
-  @volatile var fileStats: Map[String, String] = Map.empty
+  @volatile private var fileStats0: Map[String, String] = Map.empty
+  def fileStats: Map[String, String] = fileStats0
+  def fileStats_=(v: Map[String, String]): Unit = serve { fileStats0 = v }
 
   /** Tables that carry deletion vectors, by signal kind: "feature"
     * (protocol readerFeatures), "config"
     * (delta.enableDeletionVectors), or "file" (per-file
     * deletionVector payload in /query) — exercises the client's
     * DV refusal guard. */
-  @volatile var deletionVectorTables: Map[String, String] = Map.empty
+  @volatile private var deletionVectorTables0: Map[String, String] = Map.empty
+  def deletionVectorTables: Map[String, String] = deletionVectorTables0
+  def deletionVectorTables_=(v: Map[String, String]): Unit = serve { deletionVectorTables0 = v }
 
   /** REAL per-file deletion-vector descriptors, keyed by (unsigned)
     * file url: full descriptor JSON injected on the file/add action —
     * the READABLE DV fixture (inline Z85 or URL-addressed), vs
     * [[deletionVectorTables]]'s unsupported-storageType refusal
     * fixture. */
-  @volatile var fileDeletionVectors: Map[String, String] = Map.empty
+  @volatile private var fileDeletionVectors0: Map[String, String] = Map.empty
+  def fileDeletionVectors: Map[String, String] = fileDeletionVectors0
+  def fileDeletionVectors_=(v: Map[String, String]): Unit = serve { fileDeletionVectors0 = v }
 
   /** Extra table `configuration` entries merged into metaData (e.g.
     * `delta.columnMapping.mode`). */
-  @volatile var tableConfig: Map[String, Map[String, String]] = Map.empty
+  @volatile private var tableConfig0: Map[String, Map[String, String]] = Map.empty
+  def tableConfig: Map[String, Map[String, String]] = tableConfig0
+  def tableConfig_=(v: Map[String, Map[String, String]]): Unit = serve { tableConfig0 = v }
 
   /** Tables answered in DELTA responseformat: protocol/metaData
     * payloads nested under `deltaProtocol`/`deltaMetadata`, file
@@ -76,7 +100,9 @@ class StubSharingServer(
     * header does not advertise `delta` are refused with 400,
     * pinning that the client actually sends the capability it
     * relies on. */
-  @volatile var deltaFormatTables: Set[String] = Set.empty
+  @volatile private var deltaFormatTables0: Set[String] = Set.empty
+  def deltaFormatTables: Set[String] = deltaFormatTables0
+  def deltaFormatTables_=(v: Set[String]): Unit = serve { deltaFormatTables0 = v }
 
   /** Presigned-URL expiry simulation: when set, the FIRST `/query`
     * response signs file URLs with `?sig=stale` (which `/files`
@@ -91,6 +117,14 @@ class StubSharingServer(
     * read); N > 0 = the URL lapses MID-SCAN — the footer reads
     * succeed, then a later column-chunk read hits the expiry. */
   val staleRequestBudget = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The `expirationTimestamp` of every `/query` file: when its
+    * presigned URL lapses. Re-signing is not a commit, so a change
+    * publishes no version. */
+  @volatile var urlExpiration: String = "2099-01-01T00:00:00Z"
+
+  /** Bearer tokens accepted besides `expectedToken`. */
+  @volatile var otherTokens: Set[String] = Set.empty
 
   /** Fallback simulation: answer every `/files` request 200 with the
     * whole body, as a server that ignores `Range` does. */
@@ -194,7 +228,8 @@ class StubSharingServer(
       if (throttleBudget.get > 0 && throttleBudget.getAndDecrement() > 0) {
         send(ex, 429, """{"message":"rate limited"}""",
           Map("Retry-After" -> retryAfterSeconds.toString))
-      } else if (auth != s"Bearer $expectedToken") {
+      } else if (auth != s"Bearer $expectedToken" &&
+          !otherTokens.exists(t => auth == s"Bearer $t")) {
         send(ex, 401, """{"message":"unauthorized"}""")
       } else {
         val path = ex.getRequestURI.getPath.stripPrefix("/delta-sharing")
@@ -338,10 +373,13 @@ class StubSharingServer(
                   // delta responseformat: the presigned URL is
                   // add.path, partitionValues/size/stats ride the add
                   // action, id/expiry stay on the file envelope
-                  s"""{"file":{"id":"f-${url.hashCode}","expirationTimestamp":"2099-01-01T00:00:00Z","deltaSingleAction":{"add":{"path":"$signed","partitionValues":{$pvJson},"size":$size,"modificationTime":1700000000000,"dataChange":true$statsField$dvField}}}}"""
+                  s"""{"file":{"id":"f-${url.hashCode}","expirationTimestamp":"$urlExpiration","deltaSingleAction":{"add":{"path":"$signed","partitionValues":{$pvJson},"size":$size,"modificationTime":1700000000000,"dataChange":true$statsField$dvField}}}}"""
                 else
-                  s"""{"file":{"url":"$signed","id":"f-${url.hashCode}","partitionValues":{$pvJson},"size":$size$statsField$dvField,"version":3,"timestamp":1700000000000,"expirationTimestamp":"2099-01-01T00:00:00Z"}}"""
+                  s"""{"file":{"url":"$signed","id":"f-${url.hashCode}","partitionValues":{$pvJson},"size":$size$statsField$dvField,"version":3,"timestamp":1700000000000,"expirationTimestamp":"$urlExpiration"}}"""
               }
+              // before the answer reaches the client, which may change
+              // the table next
+              answered = true
               send(ex, 200, (metaNdjson(t) +: fileLines).mkString("\n"),
                 if (deltaFormatTables.contains(t))
                   Map("delta-sharing-capabilities" -> "responseformat=delta")
@@ -424,6 +462,10 @@ class StubSharingServer(
 }
 
 object StubSharingServer {
+  /** A served table: (schemaString, partitionColumns, files as (url,
+    * size, partitionValues)). */
+  type Table = (String, Seq[String], Seq[(String, Long, Map[String, String])])
+
   /** One `/files` request: file name, `Range` header, status, and the
     * file bytes in the body (0 for an error). */
   final case class FilesRequest(name: String, range: Option[String],

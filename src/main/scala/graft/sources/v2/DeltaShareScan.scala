@@ -71,42 +71,46 @@ class DeltaShareScanBuilder(
 
   // ---- the file listing ---------------------------------------------
   //
-  // One `/query` POST serves every consumer of the file list: the
-  // offset and aggregate pushdowns that need it at plan time and the
-  // scan [[build]] returns. Responses are memoized per request for
-  // the life of this builder only, so the next query lists afresh; a
-  // different `limitHint` is simply a different request. Failures are
-  // not memoized: a pushdown that refuses on a failed listing leaves
-  // the scan to list again and surface the error.
-  private val listings =
-    scala.collection.mutable.Map.empty[ListingRequest, Seq[FileAction]]
+  // Every consumer of the file list (the offset and aggregate pushdowns
+  // that need it at plan time and the scan [[build]] returns) reads it
+  // from one [[ListingSnapshot]], resolved on first need: the session's
+  // snapshot of the head version (one HEAD), or one private to this
+  // builder for time travel or a HEAD without a version. A different
+  // `limitHint` is simply a different request. Failures are not
+  // memoized: a pushdown that refuses on a failed listing leaves the
+  // scan to list again and surface the error.
+  private lazy val snapshot = ListingSnapshot.of(spark, addr)
+  /** This builder's mark on the listings it fetched (not the builder
+    * itself, which a held listing would otherwise keep alive). */
+  private val lister = new Object
 
-  private def listing(req: ListingRequest): Seq[FileAction] =
-    listings.getOrElseUpdate(req, {
-      val resp = new DeltaSharingClient(addr.profile)
+  private def listing(req: ListingRequest): Seq[FileAction] = {
+    val resp = snapshot.listing(req, owner = lister) {
+      new DeltaSharingClient(addr.profile)
         .queryTable(addr.share, addr.schema, addr.table,
           jsonPredicateHints = req.jsonHints,
           predicateHints = req.legacyHints,
           limitHint = req.limitHint, version = addr.versionAsOf,
           timestamp = addr.timestampAsOf)
-      // Time travel: the plan's schema came from head-version metadata;
-      // if the requested version's metaData line disagrees, reading its
-      // files (or answering from their stats) with the newer schema
-      // would silently mis-decode — fail loudly instead (schema
-      // evolution across shared versions is out of scope, as in the
-      // reference).
-      if ((addr.versionAsOf.isDefined || addr.timestampAsOf.isDefined) &&
-          resp.metadata.schemaString.nonEmpty &&
-          meta.schemaString.nonEmpty &&
-          resp.metadata.schemaString != meta.schemaString)
-        throw new DeltaSharingException(0,
-          s"table ${addr.share}.${addr.schema}.${addr.table} at " +
-            addr.versionAsOf.map(v => s"version $v")
-              .getOrElse(s"timestamp ${addr.timestampAsOf.get}") +
-            " has a different schema than the " +
-            "current version; reading across schema changes is not supported")
-      resp.files
-    })
+    }
+    // Time travel: the plan's schema came from head-version metadata;
+    // if the requested version's metaData line disagrees, reading its
+    // files (or answering from their stats) with the newer schema
+    // would silently mis-decode — fail loudly instead, on every lookup
+    // (schema evolution across shared versions is out of scope, as in
+    // the reference).
+    if ((addr.versionAsOf.isDefined || addr.timestampAsOf.isDefined) &&
+        resp.metadata.schemaString.nonEmpty &&
+        meta.schemaString.nonEmpty &&
+        resp.metadata.schemaString != meta.schemaString)
+      throw new DeltaSharingException(0,
+        s"table ${addr.share}.${addr.schema}.${addr.table} at " +
+          addr.versionAsOf.map(v => s"version $v")
+            .getOrElse(s"timestamp ${addr.timestampAsOf.get}") +
+          " has a different schema than the " +
+          "current version; reading across schema changes is not supported")
+    resp.files
+  }
 
   /** The `/query` request for the pushdown state so far: JSON hints
     * from every pushed filter, legacy SQL-string hints (older servers
@@ -511,18 +515,20 @@ private[graft] object TopNFilePrune {
         worst <- if (spec.asc) i.mx else i.mn
       } yield (worst, math.max(0L, nr - nulls - i.dvc))
     }.sortBy(t => if (spec.asc) t._1 else -t._1)
-    val prefix = contrib.scanLeft(0L)(_ + _._2)
+    // indexed: the binary search reads both by position
+    val worsts = contrib.map(_._1).toArray
+    val prefix = contrib.scanLeft(0L)(_ + _._2).toArray
     val totalNullSurv = infos.flatMap(i =>
       i.nulls.map(n => math.max(0L, n - i.dvc))).sum
     // strictly-better count for a best-value b: rows of files whose
     // worst value beats b (ASC: worst < b; DESC: worst > b)
     def strictlyBetter(b: Long): Long = {
       var lo = 0
-      var hi = contrib.length
+      var hi = worsts.length
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
         val beats =
-          if (spec.asc) contrib(mid)._1 < b else contrib(mid)._1 > b
+          if (spec.asc) worsts(mid) < b else worsts(mid) > b
         if (beats) lo = mid + 1 else hi = mid
       }
       prefix(lo)
@@ -561,9 +567,9 @@ final class DeltaShareAggScan(
 /** Batch scan: one `InputPartition` per shared file — Spark
   * parallelizes what the reference streams serially
   * (`duck_delta_share_extension.cpp:569-575`). The file list is the
-  * builder's listing for `request` (one `/query` POST on the driver at
-  * planning time, shared with the builder's pushdowns); executors
-  * then pull presigned URLs directly. */
+  * builder's listing for `request` (read from the builder's
+  * [[ListingSnapshot]] on the driver at planning time, shared with the
+  * builder's pushdowns); executors then pull presigned URLs directly. */
 class DeltaShareScan(
     spark: SparkSession,
     addr: TableAddress,
@@ -654,13 +660,18 @@ class DeltaShareScan(
       }
     }
 
-  /** Pushed-top-N file pruning ([[TopNFilePrune]]): files whose best
-    * possible row provably cannot reach the top-n boundary of the
-    * first sort key never open. */
-  private def topNPrunedFiles: Seq[graft.sources.FileAction] = topN match {
-    case None => statsPrunedFiles
-    case Some(spec) => TopNFilePrune.prune(statsPrunedFiles, spec)
-  }
+  /** The files this scan reads: the stats-pruned files less, under a
+    * pushed top-N ([[TopNFilePrune]]), those whose best possible row
+    * provably cannot reach the top-n boundary of the first sort key.
+    * Pruned once per runtime-filter state: [[estimateStatistics]] and
+    * [[planInputPartitions]] both ask, and [[filter]] forgets them. */
+  private var planned: Option[Seq[graft.sources.FileAction]] = None
+  private def plannedFiles: Seq[graft.sources.FileAction] =
+    planned.getOrElse {
+      val f = topN.fold(statsPrunedFiles)(TopNFilePrune.prune(statsPrunedFiles, _))
+      planned = Some(f)
+      f
+    }
 
   // ---- SupportsRuntimeFiltering (dynamic partition pruning) --------
 
@@ -672,9 +683,11 @@ class DeltaShareScan(
     if (offset.isDefined) Array.empty
     else partitionSchema.fieldNames.map(Expressions.column)
 
-  override def filter(filters: Array[Filter]): Unit =
+  override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters.filter(
       PartitionValues.isPartitionOnly(_, partitionColNames))
+    planned = None
+  }
 
   // ---- SupportsReportStatistics ------------------------------------
 
@@ -683,7 +696,7 @@ class DeltaShareScan(
     * `stats.numRecords` the server sends (when present on all kept
     * files). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val files = topNPrunedFiles
+    private val files = plannedFiles
     override def sizeInBytes(): OptionalLong =
       OptionalLong.of(files.map(_.size).sum)
     override def numRows(): OptionalLong = {
@@ -706,7 +719,7 @@ class DeltaShareScan(
         .copy(dv = f.deletionVector, rowSkip = rowSkip,
           read = if (f.deletionVector.isDefined) dvRead else 0)
     offset match {
-      case None => topNPrunedFiles.map(mk(_, 0L)).toArray
+      case None => plannedFiles.map(mk(_, 0L)).toArray
       case Some(off) =>
         // exact prefix skip in listed order: files wholly inside the
         // offset are never planned (never open); the boundary file's
@@ -716,7 +729,7 @@ class DeltaShareScan(
         // (limitHint = limit + offset), and if that answer lacks them,
         // refuse loudly rather than skip inexactly.
         var remaining = off.toLong
-        topNPrunedFiles.flatMap { f =>
+        plannedFiles.flatMap { f =>
           if (remaining == 0L) Some(mk(f, 0L))
           else {
             val nr = f.stats.flatMap(_.numRecords).getOrElse(

@@ -231,6 +231,49 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("URL-addressed DV at a large offset never requests bytes [1, offset)") {
+    import spark.implicits._
+    val df = (0L until 50L).map(i => (i, i * 10)).toDF("k", "x")
+    val (url, size) = writeOne(df, "dv_far")
+    val deleted = Seq(3L, 30L)
+    val data = DeletionVectors.serialize(deleted)
+    // [version 1][1 MiB of other descriptors][size int32 BE][data][crc32 BE]
+    val offset = 1 << 20
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.write(1)
+    out.write(new Array[Byte](offset - 1))
+    out.writeInt(data.length)
+    out.write(data)
+    val crc = new java.util.zip.CRC32(); crc.update(data)
+    out.writeInt(crc.getValue.toInt)
+    out.flush()
+    val dvPath = tmp.resolve("dv_far.bin")
+    Files.write(dvPath, bos.toByteArray)
+    server.httpFiles += ("dv_far.bin" -> dvPath)
+    server.tables += ("dv_far" -> ((df.schema.json, Seq.empty[String],
+      Seq((url, size, Map.empty[String, String])))))
+    server.deltaFormatTables = Set("dv_far")
+    server.fileDeletionVectors = Map(url ->
+      (s"""{"storageType":"p","pathOrInlineDv":"http://127.0.0.1:${server.port}""" +
+        s"""/files/dv_far.bin","offset":$offset,"sizeInBytes":${data.length},"cardinality":2}"""))
+    val before = server.filesLog.size
+    try {
+      val got = sharedRead("dv_far").select("k").as[Long].collect().sorted
+      assert(got.toSeq == (0L until 50L).filterNot(deleted.contains))
+      val dvGets = server.filesLog.drop(before).filter(_.name == "dv_far.bin")
+      val spans = dvGets.map(r => StubSharingServer.byteSpan(r.range.get,
+        Files.size(dvPath)).get)
+      assert(spans.nonEmpty && spans.forall { case (from, to) =>
+        to == 0L || from >= offset }, dvGets)
+      assert(dvGets.map(_.bytes).sum == 1 + 4 + data.length, dvGets)
+    } finally {
+      server.deltaFormatTables = Set.empty
+      server.fileDeletionVectors = Map.empty
+      server.tables -= "dv_far"
+    }
+  }
+
   test("mixed DV table: the DV file reads unfiltered, the other prunes row groups") {
     import spark.implicits._
     // two files of 1,000 rows each, sorted by k, in row groups of about

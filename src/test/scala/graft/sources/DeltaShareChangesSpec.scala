@@ -221,6 +221,42 @@ class DeltaShareChangesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.columns.contains("_change_type"))
   }
 
+  test("change-feed scan metrics equal the stub's /files log") {
+    val orders = spark.range(0, 5000).selectExpr("id AS o_orderkey",
+      "id % 7 AS o_custkey")
+    val (file, size) = writeOne(orders, "metrics")
+    val st = new StubSharingServer(expectedToken = "tok").start()
+    try {
+      val url = s"http://127.0.0.1:${st.port}/files/orders.parquet"
+      st.httpFiles = Map("orders.parquet" ->
+        java.nio.file.Paths.get(new java.net.URI(file)))
+      st.tables = Map("orders" -> ((orders.schema.json, Seq.empty[String],
+        Seq((url, size, Map.empty[String, String])))))
+      st.changeFeed = Map("orders" -> Seq(
+        ChangeEntry(1, 1700000001000L, "add", url, size),
+        ChangeEntry(2, 1700000002000L, "remove", url, size)))
+      st.tableVersion = 2
+      val df = spark.read.format("deltashare")
+        .option("endpoint", st.endpoint).option("bearerToken", "tok")
+        .option("readChangeFeed", "true").option("startingVersion", "1")
+        .load("share1.schema1.orders").select("o_orderkey", "_change_type")
+      assert(df.collect().length == 2 * orders.count())
+      val scans = PlanWalk.collect(df.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }
+      assert(scans.map(_.scan.getClass.getSimpleName) ==
+        Seq("DeltaShareChangesScan"))
+      val log = st.filesLog
+      assert(log.nonEmpty && log.forall(_.status == 206), log)
+      assert(PresignedReadCounters.Names.map(n =>
+        n -> scans.map(_.metrics(n).value).sum).toMap == Map(
+        "presignedGets" -> log.size.toLong,
+        "presignedBytes" -> log.map(_.bytes).sum,
+        "presignedRetries" -> 0L,
+        "presignedRefreshes" -> 0L))
+    } finally st.stop()
+  }
+
   private def sessionWithConf = {
     spark.conf.set(DeltaSharingProfile.EndpointConf, server.endpoint)
     spark.conf.set(DeltaSharingProfile.TokenConf, "tok")

@@ -491,6 +491,8 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(both.collect().map(_.getLong(0)).forall(_ >= mid))
       // an accepted offset plan lists the table once: the pushdown's
       // numRecords check and the scan read the same /query response
+      // (a new version, so the plan's listing is that version's first)
+      st.tableVersion += 1
       val posts0 = queryPosts(st)
       val once = df.offset(3).select("o_orderkey")
       assert(once.queryExecution.executedPlan.toString
@@ -583,6 +585,8 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the main fixture's lineitem files carry NO stats → COUNT must
     // read rows (BatchScan) and still be exact
     val df = read()
+    // a new version, so the read's listing is that version's first
+    server.tableVersion += 1
     val posts0 = queryPosts(server)
     val agg = df.agg(count(lit(1)).as("n"))
     val plan = agg.queryExecution.executedPlan.toString

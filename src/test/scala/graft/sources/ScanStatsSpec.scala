@@ -125,6 +125,67 @@ class ScanStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a file with nulls survives NULLS FIRST regardless of guarantees")
   }
 
+  test("TopN prune of 100k files is O(F log F) and equals a brute-force prune") {
+    import graft.sources.v2.{TopNFilePrune, TopNSpec}
+    import com.fasterxml.jackson.databind.node.LongNode
+    val rnd = new scala.util.Random(11)
+    val F = 100000
+    // per file: rows, nulls, [min, max], deleted rows; every 50th file
+    // carries no stats
+    val nr = Array.fill(F)(50L + rnd.nextInt(100))
+    val nulls = Array.tabulate(F)(i => if (i % 7 == 0) rnd.nextInt(5).toLong else 0L)
+    val mn = Array.fill(F)(rnd.nextInt(10000000).toLong)
+    val mx = Array.tabulate(F)(i => mn(i) + rnd.nextInt(1000))
+    val dvc = Array.tabulate(F)(i => if (i % 11 == 0) rnd.nextInt(10).toLong else 0L)
+    def hasStats(i: Int) = i % 50 != 0
+    // a List, as a parsed /query listing is
+    val files = List.tabulate(F) { i =>
+      FileAction(s"f$i", s"f$i", Map.empty, 1L,
+        if (!hasStats(i)) None
+        else Some(FileStats.Stats(Some(nr(i)), Map("k" -> LongNode.valueOf(mn(i))),
+          Map("k" -> LongNode.valueOf(mx(i))), Map("k" -> nulls(i)))),
+        None, None, None,
+        deletionVector =
+          if (dvc(i) == 0L) None
+          else Some(DeletionVectors.Descriptor("i", "", 0L, 0L, dvc(i))))
+    }
+    // the prune's definition, file by file: O(F) per decision
+    def keptByBruteForce(i: Int, spec: TopNSpec): Boolean = !hasStats(i) || {
+      val best = if (spec.asc) mn(i) else mx(i)
+      var better = 0L
+      var nullRows = 0L
+      var j = 0
+      while (j < F) {
+        if (hasStats(j)) {
+          val worst = if (spec.asc) mx(j) else mn(j)
+          if (if (spec.asc) worst < best else worst > best)
+            better += math.max(0L, nr(j) - nulls(j) - dvc(j))
+          nullRows += math.max(0L, nulls(j) - dvc(j))
+        }
+        j += 1
+      }
+      val ownNullsOk = !spec.nullsFirst || nulls(i) == 0L
+      !(ownNullsOk &&
+        better + (if (spec.nullsFirst) nullRows else 0L) >= spec.n)
+    }
+    val field = StructField("k", LongType)
+    for (spec <- Seq(TopNSpec(field, asc = true, nullsFirst = false, n = 20000),
+        TopNSpec(field, asc = false, nullsFirst = true, n = 20000))) {
+      // a quadratic prune runs for hours on 100k files; the bound is
+      // generous for an O(F log F) one
+      val run = scala.concurrent.Future(TopNFilePrune.prune(files, spec))(
+        scala.concurrent.ExecutionContext.fromExecutor((r: Runnable) => {
+          val t = new Thread(r); t.setDaemon(true); t.start()
+        }))
+      val kept = scala.concurrent.Await.result(run,
+        scala.concurrent.duration.Duration(30, "s")).map(_.url).toSet
+      assert(kept.size > F / 50 && kept.size < F, s"$spec kept ${kept.size}")
+      (0 until F by 97).foreach { i =>
+        assert(kept.contains(s"f$i") == keptByBruteForce(i, spec), s"$spec f$i")
+      }
+    }
+  }
+
   test("TopN prune soundness fuzz: pruning never changes the top-N " +
       "value multiset (deletion vectors included)") {
     import graft.sources.v2.{TopNFilePrune, TopNSpec}
