@@ -295,9 +295,9 @@ object PresignedUrlCache {
   * is invoked once per GET on HTTP 401/403, so an expired presigned URL
   * heals inside the running task instead of failing the job; transient
   * failures follow the transport's retry rule. Each GET
-  * counts its body bytes and one read operation in the FileSystem's
-  * `stats` (Spark's task input metrics) and in `counters` (the scan's
-  * custom metrics). */
+  * counts its body bytes and one read operation in `counters` (the
+  * scan's custom metrics) and in the FileSystem's `stats` (Spark's task
+  * input metrics), through [[PresignedReadCounters.read]]. */
 private[sources] class HttpRangeInputStream(
     resolve: () => String,
     refresh: String => Unit,
@@ -341,11 +341,7 @@ private[sources] class HttpRangeInputStream(
       }
       skipped + len
     }
-    counters.bytes.addAndGet(got)
-    if (stats != null) {
-      stats.incrementBytesRead(got)
-      stats.incrementReadOps(1)
-    }
+    counters.read(stats, got)
   }
 
   /** File bytes [off, off + len) into `dst`: the prefix or suffix the
@@ -490,15 +486,53 @@ private[sources] object HttpRangeInputStream {
 /** Per-reader tallies of the presigned read path, reported as the
   * scans' DSv2 custom metrics: GETs issued (including refused ones),
   * body bytes fetched, transient retries and expiry refreshes. A
-  * partition reader installs its counters on the task thread while it
-  * opens its file; `PresignedUrlFileSystem.open` hands them to the
-  * stream. */
+  * partition reader installs its counters on whichever thread opens
+  * one of its files; `PresignedUrlFileSystem.open` hands them to the
+  * stream.
+  *
+  * Spark sets a task's input bytes from the Hadoop FileSystem
+  * statistics of the task's own thread, which are kept per thread. So
+  * the parquet bytes a stream reads on another thread (a file opened
+  * ahead) wait here until the thread that made these counters, the
+  * task thread, [[claim]]s them. */
 final class PresignedReadCounters {
   import java.util.concurrent.atomic.AtomicLong
   val gets = new AtomicLong
   val bytes = new AtomicLong
   val retries = new AtomicLong
   val refreshes = new AtomicLong
+
+  private val owner = Thread.currentThread
+  private val pendingBytes = new AtomicLong
+  private val pendingOps = new AtomicLong
+  @volatile private var pendingStats: FileSystem.Statistics = _
+
+  /** One GET of `n` body bytes through a FileSystem with `stats`:
+    * credited to `stats` now on the owner thread, at the next [[claim]]
+    * on any other. */
+  private[sources] def read(stats: FileSystem.Statistics, n: Long): Unit = {
+    bytes.addAndGet(n)
+    if (stats != null) {
+      if (Thread.currentThread eq owner) {
+        stats.incrementBytesRead(n)
+        stats.incrementReadOps(1)
+      } else {
+        pendingStats = stats
+        pendingBytes.addAndGet(n)
+        pendingOps.incrementAndGet()
+      }
+    }
+  }
+
+  /** Credits the reads made on other threads so far to the calling
+    * thread's FileSystem statistics; called on the owner thread. */
+  def claim(): Unit = {
+    val s = pendingStats
+    if (s != null) {
+      s.incrementBytesRead(pendingBytes.getAndSet(0L))
+      s.incrementReadOps(pendingOps.getAndSet(0L).toInt)
+    }
+  }
 
   /** Current values, in the order of [[PresignedReadCounters.supported]]. */
   def taskMetrics: Array[CustomTaskMetric] =

@@ -36,14 +36,14 @@ import graft.sources._
   * timestamp]` — identical ordinals either way, so the scan stays on
   * the vectorized reader for every file. The two shapes are the
   * scan's two [[ParquetRead]]s, built by the same function as the
-  * batch and streaming reads; each input partition names its read, and
+  * batch and streaming reads; each planned file names its read, and
   * a column-mapped table's files are read by physical name (the client
   * has already remapped the actions' `partitionValues` to logical).
   *
-  * Scale: one `InputPartition` per changed file, executor-parallel,
+  * Scale: the changed files packed into input partitions like the
+  * batch scan's ([[DeltaShareInputPartition.pack]]), executor-parallel,
   * through the same [[PresignedUrlFileSystem]] id-indirection and
-  * expiry-refresh path as the batch scan (the refresh re-issues the
-  * `/changes` GET).
+  * expiry-refresh path (the refresh re-issues the `/changes` GET).
   */
 class DeltaShareChangesScan(
     spark: SparkSession,
@@ -73,14 +73,22 @@ class DeltaShareChangesScan(
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    PresignedReadCounters.supported
+    PresignedReadCounters.supported :+ new FilesPlannedMetric
+
+  /** Files in the last [[planInputPartitions]]. */
+  @volatile private var filesPlanned: Option[Int] = None
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    filesPlanned.map(FilesPlannedMetric.value).toArray
 
   override def description(): String =
     s"DeltaShareChangesScan ${addr.share}.${addr.schema}.${addr.table} " +
       Seq(range.startingVersion.map(v => s"startingVersion=$v"),
         range.startingTimestamp.map(t => s"startingTimestamp=$t"),
         range.endingVersion.map(v => s"endingVersion=$v"),
-        range.endingTimestamp.map(t => s"endingTimestamp=$t"))
+        range.endingTimestamp.map(t => s"endingTimestamp=$t"),
+        filesPlanned.map(n => s"filesPlanned=$n"))
         .flatten.mkString("[", ", ", "]")
 
   private def refreshSpec = PresignedUrlCache.RefreshSpec(
@@ -94,10 +102,12 @@ class DeltaShareChangesScan(
     range.fetch(new DeltaSharingClient(addr.profile),
       addr.share, addr.schema, addr.table).actions
 
-  override def planInputPartitions(): Array[InputPartition] =
-    actions.map(actionPartition).toArray
+  override def planInputPartitions(): Array[InputPartition] = {
+    filesPlanned = Some(actions.size)
+    DeltaShareInputPartition.pack(spark, actions.map(actionFile))
+  }
 
-  private def actionPartition(a: ChangeAction): DeltaShareInputPartition = {
+  private def actionFile(a: ChangeAction): DeltaShareFile = {
     val cdf = a.changeType == "cdf"
     val constants = a.partitionValues ++
       (if (cdf) Map.empty[String, String]
@@ -106,7 +116,7 @@ class DeltaShareChangesScan(
       (CommitVersionCol -> a.version.toString) +
       (CommitTimestampCol ->
         java.time.Instant.ofEpochMilli(a.timestamp).toString)
-    DeltaShareInputPartition.forFile(a.url, a.id, a.size, constants)
+    DeltaShareFile.of(a.url, a.id, a.size, constants)
       .copy(read = if (cdf) CdfRead else AddRemoveRead)
   }
 

@@ -32,9 +32,9 @@ final case class DeltaShareVersionOffset(version: Long) extends Offset {
   * stream starts at the CURRENT head and emits only future commits.
   *
   * Scale: per batch, one HEAD + one `/changes` GET on the driver;
-  * files read executor-parallel through the same presigned-URL
-  * id-indirection/refresh path as the batch scan. Offsets are plain
-  * table versions, so checkpoint/resume is exact.
+  * files packed and read executor-parallel like the batch scan's,
+  * through the same presigned-URL id-indirection/refresh path. Offsets
+  * are plain table versions, so checkpoint/resume is exact.
   */
 class DeltaShareMicroBatchStream(
     spark: SparkSession,
@@ -105,10 +105,9 @@ class DeltaShareMicroBatchStream(
     val actions = client.queryTableChanges(addr.share, addr.schema,
       addr.table, startingVersion = from + 1, endingVersion = Some(to))
       .actions
-    actions.flatMap {
+    DeltaShareInputPartition.pack(spark, actions.flatMap {
       case a if a.changeType == "add" =>
-        Some(DeltaShareInputPartition.forFile(a.url, a.id, a.size,
-          a.partitionValues))
+        Some(DeltaShareFile.of(a.url, a.id, a.size, a.partitionValues))
       case a if a.changeType == "remove" && ignoreDeletes => None
       case a =>
         throw new DeltaSharingException(0,
@@ -116,7 +115,7 @@ class DeltaShareMicroBatchStream(
             s"a '${a.changeType}' action at version ${a.version}; this " +
             "source streams append-only tables (set ignoreDeletes=true " +
             "to skip removes)")
-    }.toArray
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

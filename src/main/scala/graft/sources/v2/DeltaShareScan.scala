@@ -1,15 +1,20 @@
 package graft.sources.v2
 
 import java.util.OptionalLong
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.paths.SparkPath
@@ -564,8 +569,10 @@ final class DeltaShareAggScan(
       s"[stats-only aggregate: ${schema.fieldNames.mkString(", ")}]"
 }
 
-/** Batch scan: one `InputPartition` per shared file — Spark
-  * parallelizes what the reference streams serially
+/** Batch scan: the shared files packed into input partitions
+  * ([[DeltaShareInputPartition.pack]]), each task reading its run of
+  * files in order with the next one opened ahead — Spark parallelizes
+  * what the reference streams serially
   * (`duck_delta_share_extension.cpp:569-575`). The file list is the
   * builder's listing for `request` (read from the builder's
   * [[ListingSnapshot]] on the driver at planning time, shared with the
@@ -609,7 +616,7 @@ class DeltaShareScan(
   override def toBatch: Batch = this
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    PresignedReadCounters.supported
+    PresignedReadCounters.supported :+ new FilesPlannedMetric
 
   /** Streaming form of this scan: version-offset micro-batches over
     * the `/changes` endpoint (see [[DeltaShareMicroBatchStream]]).
@@ -628,7 +635,8 @@ class DeltaShareScan(
       s"hints from ${dataFilters.length} data filter(s), limit=$limit" +
       topN.map(t => s", pushedTopN=${t.field.name} " +
         s"${if (t.asc) "ASC" else "DESC"} n=${t.n}").getOrElse("") +
-      offset.map(o => s", pushedOffset=$o").getOrElse("") + "]"
+      offset.map(o => s", pushedOffset=$o").getOrElse("") +
+      filesPlanned.map(n => s", filesPlanned=$n").getOrElse("") + "]"
 
   /** Everything an executor needs to re-issue this scan's `/query`
     * when a presigned URL expires mid-task. */
@@ -714,12 +722,12 @@ class DeltaShareScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val dvRead = if (separateDvRead) 1 else 0
-    def mk(f: FileAction, rowSkip: Long): DeltaShareInputPartition =
-      DeltaShareInputPartition.forFile(f.url, f.id, f.size, f.partitionValues)
+    def mk(f: FileAction, rowSkip: Long): DeltaShareFile =
+      DeltaShareFile.of(f.url, f.id, f.size, f.partitionValues)
         .copy(dv = f.deletionVector, rowSkip = rowSkip,
           read = if (f.deletionVector.isDefined) dvRead else 0)
-    offset match {
-      case None => plannedFiles.map(mk(_, 0L)).toArray
+    val files = offset match {
+      case None => plannedFiles.map(mk(_, 0L))
       case Some(off) =>
         // exact prefix skip in listed order: files wholly inside the
         // offset are never planned (never open); the boundary file's
@@ -742,9 +750,18 @@ class DeltaShareScan(
             if (surv <= remaining) { remaining -= surv; None }
             else { val r = remaining; remaining = 0L; Some(mk(f, r)) }
           }
-        }.toArray
+        }
     }
+    filesPlanned = Some(files.size)
+    DeltaShareInputPartition.pack(spark, files)
   }
+
+  /** Files in the last [[planInputPartitions]]: the partitions pack
+    * several files each, so Spark's partition count no longer says. */
+  @volatile private var filesPlanned: Option[Int] = None
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    filesPlanned.map(FilesPlannedMetric.value).toArray
 
   /** Whether deletion-vector files need their own, filter-free read:
     * row-group / page skipping would break the physical row-index
@@ -781,7 +798,11 @@ object DeltaShareScan {
       PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
 }
 
-final case class DeltaShareInputPartition(
+/** One shared file a partition reads. A presigned HTTP(S) URL is read
+  * through a `graftds` path carrying only an opaque file id (presigned
+  * URLs must not leak into paths or the UI; the reader registers
+  * id → URL executor-side); any other URL is read as is. */
+final case class DeltaShareFile(
     path: String,
     size: Long,
     partitionValues: Map[String, String],
@@ -797,22 +818,70 @@ final case class DeltaShareInputPartition(
     /** Pushed-offset boundary file: drop this many leading SURVIVING
       * rows (applied after the DV anti-filter); 0 everywhere else. */
     rowSkip: Long = 0L)
+
+object DeltaShareFile {
+  def of(url: String, id: String, size: Long,
+      partitionValues: Map[String, String]): DeltaShareFile =
+    if (url.startsWith("http://") || url.startsWith("https://")) {
+      val fid = PresignedUrlCache.fileId(id, url)
+      DeltaShareFile(PresignedUrlFileSystem.encode(fid, size), size,
+        partitionValues, fileId = fid, url = url)
+    } else
+      DeltaShareFile(url, size, partitionValues, fileId = "", url = "")
+}
+
+/** The files one task reads, in listed order: the one partition type
+  * of the batch, change-feed and streaming share scans. */
+final case class DeltaShareInputPartition(files: IndexedSeq[DeltaShareFile])
   extends InputPartition
 
 object DeltaShareInputPartition {
-  /** The partition reading one shared file. A presigned HTTP(S) URL is
-    * read through a `graftds` path carrying only an opaque file id
-    * (presigned URLs must not leak into paths or the UI; the reader
-    * registers id → URL executor-side); any other URL is read as is. */
-  def forFile(url: String, id: String, size: Long,
-      partitionValues: Map[String, String]): DeltaShareInputPartition =
-    if (url.startsWith("http://") || url.startsWith("https://")) {
-      val fid = PresignedUrlCache.fileId(id, url)
-      DeltaShareInputPartition(PresignedUrlFileSystem.encode(fid, size),
-        size, partitionValues, fileId = fid, url = url)
-    } else
-      DeltaShareInputPartition(url, size, partitionValues, fileId = "",
-        url = "")
+  /** `files`, in order, packed by Spark's rule for file sources
+    * (`FilePartition.maxSplitBytes` and `getFilePartitions`): a file
+    * costs its size plus `spark.sql.files.openCostInBytes`, and a
+    * partition closes when the next file would take it past
+    * `min(maxPartitionBytes, max(openCost, total cost / parallelism))`.
+    * No more files than cores, of like sizes, get a partition each.
+    * Listed order is kept because a pushed offset's per-file row skip
+    * was counted in it. */
+  def pack(spark: SparkSession, files: Seq[DeltaShareFile]): Array[InputPartition] = {
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(spark.sparkContext.defaultParallelism))
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, files.map(_.size + openCost).sum / parallelism))
+    val parts = Array.newBuilder[InputPartition]
+    var run = Vector.empty[DeltaShareFile]
+    var runBytes = 0L
+    files.foreach { f =>
+      if (run.nonEmpty && runBytes + f.size > maxSplit) {
+        parts += DeltaShareInputPartition(run)
+        run = Vector.empty
+        runBytes = 0L
+      }
+      run :+= f
+      runBytes += f.size + openCost
+    }
+    if (run.nonEmpty) parts += DeltaShareInputPartition(run)
+    parts.result()
+  }
+}
+
+/** Files a scan planned, as a driver-side metric: Spark's task and
+  * partition counts no longer say, since a partition packs files. */
+final class FilesPlannedMetric extends CustomSumMetric {
+  override def name(): String = FilesPlannedMetric.Name
+  override def description(): String = "files planned"
+}
+
+object FilesPlannedMetric {
+  val Name = "filesPlanned"
+  def value(n: Int): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = n.toLong
+  }
 }
 
 /** Spark's parquet reader closure for one shape of shared file, and
@@ -860,61 +929,65 @@ object ParquetRead {
   }
 }
 
-/** Reads each [[DeltaShareInputPartition]] with the [[ParquetRead]] it
-  * names: a batch scan has one read, plus a filter-free one for
-  * deletion-vector files when it pushes parquet filters; a change-feed
-  * scan has one for add/remove files and one for cdf files; a stream
-  * has one. */
+/** Reads each [[DeltaShareInputPartition]]'s files, each with the
+  * [[ParquetRead]] it names: a batch scan has one read, plus a
+  * filter-free one for deletion-vector files when it pushes parquet
+  * filters; a change-feed scan has one for add/remove files and one
+  * for cdf files; a stream has one. */
 final case class DeltaSharePartitionReaderFactory(
     reads: IndexedSeq[ParquetRead],
     refreshSpec: PresignedUrlCache.RefreshSpec) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[DeltaShareInputPartition]
+    // made on the task thread, whose FileSystem statistics Spark's
+    // task input metrics read
+    val counters = new PresignedReadCounters
+    new DeltaSharePartitionReader(
+      partition.asInstanceOf[DeltaShareInputPartition].files, counters,
+      f => PresignedReadCounters.counting(counters)(open(f)))
+  }
+
+  /** Opens `f` on the calling thread: Spark's parquet closure reads
+    * its footer, the first `hasNext` its first row group. */
+  private def open(f: DeltaShareFile): OpenFile = {
     // Executor-side id→URL registration: the graftds path carries only
     // an opaque file id (presigned URLs must not leak into paths/UI);
     // registerIfAbsent so a task retry never clobbers a URL an expiry
     // refresh already renewed.
-    if (p.fileId.nonEmpty)
-      PresignedUrlCache.register(p.fileId, p.url, refreshSpec)
-    val read = reads(p.read)
+    if (f.fileId.nonEmpty)
+      PresignedUrlCache.register(f.fileId, f.url, refreshSpec)
+    val read = reads(f.read)
     val pf = PartitionedFile(
       partitionValues =
-        PartitionValues.toInternalRow(p.partitionValues, read.partitionSchema),
-      filePath = SparkPath.fromUrlString(p.path),
+        PartitionValues.toInternalRow(f.partitionValues, read.partitionSchema),
+      filePath = SparkPath.fromUrlString(f.path),
       start = 0L,
-      length = p.size,
+      length = f.size,
       locations = Array.empty,
       modificationTime = 0L,
-      fileSize = p.size,
+      fileSize = f.size,
       otherConstantMetadataColumnValues = Map.empty)
-    // The file opens on the first next(), under this reader's
-    // counters: Spark's task input metrics count bytes read after
-    // createReader returns, and the parquet closure reads the footer
-    // as soon as it is called.
-    val counters = new PresignedReadCounters
-    lazy val rows: Iterator[InternalRow] =
-      PresignedReadCounters.counting(counters)(rowsOf(p, read.func(pf)))
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-      override def currentMetricsValues(): Array[CustomTaskMetric] =
-        counters.taskMetrics
+    val parquet = read.func(pf)
+    try {
+      val rows = rowsOf(f, parquet)
+      rows.hasNext
+      new OpenFile(rows, parquet)
+    } catch {
+      case e: Throwable =>
+        OpenFile.close(parquet)
+        throw e
     }
   }
 
-  /** The rows of `p`'s file that survive its deletion vector and
+  /** The rows of `f` that survive its deletion vector and
     * pushed-offset skip. */
-  private def rowsOf(p: DeltaShareInputPartition,
+  private def rowsOf(f: DeltaShareFile,
       raw: Iterator[InternalRow]): Iterator[InternalRow] = {
-    // deletion-vector application: the partition is one WHOLE file
-    // read in physical order with no parquet-level skipping, so the
-    // iterator position IS the file row index — a merge-walk against
-    // the decoded ascending positions drops exactly the deleted rows
-    val surviving: Iterator[InternalRow] = p.dv match {
+    // deletion-vector application: the file is read WHOLE in physical
+    // order with no parquet-level skipping, so the iterator position
+    // IS the file row index — a merge-walk against the decoded
+    // ascending positions drops exactly the deleted rows
+    val surviving: Iterator[InternalRow] = f.dv match {
       case None => raw
       case Some(dv) =>
         val deleted = graft.sources.DeletionVectors.positions(dv)
@@ -928,8 +1001,129 @@ final case class DeltaSharePartitionReaderFactory(
     }
     // pushed-offset boundary skip: leading surviving rows of THIS file
     // fall inside the global offset (whole-file skips never reach here
-    // — their partitions are not planned)
-    if (p.rowSkip == 0L) surviving
-    else surviving.drop(math.min(p.rowSkip, Int.MaxValue.toLong).toInt)
+    // — they are not planned)
+    if (f.rowSkip == 0L) surviving
+    else surviving.drop(math.min(f.rowSkip, Int.MaxValue.toLong).toInt)
   }
+}
+
+/** A shared file opened for reading: its surviving rows, and the
+  * parquet reader under them, which closes itself at its end and must
+  * be closed by a reader that stops before. */
+private[sources] final class OpenFile(
+    val rows: Iterator[InternalRow], parquet: Iterator[InternalRow]) {
+  def close(): Unit = OpenFile.close(parquet)
+}
+
+private[sources] object OpenFile {
+  def close(parquet: Iterator[InternalRow]): Unit = parquet match {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
+}
+
+/** Reads a partition's files in order on the task thread. Before the
+  * task consumes file k it sends file k+1 to [[ReadAhead]], so that
+  * file's footer, first row group and first batch are fetched while
+  * file k decodes. At most one open is in flight per reader; a
+  * one-file partition opens nothing ahead. An error from a file opened
+  * ahead is thrown as it was thrown, when the task reaches that file.
+  * `counters` must be made on the task thread. */
+private[sources] final class DeltaSharePartitionReader(
+    files: IndexedSeq[DeltaShareFile],
+    counters: PresignedReadCounters,
+    open: DeltaShareFile => OpenFile) extends PartitionReader[InternalRow] {
+
+  /** Files handed to the task so far. */
+  private var taken = 0
+  private var file: OpenFile = _
+  /** The open of file `taken`, when one is in flight or unclaimed. */
+  private var ahead: CompletableFuture[OpenFile] = _
+  private var row: InternalRow = _
+
+  override def next(): Boolean = {
+    while (file == null || !file.rows.hasNext) {
+      if (file != null) { file.close(); file = null }
+      if (taken == files.length) return false
+      file = take()
+    }
+    row = file.rows.next()
+    true
+  }
+
+  override def get(): InternalRow = row
+
+  /** File `taken`, opened ahead or (the first) here, with the file
+    * after it sent ahead. */
+  private def take(): OpenFile = {
+    val k = taken
+    taken += 1
+    val opened =
+      if (ahead == null) { sendAhead(k + 1); open(files(k)) }
+      else {
+        val opening = ahead
+        ahead = null
+        val f = ReadAhead.await(opening)
+        sendAhead(k + 1)
+        f
+      }
+    counters.claim()
+    opened
+  }
+
+  private def sendAhead(k: Int): Unit =
+    if (k < files.length) ahead = ReadAhead.run(open(files(k)))
+
+  override def close(): Unit = {
+    if (file != null) { file.close(); file = null }
+    settle()
+  }
+
+  /** Closes a file opened ahead that the task never reached (a LIMIT
+    * stopped it, or the task was killed) once its open ends, so no
+    * pool thread outlives its task's reader and what it read counts in
+    * this reader's metrics. Its error, if any, is dropped with it. */
+  private def settle(): Unit = if (ahead != null) {
+    val opening = ahead
+    ahead = null
+    try ReadAhead.await(opening).close()
+    catch {
+      case _: InterruptedException =>
+        // a killed task: close the file whenever its open ends
+        Thread.currentThread.interrupt()
+        opening.thenAccept(_.close())
+      case NonFatal(_) => ()
+    }
+    counters.claim()
+  }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = {
+    // Spark takes a reader's metrics for the last time in the task's
+    // completion listener, just before close(): settle the read-ahead
+    // first so what it read is in them
+    if (Option(TaskContext.get).exists(_.isCompleted)) settle()
+    counters.claim()
+    counters.taskMetrics
+  }
+}
+
+/** The JVM's pool that opens share files ahead of the tasks reading
+  * them. Threads are made on demand and end after a minute idle; each
+  * reader keeps at most one open in flight, so busy threads never
+  * outnumber running tasks. They are daemon threads named
+  * `deltashare-read-ahead`, so the pool never holds a JVM open. */
+private[sources] object ReadAhead {
+  private val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "deltashare-read-ahead")
+    t.setDaemon(true)
+    t
+  }
+
+  def run[T](body: => T): CompletableFuture[T] =
+    CompletableFuture.supplyAsync(() => body, pool)
+
+  /** The result of `f`, or the exception its body threw, unwrapped. */
+  def await[T](f: CompletableFuture[T]): T =
+    try f.get()
+    catch { case e: ExecutionException => throw e.getCause }
 }

@@ -330,6 +330,50 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a DV file and an offset-boundary file inside one packed " +
+      "partition: exact survivors and exact skip") {
+    import spark.implicits._
+    // eight 100-row files, k = 100 i until 100 (i + 1), each written in
+    // k order; offset 150 skips file 0 whole and the first 50 rows of
+    // file 1, file 2 carries a deletion vector, and the seven planned
+    // files pack in pairs on four cores: [1, 2], [3, 4], [5, 6], [7]
+    val files = (0 until 8).map { i =>
+      writeOne((100L * i until 100L * (i + 1)).map(k => (k, s"row$k"))
+        .toDF("k", "v"), s"dv_packed_$i")
+    }
+    val deleted = Seq(3L, 7L, 8L, 97L)
+    val data = DeletionVectors.serialize(deleted)
+    val dvUrl = files(2)._1
+    server.tables += ("dv_packed" -> ((
+      StructType.fromDDL("k BIGINT, v STRING").json, Seq.empty[String],
+      files.map { case (u, n) => (u, n, Map.empty[String, String]) })))
+    server.deltaFormatTables = Set("dv_packed")
+    server.fileDeletionVectors = Map(dvUrl ->
+      s"""{"storageType":"i","pathOrInlineDv":"${DeletionVectors.z85Encode(data)}","sizeInBytes":${data.length},"cardinality":${deleted.size}}""")
+    server.fileStats = files.map(_._1 -> """{"numRecords":100}""").toMap
+    try {
+      val df = sharedRead("dv_packed").offset(150).select("k")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("pushedOffset=150"), plan)
+      val parts = PlanWalk.collect(plan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions
+      }.flatten.map(_.asInstanceOf[v2.DeltaShareInputPartition].files)
+      assert(parts.map(_.size) == Seq(2, 2, 2, 1), parts)
+      assert(parts.head.map(_.rowSkip) == Seq(50L, 0L) &&
+        parts.head.map(_.dv.isDefined) == Seq(false, true), parts.head)
+      val got = df.as[Long].collect().sorted.toSeq
+      val expect = (150L until 800L)
+        .filterNot(k => deleted.map(_ + 200L).contains(k))
+      assert(got == expect)
+    } finally {
+      server.deltaFormatTables = Set.empty
+      server.fileDeletionVectors = Map.empty
+      server.fileStats = Map.empty
+      server.tables -= "dv_packed"
+    }
+  }
+
   test("descriptor positions: inline decode equals the authored set") {
     val positions = Seq(2L, 4L, 4096L, 70000L)
     val data = DeletionVectors.serialize(positions)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.scalatest.BeforeAndAfterAll
@@ -372,21 +374,28 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = readFrom(st, "orders2")
       // both files planned without a filter
       assert(df.rdd.getNumPartitions == 2)
+      assert(filesPlanned(df) == 2)
       // range predicate below the split point → only the lo file opens
       val lo = df.filter(col("o_orderkey") < mid)
       assert(lo.rdd.getNumPartitions == 1,
         s"expected 1 surviving file, got ${lo.rdd.getNumPartitions}")
+      assert(filesPlanned(lo) == 1)
       assert(lo.count() == loCount)
       // provably-empty range → zero files, zero rows, no error
       val none = df.filter(col("o_orderkey") < 0)
       assert(none.rdd.getNumPartitions == 0)
+      assert(filesPlanned(none) == 0)
       assert(none.collect().isEmpty)
       // IN entirely above every max → zero files
       val in = df.filter(col("o_orderkey").isin(99999999L))
       assert(in.rdd.getNumPartitions == 0)
+      assert(filesPlanned(in) == 0)
       // skipping is conservative: an unstated column prunes nothing
       val other = df.filter(col("o_custkey") === -1)
       assert(other.rdd.getNumPartitions == 2 && other.count() == 0)
+      assert(filesPlanned(other) == 2)
+      assert(other.queryExecution.executedPlan.toString
+        .contains("filesPlanned=2"))
     } finally st.stop()
   }
 
@@ -676,6 +685,32 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       n -> scans.map(_.metrics(n).value).sum).toMap
   }
 
+  /** The files the Delta Sharing scans in `df`'s executed plan
+    * planned, from their driver-side metric. */
+  private def filesPlanned(df: org.apache.spark.sql.DataFrame): Long =
+    PlanWalk.collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions
+        b.scan.reportDriverMetrics()
+          .filter(_.name == v2.FilesPlannedMetric.Name).map(_.value).sum
+    }.sum
+
+  /** A stub serving `src` as the table `t` of `n` files, `part-<i>`,
+    * with `broken` listed in place of part-1 when given. */
+  private def packedStub(t: String, src: java.nio.file.Path, n: Int,
+      broken: Option[String] = None): StubSharingServer = {
+    val st = new StubSharingServer(expectedToken = "tok").start()
+    val names = (0 until n).map(i => s"part-$i.parquet")
+    st.httpFiles = names.map(_ -> src).toMap
+    st.tables = Map(t -> ((spark.read.parquet(src.toString).schema.json,
+      Seq.empty, names.zipWithIndex.map { case (name, i) =>
+        val served = if (i == 1) broken.getOrElse(name) else name
+        (s"http://127.0.0.1:${st.port}/files/$served", Files.size(src),
+          Map.empty[String, String])
+      })))
+    st
+  }
+
   /** A graftds stream over `url`, registered under a fresh file id. */
   private def openShared(url: String, size: Long): org.apache.hadoop.fs.FSDataInputStream = {
     val id = s"spec-${java.util.UUID.randomUUID}"
@@ -838,6 +873,148 @@ class DeltaShareConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
         "presignedRefreshes" -> 0L))
       assert(bytesRead.get == served)
     } finally st.stop()
+  }
+
+  /** Task input bytes summed over the tasks `body` runs. */
+  private def taskInputBytes(body: => Unit): Long = {
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftTestBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    bytesRead.get
+  }
+
+  private def batchScans(df: org.apache.spark.sql.DataFrame) =
+    PlanWalk.collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+
+  test("packed partitions: scan custom metrics and task input bytes " +
+      "equal the stub's /files log") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = packedStub("lineitem", src, 12)
+    try {
+      val df = readFrom(st, "lineitem").select("l_orderkey", "l_extendedprice")
+      val rows = spark.read.parquet(src.toString).count()
+      val bytesRead = taskInputBytes {
+        assert(df.collect().length == 12 * rows)
+      }
+      val scans = batchScans(df)
+      val partitions = scans.map(_.inputPartitions.size).sum
+      assert(partitions > 1 && partitions < 12,
+        s"12 small files on 4 cores should pack: $partitions partitions")
+      assert(scans.map(_.metrics(v2.FilesPlannedMetric.Name).value).sum == 12)
+      val log = st.filesLog
+      val served = log.map(_.bytes).sum
+      // every file was read, each by one task
+      assert(log.map(_.name).distinct.size == 12)
+      assert(scanMetrics(df) == Map(
+        "presignedGets" -> log.size.toLong,
+        "presignedBytes" -> served,
+        "presignedRetries" -> 0L,
+        "presignedRefreshes" -> 0L))
+      // bytes the read-ahead threads fetched are credited to the tasks
+      assert(bytesRead == served)
+    } finally st.stop()
+  }
+
+  test("a LIMIT that stops inside a packed partition returns exact rows " +
+      "and counts the file opened ahead") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = packedStub("lineitem", src, 12)
+    try {
+      val df = readFrom(st, "lineitem").select("l_orderkey").limit(5)
+      val keys = spark.read.parquet(src.toString).select("l_orderkey")
+        .collect().map(_.getLong(0)).toSet
+      var got: Array[org.apache.spark.sql.Row] = null
+      val bytesRead = taskInputBytes { got = df.collect() }
+      assert(got.length == 5 && got.forall(r => keys.contains(r.getLong(0))))
+      // the first partition's first file was read and its second
+      // opened ahead; nothing further was opened
+      val log = st.filesLog
+      assert(log.map(_.name).distinct.sorted ==
+        Seq("part-0.parquet", "part-1.parquet"), log)
+      // the abandoned open is settled before the task's last metrics
+      assert(scanMetrics(df) == Map(
+        "presignedGets" -> log.size.toLong,
+        "presignedBytes" -> log.map(_.bytes).sum,
+        "presignedRetries" -> 0L,
+        "presignedRefreshes" -> 0L))
+      assert(bytesRead == log.map(_.bytes).sum)
+    } finally st.stop()
+  }
+
+  test("a missing file in position 2 of a packed partition surfaces " +
+      "the same HTTP failure") {
+    val src = Paths.get("/root/testdata/sf0.001/lineitem.parquet")
+    val st = packedStub("gone", src, 8, broken = Some("nope.parquet"))
+    try {
+      val df = readFrom(st, "gone")
+      val first = batchScans(df).flatMap(_.inputPartitions).head
+        .asInstanceOf[v2.DeltaShareInputPartition].files
+      assert(first.size >= 2 && first(1).url.endsWith("/nope.parquet"),
+        first.map(_.url))
+      val e = intercept[Exception](df.count())
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: causes(t.getCause)
+      val messages = causes(e).flatMap(t => Option(t.getMessage))
+      assert(messages.exists(m => m.contains("HTTP 404") ||
+        m.contains("nope.parquet")), s"unhelpful error: $messages")
+      assert(!causes(e).exists(
+        _.isInstanceOf[java.util.concurrent.ExecutionException]), messages)
+      // a 404 is definitive: one GET, no retries
+      assert(st.filesLog.count(_.name == "nope.parquet") == 1, st.filesLog)
+    } finally st.stop()
+  }
+
+  test("read-ahead: one open in flight on a daemon thread, the file " +
+      "opened ahead closed when the reader stops early, errors unwrapped") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    final class Parquet(rows: Int) extends Iterator[InternalRow]
+        with java.io.Closeable {
+      @volatile var closed = false
+      private var i = 0
+      def hasNext: Boolean = i < rows
+      def next(): InternalRow = { i += 1; InternalRow(i) }
+      def close(): Unit = closed = true
+    }
+    val files = (0 until 4).map(i => v2.DeltaShareFile(s"f$i", 1L,
+      Map.empty, fileId = "", url = ""))
+    def reader(fail: Set[String]) = {
+      val opened = new java.util.concurrent.ConcurrentHashMap[String, (Thread, Parquet)]
+      val r = new v2.DeltaSharePartitionReader(files, new PresignedReadCounters,
+        f => {
+          if (fail(f.path)) throw new java.io.IOException(s"HTTP 404 ${f.path}")
+          val p = new Parquet(3)
+          opened.put(f.path, (Thread.currentThread, p))
+          new v2.OpenFile(p, p)
+        })
+      (r, opened)
+    }
+    // stop inside the first file: the second was opened ahead on a
+    // daemon pool thread, the third not at all; close() closes both
+    val (r, opened) = reader(Set.empty)
+    assert(r.next())
+    r.close()
+    assert(opened.keySet.asScala == Set("f0", "f1"))
+    val (ahead, p1) = opened.get("f1")
+    assert(ahead.getName == "deltashare-read-ahead" && ahead.isDaemon)
+    assert(opened.get("f0")._2.closed && p1.closed)
+    // an error in file 2 surfaces as thrown, once file 1's rows are out
+    val (bad, _) = reader(Set("f1"))
+    assert((1 to 3).forall(_ => bad.next()))
+    val e = intercept[java.io.IOException](bad.next())
+    assert(e.getMessage == "HTTP 404 f1")
+    bad.close()
   }
 }
 
